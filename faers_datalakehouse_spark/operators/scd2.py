@@ -25,14 +25,39 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.transforms import row_hash, surrogate_key
 
 HIGH_DATE = "9999-12-31"
 
 SCD2_META_COLS = ("dim_key", "row_hash", "effective_date", "end_date", "is_current")
+
+
+def one_per_key(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[Column | str] = (),
+) -> DataFrame:
+    """Deterministic one-row-per-key pick: the first row per ``keys`` under
+    ``order_cols``, ties broken by a content hash of the whole row.
+
+    ``dropDuplicates`` keeps an arbitrary, partition-order-dependent row
+    when attributes differ across duplicates, which makes a dimension flap
+    run-to-run. The hash tiebreak makes the winner a function of the DATA
+    (rows identical in every column are interchangeable), so ``order_cols``
+    need not cover every attribute for the pick to stay deterministic.
+    """
+    w = Window.partitionBy(*keys).orderBy(
+        *order_cols, F.md5(F.to_json(F.struct(*df.columns))).desc()
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def add_scd2_metadata(
@@ -42,7 +67,8 @@ def add_scd2_metadata(
     effective_date: str,
     key_extra: str | None = None,
 ) -> DataFrame:
-    """Stamp SCD2 metadata on a source frame (reference ``scd_type2.py:19-89``).
+    """Stamp SCD2 metadata on a source frame (reference ``scd_type2.py:19-89``);
+    one projection, attributes first, then ``SCD2_META_COLS``.
 
     ``key_extra`` is an optional extra surrogate-key component. The default
     key md5(business_keys + effective_date) matches the reference, but it
@@ -54,18 +80,16 @@ def add_scd2_metadata(
     reference-identical keys.
     """
     eff = F.to_date(F.lit(effective_date))
-    key_parts = [F.col("effective_date").cast("string")]
+    key_parts = [eff.cast("string")]
     if key_extra is not None:
         key_parts.append(F.lit(key_extra))
-    return (
-        df.withColumn("row_hash", row_hash(list(tracked_cols)))
-        .withColumn("effective_date", eff)
-        .withColumn("end_date", F.lit(None).cast("date"))
-        .withColumn("is_current", F.lit(True))
-        .withColumn(
-            "dim_key",
-            surrogate_key(list(business_keys), *key_parts),
-        )
+    return df.select(
+        *[c for c in df.columns if c not in SCD2_META_COLS],
+        surrogate_key(list(business_keys), *key_parts).alias("dim_key"),
+        row_hash(list(tracked_cols)).alias("row_hash"),
+        eff.alias("effective_date"),
+        F.lit(None).cast("date").alias("end_date"),
+        F.lit(True).alias("is_current"),
     )
 
 
@@ -75,32 +99,26 @@ def scd2_initial_load(
     tracked_cols: Sequence[str],
     effective_date: str,
     key_extra: str | None = None,
+    order_cols: Sequence[Column | str] = (),
 ) -> DataFrame:
-    """First load: every (deduplicated) source row becomes a current version.
+    """First load: one source row per key (``one_per_key`` under
+    ``order_cols``) becomes a current version. An order column named by
+    string that is neither a business key nor tracked is order-only: it
+    ranks the pick and is dropped from the dimension.
 
     Column order is canonical (attributes, then SCD metadata) and identical
     to ``scd2_merge`` output, so repeated merges are stable frames.
     """
-    from pyspark.sql.window import Window as _W
-
-    attr_cols = list(source.columns)
-    # content-hash tiebreak, like scd2_merge: the surviving row per key
-    # is a function of the data, not of partition order
-    _w = _W.partitionBy(*business_keys).orderBy(
-        F.md5(F.to_json(F.struct(*source.columns))).desc()
-    )
-    one_per_key = (
-        source.withColumn("_rn", F.row_number().over(_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    keep = {*business_keys, *tracked_cols}
+    order_only = {c for c in order_cols if isinstance(c, str) and c not in keep}
+    picked = one_per_key(source, business_keys, order_cols)
     return add_scd2_metadata(
-        one_per_key,
+        picked.select(*[c for c in source.columns if c not in order_only]),
         business_keys,
         tracked_cols,
         effective_date,
         key_extra=key_extra,
-    ).select(*attr_cols, *SCD2_META_COLS)
+    )
 
 
 def scd2_merge(
@@ -110,6 +128,7 @@ def scd2_merge(
     tracked_cols: Sequence[str],
     effective_date: str,
     key_extra: str | None = None,
+    order_cols: Sequence[Column | str] = (),
 ) -> DataFrame:
     """Apply one SCD2 merge; returns the full new dimension state.
 
@@ -122,30 +141,20 @@ def scd2_merge(
     - target rows absent from the source are left untouched (the reference
       never closes missing keys);
     - historical (non-current) target rows bypass the join entirely.
+
+    The source is reduced to one row per key by ``one_per_key`` under the
+    caller's ``order_cols``, the only dedupe on the path: callers pass their
+    tie-break order instead of pre-reducing. Source columns the target does
+    not have (order-only columns) are dropped after the pick.
     """
     keys = list(business_keys)
     attr_cols = [c for c in target.columns if c not in SCD2_META_COLS]
+    eff = F.to_date(F.lit(effective_date))
 
-    # deterministic one-row-per-key reduction: dropDuplicates keeps an
-    # arbitrary partition-order-dependent survivor; ordering by a content
-    # hash makes the winner a function of the DATA (rows identical in
-    # every column are interchangeable), preserving run-to-run and
-    # replay determinism. Streams with a real event-time ordering should
-    # pre-reduce via streaming.scd2.latest_per_key instead.
-    from pyspark.sql.window import Window as _W
-
-    _w = _W.partitionBy(*keys).orderBy(
-        F.md5(F.to_json(F.struct(*source.columns))).desc()
-    )
-    one_per_key = (
-        source.withColumn("_rn", F.row_number().over(_w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
     src = add_scd2_metadata(
-        one_per_key, keys, tracked_cols, effective_date,
-        key_extra=key_extra,
-    ).select(*attr_cols, *SCD2_META_COLS)
+        one_per_key(source, keys, order_cols).select(*attr_cols),
+        keys, tracked_cols, effective_date, key_extra=key_extra,
+    )
 
     current = target.filter(F.col("is_current"))
     history = target.filter(~F.col("is_current"))
@@ -164,26 +173,19 @@ def scd2_merge(
         t_present & s_present & (F.col("t.row_hash") != F.col("s.row_hash"))
     )
 
-    def _side(side: str) -> list[F.Column]:
-        return [F.col(f"{side}.{c}").alias(c) for c in [*attr_cols, *SCD2_META_COLS]]
+    def _side(side: str, cols: Sequence[str]) -> list[Column]:
+        return [F.col(f"{side}.{c}").alias(c) for c in cols]
 
     # Target-side survivors: unchanged current rows as-is, changed rows closed.
-    kept = (
-        joined.filter(t_present)
-        .select(*_side("t"), changed.alias("_changed"))
-        .withColumn(
-            "end_date",
-            F.when(F.col("_changed"), F.to_date(F.lit(effective_date))).otherwise(
-                F.col("end_date")
-            ),
-        )
-        .withColumn("is_current", F.col("is_current") & ~F.col("_changed"))
-        .drop("_changed")
+    kept = joined.filter(t_present).select(
+        *_side("t", [*attr_cols, "dim_key", "row_hash", "effective_date"]),
+        F.when(changed, eff).otherwise(F.col("t.end_date")).alias("end_date"),
+        (F.col("t.is_current") & ~changed).alias("is_current"),
     )
     # Source-side inserts: new business keys + new versions of changed keys.
     inserted = joined.filter(
         (~t_present & s_present) | changed
-    ).select(*_side("s"))
+    ).select(*_side("s", [*attr_cols, *SCD2_META_COLS]))
 
     return history.select(*[*attr_cols, *SCD2_META_COLS]).unionByName(
         kept
@@ -225,7 +227,7 @@ def scd2_versioned_apply(
     The cleanest writer shape: the merge reads the current snapshot's
     files and the commit stages brand-new files, so there is no
     read-overwrite conflict — no staging table, no ``localCheckpoint``
-    (compare the managed-table dance in ``plans.medallion._scd2_dim_write``)
+    (compare the stage-then-rename swap in ``scd2_table_apply``)
     — and the swap is atomic: readers see the pre- or post-merge dimension,
     never a mix. Every merge is also a retained snapshot, so
     ``table.read(spark, version=N)`` time-travels the dimension state as
@@ -257,37 +259,49 @@ def scd2_table_apply(
     tracked_cols: Sequence[str],
     effective_date: str,
     key_extra: str | None = None,
+    order_cols: Sequence[Column | str] = (),
 ) -> None:
     """Initial-load or merge ``source`` into the managed table ``table``.
 
-    The merge plan reads ``table`` while the write overwrites it, so the
-    merged frame is materialized first by staging it as a real table
-    (write → read back → overwrite target → drop stage): durable storage
-    with a recompute path, safe on a real cluster. ``localCheckpoint``
-    was rejected for this shape — blocks live on executor local disk with
-    lineage truncated, so one executor loss mid-overwrite loses both old
-    and new state. Delta/Iceberg replace the dance with an atomic MERGE;
-    ``scd2_versioned_apply`` gets atomicity from the manifest log instead.
+    ``order_cols`` is the caller's tie-break order for the one dedupe the
+    merge runs (see ``one_per_key``); pass it instead of pre-reducing.
+
+    The merge plan reads ``table``, so its result cannot overwrite
+    ``table`` directly. It is written once, to ``<table>__stage``, a real
+    table: durable storage with a recompute path, safe on a real cluster.
+    Then ``table`` is dropped and the stage renamed into its place. For a
+    managed table the rename is a catalog update plus a directory rename;
+    on an object store the rename copies the files, no worse than the
+    second write it replaces. ``localCheckpoint`` was rejected for this
+    shape: its blocks live on executor local disk with lineage truncated,
+    so one executor loss mid-swap loses both old and new state.
+
+    Crash recovery: a run that dies between the drop and the rename leaves
+    only the stage, which holds the complete merged state. The next apply
+    finds ``table`` missing and the stage present, renames the stage into
+    place and then merges, so the dimension's history is never lost to
+    the initial-load path. Delta/Iceberg replace the swap with an atomic
+    MERGE; ``scd2_versioned_apply`` gets atomicity from the manifest log.
     Shared by the batch dims (plans.medallion) and the streaming sink
     (streaming.scd2) — one code path, one set of semantics.
     """
+    stage = f"{table}__stage"
     if not spark.catalog.tableExists(table):
-        scd2_initial_load(
-            source, business_keys, tracked_cols, effective_date,
-            key_extra=key_extra,
-        ).write.mode("overwrite").option("overwriteSchema", "true").saveAsTable(
-            table
-        )
-        return
+        if not spark.catalog.tableExists(stage):
+            scd2_initial_load(
+                source, business_keys, tracked_cols, effective_date,
+                key_extra=key_extra, order_cols=order_cols,
+            ).write.mode("overwrite").option(
+                "overwriteSchema", "true"
+            ).saveAsTable(table)
+            return
+        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
     dim = scd2_merge(
         spark.table(table), source, business_keys, tracked_cols, effective_date,
-        key_extra=key_extra,
+        key_extra=key_extra, order_cols=order_cols,
     )
-    stage = f"{table}__stage"
     dim.write.mode("overwrite").option("overwriteSchema", "true").saveAsTable(
         stage
     )
-    spark.table(stage).write.mode("overwrite").option(
-        "overwriteSchema", "true"
-    ).saveAsTable(table)
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    spark.sql(f"DROP TABLE {table}")
+    spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")

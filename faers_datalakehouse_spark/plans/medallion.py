@@ -51,7 +51,7 @@ from ..functions.transforms import (
     standardize_date,
     standardize_name,
 )
-from ..operators.scd2 import scd2_table_apply
+from ..operators.scd2 import one_per_key, scd2_table_apply
 from ..sources.catalog import ensure_schemas, read_latest_partition
 from ..sources.ingest import add_ingestion_metadata, all_string_schema, read_csv_enforced
 from .date_dim import build_date_dim
@@ -239,57 +239,18 @@ DIM_DRUG_KEYS = ["drug_name"]
 DIM_DRUG_TRACKED = ["role_desc", "route_category"]
 
 
-def _pick_one_per_key(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
-    """Deterministic one-row-per-key pick: dropDuplicates(keys) keeps an
-    arbitrary row when tracked columns differ across duplicates, making a
-    dimension flap run-to-run; rank by explicit attribute order instead."""
-    from pyspark.sql import Window
-
-    # final tiebreak: a content hash of the whole row — order_cols need
-    # not cover every tracked attribute for the pick to stay a pure
-    # function of the data (ties on the explicit ordering used to flap
-    # run-to-run and churn spurious SCD2 versions)
-    w = Window.partitionBy(*keys).orderBy(
-        *order_cols, F.md5(F.to_json(F.struct(*df.columns))).desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def _scd2_dim_write(
-    spark: SparkSession,
-    table: str,
-    src: DataFrame,
-    keys: list[str],
-    tracked: list[str],
-    effective_date: str,
-) -> None:
-    """Initial-load or merge ``src`` into SCD2 dimension ``table``.
-
-    One generic engine drives all eight dimensions (the reference repeats
-    ``apply_scd_type2_merge`` per dim, ``src/utils/scd_type2.py:111-226``).
-
-    Delegates to ``operators.scd2.scd2_table_apply`` (the staging-table
-    materialization dance, shared with the streaming sink — see its
-    docstring for why ``localCheckpoint`` was rejected here).
-    """
-    scd2_table_apply(spark, table, src, keys, tracked, effective_date)
-
-
 def gold_dim_drug(spark: SparkSession, effective_date: str) -> None:
-    """SCD2-maintained drug dimension off silver.drug_details."""
-    src = _pick_one_per_key(
-        spark.table("silver.drug_details").select(
-            "drug_name", "role_desc", "route_category", "drug_seq_num"
-        ),
-        ["drug_name"],
-        ["drug_seq_num", "role_desc", "route_category"],
-    ).drop("drug_seq_num")
-    _scd2_dim_write(
-        spark, "gold.dim_drug", src, DIM_DRUG_KEYS, DIM_DRUG_TRACKED, effective_date
+    """SCD2-maintained drug dimension off silver.drug_details.
+
+    Every SCD2 dim hands its tie-break order to ``scd2_table_apply``, whose
+    merge runs the one dedupe (``operators.scd2.one_per_key``); the
+    order-only ``drug_seq_num`` is dropped after that pick."""
+    src = spark.table("silver.drug_details").select(
+        "drug_name", "role_desc", "route_category", "drug_seq_num"
+    )
+    scd2_table_apply(
+        spark, "gold.dim_drug", src, DIM_DRUG_KEYS, DIM_DRUG_TRACKED,
+        effective_date, order_cols=["drug_seq_num", "role_desc", "route_category"],
     )
 
 
@@ -308,19 +269,17 @@ def gold_dim_patient(spark: SparkSession, effective_date: str) -> None:
         (F.col("age_years") >= 65).alias("is_elderly"),
         F.col("weight_kg").isNotNull().alias("has_weight_data"),
     )
-    src = _pick_one_per_key(
-        demo, ["primary_id", "case_id"], ["age_years", "sex_desc", "weight_kg"]
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_patient",
-        src,
+        demo,
         ["primary_id", "case_id"],
         [
             "age_years", "age_group", "sex_desc", "weight_kg",
             "reporter_region", "is_pediatric", "is_elderly", "has_weight_data",
         ],
         effective_date,
+        order_cols=["age_years", "sex_desc", "weight_kg"],
     )
 
 
@@ -345,21 +304,17 @@ def gold_dim_reaction(spark: SparkSession, effective_date: str) -> None:
         )
         .otherwise("Routine Monitoring"),
     )
-    src = _pick_one_per_key(
-        rx,
-        ["primary_id", "case_id", "reaction_pt"],
-        ["reaction_category", "drug_action_code"],
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_reaction",
-        src,
+        rx,
         ["primary_id", "case_id", "reaction_pt"],
         [
             "reaction_category", "reaction_severity", "drug_action_code",
             "is_fatal_reaction", "regulatory_flag",
         ],
         effective_date,
+        order_cols=["reaction_category", "drug_action_code"],
     )
 
 
@@ -394,13 +349,10 @@ def gold_dim_outcome(spark: SparkSession, effective_date: str) -> None:
         .when(F.col("outcome_severity").between(2, 3), "Low")
         .otherwise("Minimal"),
     )
-    src = _pick_one_per_key(
-        oc, ["primary_id", "case_id", "outcome_code"], ["outcome_severity"]
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_outcome",
-        src,
+        oc,
         ["primary_id", "case_id", "outcome_code"],
         [
             "outcome_desc", "outcome_severity", "is_fatal_outcome",
@@ -408,6 +360,7 @@ def gold_dim_outcome(spark: SparkSession, effective_date: str) -> None:
             "reporting_requirement", "severity_tier",
         ],
         effective_date,
+        order_cols=["outcome_severity"],
     )
 
 
@@ -439,19 +392,17 @@ def gold_dim_indication(spark: SparkSession, effective_date: str) -> None:
         )
         .otherwise("Standard Review"),
     )
-    src = _pick_one_per_key(
-        ind, ["primary_id", "case_id", "indication_pt"], ["therapeutic_area"]
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_indication",
-        src,
+        ind,
         ["primary_id", "case_id", "indication_pt"],
         [
             "therapeutic_area", "indication_severity", "is_oncology_indication",
             "is_psychiatric_condition", "severity_score", "review_pathway",
         ],
         effective_date,
+        order_cols=["therapeutic_area"],
     )
 
 
@@ -484,15 +435,10 @@ def gold_dim_therapy(spark: SparkSession, effective_date: str) -> None:
         )
         .otherwise("Low"),
     )
-    src = _pick_one_per_key(
-        th,
-        ["primary_id", "case_id", "drug_seq_num"],
-        ["therapy_start_date", "therapy_end_date"],
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_therapy",
-        src,
+        th,
         ["primary_id", "case_id", "drug_seq_num"],
         [
             "therapy_start_date", "therapy_end_date",
@@ -500,6 +446,7 @@ def gold_dim_therapy(spark: SparkSession, effective_date: str) -> None:
             "therapy_status", "duration_category", "data_completeness",
         ],
         effective_date,
+        order_cols=["therapy_start_date", "therapy_end_date"],
     )
 
 
@@ -526,13 +473,10 @@ def gold_dim_report(spark: SparkSession, effective_date: str) -> None:
         )
         .otherwise("Tier 3 - Low Reliability"),
     )
-    src = _pick_one_per_key(
-        rp, ["primary_id", "case_id"], ["reporter_reliability_score"]
-    )
-    _scd2_dim_write(
+    scd2_table_apply(
         spark,
         "gold.dim_report",
-        src,
+        rp,
         ["primary_id", "case_id"],
         [
             "reporter_source_code", "reporter_source_desc", "reporter_category",
@@ -540,6 +484,7 @@ def gold_dim_report(spark: SparkSession, effective_date: str) -> None:
             "report_quality_tier",
         ],
         effective_date,
+        order_cols=["reporter_reliability_score"],
     )
 
 
@@ -561,7 +506,7 @@ def gold_fact_adverse_events(spark: SparkSession) -> None:
     drugs = spark.table("silver.drug_details")
     reactions = spark.table("silver.reactions")
     outcomes = spark.table("silver.outcomes")
-    indications = _pick_one_per_key(
+    indications = one_per_key(
         spark.table("silver.indications").withColumnRenamed(
             "indi_drug_seq_num", "drug_seq_num"
         ),
@@ -571,7 +516,7 @@ def gold_fact_adverse_events(spark: SparkSession) -> None:
         "primary_id", "case_id", "drug_seq_num", "indication_pt",
         "therapeutic_area",
     )
-    therapy = _pick_one_per_key(
+    therapy = one_per_key(
         spark.table("silver.therapy_dates"),
         ["primary_id", "case_id", "drug_seq_num"],
         ["therapy_start_date", "therapy_end_date"],
@@ -580,7 +525,7 @@ def gold_fact_adverse_events(spark: SparkSession) -> None:
         "therapy_duration_days_observed", "reported_duration_days",
         "therapy_status",
     )
-    reports = _pick_one_per_key(
+    reports = one_per_key(
         spark.table("silver.reports"),
         ["primary_id", "case_id"],
         ["reporter_reliability_score"],
@@ -738,8 +683,8 @@ SCD2_DIM_JOBS = (
 
 #: Declarative mirror of the reference's 16-task Jobs DAG
 #: (reference ``resources/jobs/faers_pipeline.yml:24-203``):
-#: 7 bronze ∥ → 7 silver (each on its own bronze) → dim_date ∥ dims →
-#: 7 SCD2 dims (each on its own silver) → fact (on all silver + dim_date).
+#: 7 bronze ∥ → 7 silver (each on its own bronze) →
+#: 7 SCD2 dims (each on its own silver) ∥ dim_date → fact (on all silver + dim_date).
 _DIM_SILVER_DEP = {
     "dim_drug": "drug_details",
     "dim_patient": "demographics",
@@ -759,9 +704,11 @@ def faers_pipeline_config(
     ``sources`` maps table name → raw CSV path (any subset of
     ``BRONZE_COLUMNS``); stages downstream of a missing source are simply
     not generated — including the fact, which reads all seven silver
-    tables and is therefore only scheduled on a full-source run. At run
-    time a failed ingest skips only its own silver/dim branch (per-stage
-    failure isolation, reference parity).
+    tables and is therefore only scheduled on a full-source run. The
+    constant ``dim_date`` has no other reader, so it is scheduled with the
+    fact: a partial-source refresh never rebuilds it. At run time a failed
+    ingest skips only its own silver/dim branch (per-stage failure
+    isolation, reference parity).
 
     ``optimize=True`` adds a post-write compaction+ANALYZE leaf task per
     silver table (the reference runs ``OPTIMIZE`` after every silver/dim
@@ -793,7 +740,6 @@ def faers_pipeline_config(
                     "depends_on": [f"silver_{name}"],
                 }
             )
-    cfg.append({"task": "dim_date", "fn": "gold_dim_date", "depends_on": []})
     for dim, silver in _DIM_SILVER_DEP.items():
         if silver in sources:
             cfg.append(
@@ -804,9 +750,10 @@ def faers_pipeline_config(
                 }
             )
     # gold_fact_adverse_events scans all seven silver tables — schedule it
-    # only when every source is present, matching the docstring's promise
-    # that partial-source runs succeed with just their own branches.
+    # (and dim_date, its only input besides silver) only when every source
+    # is present, so partial-source runs do just their own branches.
     if set(sources) >= set(BRONZE_COLUMNS):
+        cfg.append({"task": "dim_date", "fn": "gold_dim_date", "depends_on": []})
         cfg.append(
             {
                 "task": "fact_adverse_events",

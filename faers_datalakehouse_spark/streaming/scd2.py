@@ -25,11 +25,10 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..operators.scd2 import scd2_table_apply
+from ..operators.scd2 import one_per_key, scd2_table_apply
 
 
 def latest_per_key(
@@ -51,15 +50,11 @@ def latest_per_key(
     deterministic function of the DATA, never of partitioning or replay
     order. Rows identical in every column are genuinely interchangeable.
     """
-    w = Window.partitionBy(*business_keys).orderBy(
-        F.col(order_col).desc_nulls_last(),
-        F.md5(F.to_json(F.struct(*batch.columns))).desc(),
-    )
-    return (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return one_per_key(batch, business_keys, _latest_first(order_col))
+
+
+def _latest_first(order_col: str) -> list[Column]:
+    return [F.col(order_col).desc_nulls_last()]
 
 
 def apply_scd2_batch(
@@ -79,10 +74,11 @@ def apply_scd2_batch(
     mid-overwrite unrecoverable).
 
     ``order_col``: event-time/offset column used to deterministically keep
-    the latest row per key within the batch. Without it, the one-row-per-
-    key-per-batch precondition is ASSERTED (one extra aggregation job per
-    batch) — never silently resolved by an arbitrary ``dropDuplicates``
-    winner.
+    the latest row per key within the batch (``latest_per_key``'s order,
+    handed to the merge's own dedupe so the batch is windowed once).
+    Without it, the one-row-per-key-per-batch precondition is ASSERTED
+    (one extra aggregation job per batch) — never silently resolved by an
+    arbitrary ``dropDuplicates`` winner.
 
     ``key_extra``: per-batch surrogate-key token (the sink passes the
     micro-batch id) so two changes to the same key in different batches
@@ -90,8 +86,9 @@ def apply_scd2_batch(
     """
     if batch.isEmpty():
         return
+    order_cols: list[Column] = []
     if order_col is not None:
-        batch = latest_per_key(batch, business_keys, order_col)
+        order_cols = _latest_first(order_col)
     else:
         dup = (
             batch.groupBy(*business_keys)
@@ -114,6 +111,7 @@ def apply_scd2_batch(
         tracked_cols,
         effective_date,
         key_extra=key_extra,
+        order_cols=order_cols,
     )
 
 

@@ -126,11 +126,17 @@ def test_faers_pipeline_config_shape():
     dag_from_config(cfg, reg, ingest_ts="t", processed_ts="t", effective_date="d")
 
     # a partial-source run schedules only its own branches — the fact
-    # reads all seven silver tables, so it must NOT be generated
+    # reads all seven silver tables, so it must NOT be generated, and
+    # neither is dim_date, which only the fact reads
     partial = faers_pipeline_config({"demographics": "/tmp/demo.csv"})
     names = {r["task"] for r in partial}
-    assert names == {"bronze_demographics", "silver_demographics",
-                     "dim_date", "dim_patient"}
+    assert names == {"bronze_demographics", "silver_demographics", "dim_patient"}
+    # the quarterly refresh: one extract, its silver table and dim_drug
+    refresh = faers_pipeline_config({"drug_details": "/tmp/drug.csv"})
+    assert {r["task"] for r in refresh} == {
+        "bronze_drug_details", "silver_drug_details", "dim_drug"
+    }
+    dag_from_config(refresh, reg, ingest_ts="t", processed_ts="t", effective_date="d")
 
     # optimize=True adds one post-write compaction leaf per silver table
     cfg_opt = faers_pipeline_config(sources, optimize=True)

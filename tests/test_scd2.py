@@ -10,9 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.scd2 import (
+    one_per_key,
     scd2_current_view,
     scd2_initial_load,
     scd2_merge,
+    scd2_table_apply,
 )
 
 BK = ["customer_id"]
@@ -129,3 +131,58 @@ def test_null_business_key_survives_merge(spark):
         ("Suspended", True),
     }
     assert merged.count() == 3
+
+
+def _rows(df):
+    return sorted(
+        (r["customer_id"], r["status"], str(r["effective_date"]), str(r["end_date"]),
+         r["is_current"])
+        for r in df.collect()
+    )
+
+
+def test_merge_dedupes_by_caller_order(spark, base):
+    """Duplicate keys that differ only in the order columns: the merge's
+    one dedupe keeps the row ``one_per_key`` keeps under the same order,
+    so pre-reducing the source changes nothing."""
+    dim = scd2_initial_load(base, BK, TRACKED, "2024-01-01")
+    dup = spark.createDataFrame(
+        [("C001", "John Doe", "Closed", 2), ("C001", "John Doe", "Suspended", 1)],
+        "customer_id string, customer_name string, status string, seq int",
+    )
+    for order, winner in ((["seq"], "Suspended"), ([F.col("seq").desc()], "Closed"),
+                          (["status"], "Closed"), ([F.col("status").desc()], "Suspended")):
+        merged = scd2_merge(dim, dup, BK, TRACKED, "2024-06-01", order_cols=order)
+        assert "seq" not in merged.columns
+        cur = merged.filter("is_current AND customer_id = 'C001'").collect()
+        assert [r["status"] for r in cur] == [winner], order
+        picked = one_per_key(dup, BK, order).drop("seq")
+        assert _rows(merged) == _rows(
+            scd2_merge(dim, picked, BK, TRACKED, "2024-06-01")
+        )
+    # an order-only column ranks the initial load's pick and is dropped too
+    first = scd2_initial_load(dup, BK, TRACKED, "2024-01-01", order_cols=["seq"])
+    assert [r["status"] for r in first.collect()] == ["Suspended"]
+    assert "seq" not in first.columns
+
+
+def test_table_apply_swaps_stage_and_recovers_interrupted_swap(spark, base):
+    t = "scd2_apply_swap"
+    stage = f"{t}__stage"
+    for name in (t, stage):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    changed = spark.createDataFrame(
+        [("C001", "John Doe", "Suspended")], ["customer_id", "customer_name", "status"]
+    )
+    scd2_table_apply(spark, t, base, BK, TRACKED, "2024-01-01")
+    scd2_table_apply(spark, t, changed, BK, TRACKED, "2024-06-01")
+    assert not spark.catalog.tableExists(stage)
+    before = _rows(spark.table(t))
+    assert ("C001", "Active", "2024-01-01", "2024-06-01", False) in before
+
+    # a crash after the target's drop and before the rename leaves only
+    # the stage; the next apply must put it back, not initial-load
+    spark.sql(f"ALTER TABLE {t} RENAME TO {stage}")
+    scd2_table_apply(spark, t, changed, BK, TRACKED, "2024-09-01")
+    assert _rows(spark.table(t)) == before
+    assert not spark.catalog.tableExists(stage)

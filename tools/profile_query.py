@@ -5,7 +5,8 @@ For each named bench query (or entry-map key) this times, separately:
   - action:   the bench's own action (collect/count) — what BENCH_r*.json
               times — plus a noop-sink run (full-column materialization,
               guide §1.4) so column-pruning artifacts are visible
-  - jobs:     Spark jobs triggered during the action (statusTracker delta)
+  - jobs:     Spark jobs triggered during the action (the jobs of a job
+              group set for that one action)
 and writes ``plans/r13/<name>_<tag>.txt`` with ``explain('formatted')``
 when --plans is passed.
 
@@ -21,6 +22,7 @@ import io
 import json
 import sys
 import time
+import uuid
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -41,7 +43,8 @@ def formatted_plan(df) -> str:
 
 
 def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     out = {"key": key, "action": action}
     # untimed warm-up (codegen/JIT), matching bench methodology
     df = queries[key](spark, SF_DIR)
@@ -53,10 +56,14 @@ def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
         t0 = time.time()
         df = queries[key](spark, SF_DIR)
         t1 = time.time()
-        j0 = len(tracker.getJobIdsForGroup(None) or [])
+        # a group per timed action: a length delta over all job ids goes
+        # negative once Spark's job retention drops old ids
+        group = f"profile:{key}:{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
         getattr(df, "count" if action == "count" else "collect")()
         t2 = time.time()
-        j1 = len(tracker.getJobIdsForGroup(None) or [])
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(tracker.getJobIdsForGroup(group))
         spark.catalog.clearCache()
         # noop sink on a fresh plan (forces every column)
         df2 = queries[key](spark, SF_DIR)
@@ -67,7 +74,7 @@ def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
         builds.append(t1 - t0)
         actions.append(t2 - t1)
         noops.append(t4 - t3)
-        jobs.append(j1 - j0)
+        jobs.append(n_jobs)
     out["build_s"] = round(sorted(builds)[len(builds) // 2], 3)
     out["action_s"] = round(sorted(actions)[len(actions) // 2], 3)
     out["noop_s"] = round(sorted(noops)[len(noops) // 2], 3)
