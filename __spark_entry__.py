@@ -418,7 +418,7 @@ from faers_datalakehouse_spark.operators.timeseries import (
     linear_interpolate_daily,
     linear_interpolate_oracle_sql,
 )
-from faers_datalakehouse_spark.sources.tables import read_events
+from faers_datalakehouse_spark.sources.tables import read_events, read_table
 from faers_datalakehouse_spark.sources.zorder import z_value, z_value_sql
 from faers_datalakehouse_spark.operators.semdedup import (
     semantic_neardup_oracle_sql,
@@ -497,14 +497,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return topk_neighbors_bruteforce(
         emb, emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0), k=ANN_K
     )
 
 
 def _mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return mmr_diversify(
         emb,
         emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0),
@@ -514,7 +514,7 @@ def _mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_ivf(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return ivf_topk_neighbors(
         emb,
         emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0),
@@ -525,7 +525,7 @@ def _ann_ivf(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
 
 
 def _bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges = shared_bpe_merges(spark, sf_dir, n_merges=10)
     # driver contract: no array columns (the driver's pandas row
     # canonicalizer can't hash list cells — round-5 failure). The token
@@ -536,7 +536,7 @@ def _bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merges = shared_bpe_merges(spark, sf_dir, n_merges=10)
     return bpe_fertility(docs, merges)
 
@@ -545,7 +545,7 @@ def _embedding_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from faers_datalakehouse_spark.operators.vector_qc import embedding_qc
 
     return embedding_qc(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_table(spark, sf_dir, "embeddings")
     )
 
 
@@ -569,7 +569,7 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     x = (F.col("o_orderkey") % 1024).cast("long")
     y = (F.col("o_custkey") % 1024).cast("long")
     return orders.select(
@@ -591,7 +591,7 @@ ORDER BY order_key
 
 
 def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return ann_recall(
         emb,
         emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0),
@@ -602,7 +602,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return lsh_bucketed_neighbors(
         emb, emb.filter(F.col("vec_id") % ANN_QUERY_MOD == 0), k=ANN_K
     )
@@ -610,7 +610,7 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(fn):
     def runner(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        return fn(read_table(spark, sf_dir, "documents"))
 
     return runner
 
@@ -620,7 +620,7 @@ def _incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_dedup_decisions,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return incremental_dedup_decisions(
         docs.filter(F.col("doc_id") % 5 != 0),
         docs.filter(F.col("doc_id") % 5 == 0),
@@ -635,8 +635,8 @@ PAGERANK_EDGES_SQL = (
 
 
 def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("l_suppkey").alias("src"), F.col("o_custkey").alias("dst")
     )
@@ -647,7 +647,7 @@ BASKET_SQL = "SELECT l_orderkey AS basket_id, l_partkey AS item FROM lineitem"
 
 
 def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("basket_id"),
         F.col("l_partkey").alias("item"),
     )
@@ -669,8 +669,8 @@ KCORE_ROUNDS = 4
 
 
 def _kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("l_suppkey").alias("src"),
         (F.col("o_custkey") + 1_000_000).alias("dst"),
@@ -680,8 +680,8 @@ def _kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same mixed graph as triangle_counts (S.TRIANGLE_EDGES_SQL)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("l_suppkey").alias("src"), F.col("o_custkey").alias("dst")
     )
@@ -699,7 +699,7 @@ RA_MIN_SCORE_MICRO = 200_000
 
 
 def _ra_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return resource_allocation_pairs(
         li.select(F.col("l_suppkey").alias("a"), F.col("l_partkey").alias("z")),
         "a",
@@ -723,7 +723,7 @@ DIFF_COMPARE = ["o_custkey", "o_orderstatus", "o_orderpriority"]
 def _table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from faers_datalakehouse_spark.operators.diff import table_diff_summary
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     left = orders.filter(F.col("o_orderkey") % 7 != 0)
     right = orders.filter(F.col("o_orderkey") % 5 != 0).select(
         "o_orderkey",
@@ -737,8 +737,8 @@ def _table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("l_suppkey").alias("src"), F.col("o_custkey").alias("dst")
     )
@@ -750,7 +750,7 @@ def _allpairs_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         allpairs_similarity,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return allpairs_similarity(docs, n=3, max_df_pct=20, min_dot=300)
 
 
@@ -759,7 +759,7 @@ def _snm_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sorted_neighborhood_pairs,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return sorted_neighborhood_pairs(
         docs, "lang", window=4, prefix_len=32, max_distance=10
     )
@@ -785,8 +785,8 @@ SSSP_EDGES_SQL = (
 def _sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from faers_datalakehouse_spark.operators.graph import sssp_weighted
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     pairs = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("l_suppkey").alias("s"),
         (F.col("o_custkey") + 1_000_000).alias("c"),
@@ -813,14 +813,14 @@ def _sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from faers_datalakehouse_spark.operators.coreset import kcenter_coreset
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return kcenter_coreset(emb, k=6)
 
 
 def _ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from faers_datalakehouse_spark.operators.drift import ks_drift
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return ks_drift(docs, "source", "n_chars")
 
 
@@ -829,7 +829,7 @@ def _fingerprint_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         fingerprint_containment,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return fingerprint_containment(docs)
 
 
@@ -838,7 +838,7 @@ def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         pmi_collocations,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return pmi_collocations(docs)
 
 
@@ -848,7 +848,7 @@ def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_scores,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return quality_scores(docs, hashed_weights(spark, 1024), n_buckets=1024)
 
 
@@ -857,28 +857,28 @@ KANON_K = 12
 
 
 def _levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     return levenshtein_pairs(part, "p_name", max_dist=3, band_width=4).orderBy(
         "name1", "name2"
     )
 
 
 def _histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return histogram_quantiles(
         li, "l_extendedprice", ["l_returnflag"], probs_milli=[250, 500, 950]
     )
 
 
 def _k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return k_anonymity_audit(cust, list(KANON_QUASI), k=KANON_K).orderBy(
         *KANON_QUASI
     )
 
 
 def _k_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return k_suppress(cust, list(KANON_QUASI), k=KANON_K).orderBy("c_custkey")
 
 
@@ -888,8 +888,8 @@ LDIV_L = 5
 
 
 def _l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     j = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         *LDIV_QUASI, LDIV_SENSITIVE
     )
@@ -1028,10 +1028,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- the 40 entries last driver-checked in r4 (2-round rule) --
         "customer_retention_setops": A.customer_retention_setops,
         "kmeans_clusters": lambda spark, sf_dir: kmeans_lite(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=8, iters=2
+            read_table(spark, sf_dir, "embeddings"), k=8, iters=2
         ),
         "semantic_neardup": lambda spark, sf_dir: semantic_neardup_pairs(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+            read_table(spark, sf_dir, "embeddings"),
             k=8,
             iters=2,
             threshold=NEARDUP_COS_THRESHOLD,
@@ -1167,16 +1167,16 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             lambda df: bm25_topk(df, BM25_QUERY_TERMS, k=15)
         ),
         "dsir_weights": lambda spark, sf_dir: dsir_weights(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+            read_table(spark, sf_dir, "documents"),
+            read_table(spark, sf_dir, "documents").filter(
                 F.col("lang") == "en"
             ),
             n_buckets=256,
         ),
         # DSIR selection: deterministic top-n most-target-like documents
         "dsir_select": lambda spark, sf_dir: dsir_select(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+            read_table(spark, sf_dir, "documents"),
+            read_table(spark, sf_dir, "documents").filter(
                 F.col("lang") == "en"
             ),
             n=100,
@@ -1207,7 +1207,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_topk": _ann_queries,
         "ann_ivf_topk": _ann_ivf,
         "cosine_neardup": lambda spark, sf_dir: cosine_neardup_pairs(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+            read_table(spark, sf_dir, "embeddings"),
             threshold=NEARDUP_COS_THRESHOLD,
         ),
         "cube_volume": A.cube_volume,
@@ -1236,7 +1236,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus's strongest pairs sit near cosine 0.45, where 10-bit
         # signatures collide too rarely to exercise nonzero output at sf0.01.
         "lsh_neardup": lambda spark, sf_dir: lsh_bucketed_neardup(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+            read_table(spark, sf_dir, "embeddings"),
             threshold=NEARDUP_COS_THRESHOLD,
             n_planes=8,
         ),

@@ -71,7 +71,7 @@ REPORT_SOURCE_DECODE = {
 SEX_DECODE = {"F": "Female", "M": "Male", "UNK": "Unknown"}
 
 
-def outcome_description(col: Column | str) -> Column:
+def outcome_description(col: str) -> Column:
     return decode_ladder(col, OUTCOME_DECODE)
 
 
@@ -213,11 +213,9 @@ COUNTRY_REGION: dict[str, str] = {
 }
 
 
-def country_region(country: Column | str) -> Column:
+def country_region(country: str) -> Column:
     return decode_ladder(
-        F.upper(F.col(country) if isinstance(country, str) else country),
-        COUNTRY_REGION,
-        default="Other/Unknown",
+        f"upper({country})", COUNTRY_REGION, default="Other/Unknown"
     )
 
 

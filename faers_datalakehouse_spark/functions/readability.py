@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 _WORD_RE = "[A-Za-z]+"
 _SENT_RE = "[.!?]+"
 _VOWEL_RE = "[aeiouy]+"
@@ -77,7 +79,7 @@ def readability_fk_by_source(docs: DataFrame) -> DataFrame:
 
 
 def readability_fk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return readability_fk_by_source(docs)
 
 

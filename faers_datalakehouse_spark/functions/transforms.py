@@ -21,11 +21,16 @@ Semantics reproduced (reference file:line):
   (``silver_transformations.py:128-157``).
 - ``decode_ladder``      — the dominant reference pattern: a chained
   ``when``/``otherwise`` code→description decode (60+ instances, e.g.
-  ``src/silver/silver_outcomes.py:37-71``), built from a mapping.
+  ``src/silver/silver_outcomes.py:37-71``), built from a mapping as one
+  SQL ``CASE``.
 - ``bucketize``          — ordered range bucketing (e.g. clinical-risk tiers,
-  ``src/gold/facts/fact_adverse_events.py:288-295``).
+  ``src/gold/facts/fact_adverse_events.py:288-295``), one SQL ``CASE``.
 - ``row_hash`` / ``surrogate_key`` — md5-of-concat change-detection hash and
   business-key surrogate (``src/utils/scd_type2.py:54-89``).
+
+The two ladders are SQL text parsed once by ``F.expr``: a Column-API
+``when`` chain costs a few Python→JVM round trips per node, a parsed
+expression one parse for the whole ladder.
 """
 
 from __future__ import annotations
@@ -100,41 +105,83 @@ def parse_dosage(col: Column | str) -> dict[str, Column]:
     }
 
 
+def sql_literal(value: str | int | float) -> str:
+    """Spark SQL text of a Python literal: strings single-quoted with ``\\``
+    and ``'`` backslash-escaped, floats with the ``D`` suffix so ``10000.0``
+    stays DOUBLE instead of parsing as DECIMAL."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, float):
+        return f"{float(value)!r}D"
+    if isinstance(value, int):
+        return str(value)
+    raise TypeError(f"no SQL literal for {type(value).__name__}")
+
+
+def decode_ladder_sql(
+    col: str, mapping: Mapping[str, str], default: str = "Unknown"
+) -> str:
+    """SQL text of :func:`decode_ladder`, for ``selectExpr`` projections."""
+    if not mapping:
+        return sql_literal(default)
+    whens = " ".join(
+        f"WHEN ({col}) = {sql_literal(code)} THEN {sql_literal(desc)}"
+        for code, desc in mapping.items()
+    )
+    return f"CASE {whens} ELSE {sql_literal(default)} END"
+
+
 def decode_ladder(
-    col: Column | str,
-    mapping: Mapping[str, str],
-    default: str | Column = "Unknown",
+    col: str, mapping: Mapping[str, str], default: str = "Unknown"
 ) -> Column:
-    """Code → description decode as a when-chain (Catalyst folds to CASE)."""
-    c = F.col(col) if isinstance(col, str) else col
-    expr: Column | None = None
-    for code, desc in mapping.items():
-        cond = c == code
-        expr = F.when(cond, desc) if expr is None else expr.when(cond, desc)
-    if expr is None:
-        return F.lit(default) if isinstance(default, str) else default
-    return expr.otherwise(default)
+    """Code → description decode: ``CASE WHEN (col) = code THEN desc …
+    ELSE default END``, parsed once by ``F.expr``.
+
+    ``col`` is a column name or any Spark SQL expression text (e.g.
+    ``"upper(reporter_country)"``); codes, descriptions and ``default`` are
+    literals quoted by :func:`sql_literal`. NULL input decodes to
+    ``default``; an empty mapping yields the ``default`` literal.
+    """
+    return F.expr(decode_ladder_sql(col, mapping, default))
+
+
+def bucketize_sql(
+    col: str,
+    boundaries: Sequence[float],
+    labels: Sequence[str],
+    null_label: str = "Unknown",
+) -> str:
+    """SQL text of :func:`bucketize`, for ``selectExpr`` projections."""
+    if len(labels) != len(boundaries) + 1:
+        raise ValueError("need len(labels) == len(boundaries) + 1")
+    # NaN sorts greater than every double in Spark, so without the guard
+    # it landed in the TOP bucket instead of the null label
+    whens = [
+        f"WHEN ({col}) IS NULL OR isnan(CAST(({col}) AS DOUBLE)) "
+        f"THEN {sql_literal(null_label)}"
+    ]
+    whens += [
+        f"WHEN ({col}) < {sql_literal(b)} THEN {sql_literal(label)}"
+        for b, label in zip(boundaries, labels[:-1])
+    ]
+    return f"CASE {' '.join(whens)} ELSE {sql_literal(labels[-1])} END"
 
 
 def bucketize(
-    col: Column | str,
+    col: str,
     boundaries: Sequence[float],
     labels: Sequence[str],
     null_label: str = "Unknown",
 ) -> Column:
     """Ordered range bucketing: len(labels) == len(boundaries) + 1.
 
-    Buckets are [-inf, b0), [b0, b1), ..., [b_last, +inf).
+    Buckets are [-inf, b0), [b0, b1), ..., [b_last, +inf); NULL and NaN
+    inputs get ``null_label``. ``col`` is a column name or Spark SQL
+    expression text; the result is one ``CASE`` parsed by ``F.expr``, with
+    boundaries and labels quoted by :func:`sql_literal` (float boundaries
+    stay DOUBLE literals).
     """
-    if len(labels) != len(boundaries) + 1:
-        raise ValueError("need len(labels) == len(boundaries) + 1")
-    c = F.col(col) if isinstance(col, str) else col
-    # NaN sorts greater than every double in Spark, so without the guard
-    # it landed in the TOP bucket instead of the null label
-    expr = F.when(c.isNull() | F.isnan(c.cast("double")), F.lit(null_label))
-    for b, label in zip(boundaries, labels[:-1]):
-        expr = expr.when(c < b, F.lit(label))
-    return expr.otherwise(F.lit(labels[-1]))
+    return F.expr(bucketize_sql(col, boundaries, labels, null_label))
 
 
 def _hash_input(cols: Sequence[Column | str]) -> Column:

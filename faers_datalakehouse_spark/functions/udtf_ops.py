@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql.functions import udtf
 
+from ..sources.tables import read_table
+
 CHUNK_WIDTH = 200
 CHUNK_STRIDE = 150
 
@@ -45,7 +47,7 @@ def register_udtfs(spark) -> None:
 def udtf_chunks(spark, sf_dir: str):
     """Driver surface: documents laterally expanded by the UDTF."""
     register_udtfs(spark)
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "_udtf_docs"
     )
     return spark.sql(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def cumulative_by_rank(
     df: DataFrame,
@@ -127,7 +129,7 @@ def abc_classes(
 def abc_classes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC census of parts by lineitem revenue (discounted extended
     price, exact cents)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.round(
             F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def neyman_allocation(
     df: DataFrame,
@@ -120,7 +122,7 @@ def neyman_allocation_query(
 ) -> DataFrame:
     """Allocate a 1000-row audit budget across market segments,
     proportional to segment size x account-balance spread."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_c"),
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 N_SKETCH = 16  # 4 groups of 4
 _GROUP = 4
@@ -117,7 +119,7 @@ def ams_f2(df: DataFrame, value_col: str) -> DataFrame:
 
 def ams_f2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-join size of lineitem on partkey, estimated in 16 integers."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey"
     )
     return ams_f2(li, "l_partkey")

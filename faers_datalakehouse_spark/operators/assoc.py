@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.entropy import _bits
+from faers_datalakehouse_spark.sources.tables import read_table
 
 
 def theils_u(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -91,10 +92,10 @@ def theils_u_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U(priority | segment): does a customer's market segment predict
     the priority of their orders? (Near zero on independent TPC-H
     draws; the oracle checks the exact integer decomposition.)"""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority"
     )
     j = orders.join(

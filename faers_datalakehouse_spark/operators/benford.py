@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 # log10(1 + 1/d) in parts-per-million, d = 1..9; floor-rounded so both
 # engines see identical literals (sums to 999_997 — the audit compares
 # per-digit, never the total).
@@ -88,7 +90,7 @@ def benford_audit(df: DataFrame, value_col: str = "o_totalprice") -> DataFrame:
 
 
 def benford_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return benford_audit(orders, "o_totalprice")
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .surprisal import corpus_tokens
+from ..sources.tables import read_table
 
 
 def _chars(word: Column) -> Column:
@@ -449,7 +450,7 @@ def shared_bpe_merges(
     (session, sf_dir, n_merges)."""
     key = (spark.sparkContext.applicationId, sf_dir, int(n_merges))
     if key not in _SHARED_MERGES:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_table(spark, sf_dir, "documents")
         while len(_SHARED_MERGES) >= _SHARED_MERGES_CAP:
             _SHARED_MERGES.pop(next(iter(_SHARED_MERGES)))  # FIFO evict
         _SHARED_MERGES[key] = train_bpe_merges(docs, n_merges=n_merges)

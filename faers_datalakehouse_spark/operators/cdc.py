@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dedup import _md5_hash64, _norm_text
+from ..sources.tables import read_table
 
 
 def cdc_chunks(
@@ -142,7 +143,7 @@ def cdc_dedup_report(
 
 def cdc_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdc_dedup_report(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
     )
 
 

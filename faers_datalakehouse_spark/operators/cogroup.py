@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 _SCHEMA = (
     "o_orderkey long, o_cents long, li_cents long, delta_cents long"
 )
@@ -53,14 +55,14 @@ def order_reconciliation(
     drift; this driver's synthetic headers are independent of the
     lines, so the audit surfaces real disagreement — which is the
     point of a reconciliation operator.)"""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
             "o_cents"
         ),
         (F.col("o_orderkey") % buckets).alias("bucket"),
     )
-    lines = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    lines = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"),
         F.expr(
             "CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax)"

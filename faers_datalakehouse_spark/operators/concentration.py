@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def hhi_by_group(
     df: DataFrame, group_col: str, member_col: str
@@ -71,7 +73,7 @@ def hhi_concentration_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per language: source concentration of the document corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return hhi_by_group(docs, "lang", "source")
 
 

@@ -44,6 +44,7 @@ from faers_datalakehouse_spark.operators.dedup import (
     _norm_text,
     shared_lsh_pairs,
 )
+from faers_datalakehouse_spark.sources.tables import read_table
 
 # canonical two-pass normalization, shared with the document oracles
 _NORM_SQL = (
@@ -101,7 +102,7 @@ def dedup_keep_best(
 def dedup_keep_best_query(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     pairs = shared_lsh_pairs(spark, sf_dir, threshold)
     return dedup_keep_best(docs, pairs)
 
@@ -191,7 +192,7 @@ def pii_density(
 
 
 def pii_density_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pii_density(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return pii_density(read_table(spark, sf_dir, "documents"))
 
 
 PII_DENSITY_SQL = f"""
@@ -290,7 +291,7 @@ def water_filling_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Allocate half the corpus's whitespace-token budget across
     sources max-min fairly — the standard under-budget mixture floor
     before temperature reweighting."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # split('') yields [''] — a fully-empty normalized doc must count
     # 0 tokens, not 1 (normalization collapses whitespace, so every
     # token of a NON-empty normalized string is non-empty already).
@@ -495,7 +496,7 @@ def curation_pipeline_query(
     threshold: float = 0.5,
     n_shards: int = 8,
 ) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     pairs = shared_lsh_pairs(spark, sf_dir, threshold)
     return curation_pipeline(docs, pairs, n_shards=n_shards)
 

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 MERSENNE_P = (1 << 31) - 1  # 2147483647, prime modulus for minhash permutations
 
 
@@ -1076,7 +1078,7 @@ def shared_lsh_pairs(
     key = (spark.sparkContext.applicationId, sf_dir, float(threshold))
     df = _SHARED_PAIRS.get(key)
     if df is None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_table(spark, sf_dir, "documents")
         df = minhash_lsh_pairs(
             docs, threshold=threshold, portable_hash=True
         ).persist()

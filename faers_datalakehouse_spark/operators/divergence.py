@@ -43,6 +43,7 @@ from faers_datalakehouse_spark.operators.normalize import (
     bucketed_global_rank,
 )
 from faers_datalakehouse_spark.operators.surprisal import corpus_tokens
+from faers_datalakehouse_spark.sources.tables import read_table
 
 
 def _source_counts(docs: DataFrame) -> DataFrame:
@@ -137,7 +138,7 @@ def source_xentropy_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     return source_xentropy(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
     )
 
 
@@ -228,7 +229,7 @@ def zipf_slope(docs: DataFrame) -> DataFrame:
 
 
 def zipf_slope_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return zipf_slope(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return zipf_slope(read_table(spark, sf_dir, "documents"))
 
 
 ZIPF_SLOPE_SQL = """
@@ -329,7 +330,7 @@ def cond_entropy_rate_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     return cond_entropy_rate(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
     )
 
 

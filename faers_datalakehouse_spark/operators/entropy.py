@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ranking import corpus_tokens
+from ..sources.tables import read_table
 
 
 def _bits(col):
@@ -113,7 +114,7 @@ def source_entropy(docs: DataFrame) -> DataFrame:
 
 
 def source_entropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return source_entropy(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return source_entropy(read_table(spark, sf_dir, "documents"))
 
 
 SOURCE_ENTROPY_SQL = """
@@ -220,10 +221,10 @@ def mutual_information_query(
     orders — "does knowing the segment tell you anything about urgency?"
     (near-zero on independent TPC-H draws; the oracle checks the exact
     integer decomposition, not just the headline)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority"
     )
     j = orders.join(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sketches import _hex_int
+from ..sources.tables import read_table
 
 
 def _feat_expr(col: str) -> Column:
@@ -102,7 +103,7 @@ def feature_hash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tier over positive-shifted cents: Spark `div` truncates toward
     # zero while DuckDB `//` floors, so negative balances must never
     # reach the integer division
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
         "c_nationkey",

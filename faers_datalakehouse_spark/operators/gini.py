@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def gini_by_group(
     df: DataFrame,
@@ -134,8 +136,8 @@ def gini_segment_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum of order totals, cents) ranked within segment. Customers with
     no orders count as x=0 rows (they widen inequality — the honest
     denominator), via a left join defaulting to 0."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("spend_c")
     )

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .surprisal import corpus_tokens
+from ..sources.tables import read_table
 
 
 def _mg_kernel(cap: int):
@@ -99,7 +100,7 @@ def heavy_hitters(
 
 def heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), k=50
+        read_table(spark, sf_dir, "documents"), k=50
     )
 
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 # α = 307/1024 ≈ 0.2998, β = 205/1024 ≈ 0.2002
 _A = 307
 _A1 = 1024 - _A
@@ -92,7 +94,7 @@ def holt_smooth(
 
 def holt_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily 1995 revenue cents per order priority, Holt-smoothed."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = (
         orders.where(F.year("o_orderdate") == 1995)
         .groupBy(

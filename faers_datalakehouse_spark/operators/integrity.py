@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def fk_orphans(
     child: DataFrame, fk_col: str, parent: DataFrame, pk_col: str, edge: str
@@ -47,7 +49,7 @@ def fk_orphans(
 
 def referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audit the TPC-H-ish FK graph + one deliberately degraded edge."""
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
+    rd = lambda t: read_table(spark, sf_dir, t)  # noqa: E731
     orders, customer = rd("orders"), rd("customer")
     lineitem, part, supplier, nation = (
         rd("lineitem"),

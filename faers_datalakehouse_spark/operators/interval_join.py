@@ -35,6 +35,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def interval_overlap_join(
     left: DataFrame,
@@ -98,7 +100,7 @@ def transit_audit_overlaps(spark, sf_dir: str) -> DataFrame:
     days". The calendar is months-sized (broadcastable); intervals are
     quantized to epoch days; overlap_days is exact integer arithmetic.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
         F.datediff("l_shipdate", F.lit("1970-01-01"))
@@ -111,7 +113,7 @@ def transit_audit_overlaps(spark, sf_dir: str) -> DataFrame:
             + F.round("l_quantity").cast("long") % 28
         ).alias("receipt_d"),
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     audits = (
         orders.select(
             F.year("o_orderdate").alias("yr"),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .surprisal import corpus_tokens
+from ..sources.tables import read_table
 
 
 def doc_keywords(
@@ -73,7 +74,7 @@ def doc_keywords(
 
 def doc_keywords_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_keywords(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), k=3, max_df_pct=80
+        read_table(spark, sf_dir, "documents"), k=3, max_df_pct=80
     )
 
 

@@ -56,15 +56,18 @@ def assign_expr(cents: list[tuple[int, list[int]]], qv: Column) -> Column:
     the broadcast-the-model pattern; pure projection, no join, no shuffle,
     so callers (SemDeDup blocking, IVF routing) can compute the cluster id
     inline wherever the vector is already in hand."""
+    import numpy as np
+
     scored = F.array(
         *[
             F.struct(
                 F.aggregate(
                     F.zip_with(
                         qv,
-                        # one list-literal JVM call per centroid, not
-                        # dims F.lit() calls (r12 plan-build cost fix)
-                        F.lit([int(v) for v in vec]),
+                        # a 1-D int64 ndarray is ONE array<bigint> literal;
+                        # F.lit(list) expands to array(lit(x), ...), a
+                        # literal Column per dim
+                        F.lit(np.asarray(vec, dtype=np.int64)),
                         lambda x, c: (x - c) * (x - c),
                     ),
                     F.lit(0).cast("long"),
@@ -216,12 +219,13 @@ def train_centroids(
             )
             .groupBy("cid")
             .agg(
-                F.array(
-                    *[
-                        F.sum(F.element_at("vsum", i + 1))
-                        for i in range(dims)
-                    ]
-                ).alias("vsum"),
+                # one parsed expression, not dims F.sum(F.element_at(...))
+                # Column trees (~24 JVM round trips per dim)
+                F.expr(
+                    "array("
+                    + ", ".join(f"sum(vsum[{i}])" for i in range(dims))
+                    + ") AS vsum"
+                ),
                 F.sum("n").alias("n"),
             )
             .collect()

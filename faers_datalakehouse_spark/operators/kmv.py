@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .sketches import _hex_int
+from ..sources.tables import read_table
 
 _HASH_SPACE = 1 << 32  # 8 hex chars of md5
 
@@ -138,7 +139,7 @@ def kmv_distinct(
 
 def kmv_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct ordering customers per order priority (and overall)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return kmv_distinct(orders, "o_orderpriority", "o_custkey", k=64)
 
 

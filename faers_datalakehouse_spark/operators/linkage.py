@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 _FIELDS = ("bal_band", "bal_cents")
 
 
@@ -62,13 +64,13 @@ def linkage_scores(
     flags. Deterministic: weights are integer bit-lengths, ordering is
     total."""
     cust = _party(
-        spark.read.parquet(f"{sf_dir}/customer.parquet"),
+        read_table(spark, sf_dir, "customer"),
         "c_custkey",
         "c_acctbal",
         "c_nationkey",
     )
     supp = _party(
-        spark.read.parquet(f"{sf_dir}/supplier.parquet"),
+        read_table(spark, sf_dir, "supplier"),
         "s_suppkey",
         "s_acctbal",
         "s_nationkey",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .surprisal import corpus_tokens
+from ..sources.tables import read_table
 
 
 def temperature_mix(docs: DataFrame) -> DataFrame:
@@ -82,7 +83,7 @@ def temperature_mix(docs: DataFrame) -> DataFrame:
 
 def temperature_mix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_mix(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
     )
 
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def _auto_materialize(df: DataFrame) -> bool:
     """Size-aware input materialization policy for the rank primitive
@@ -141,7 +143,7 @@ def percentile_normalize(
 def percentile_normalize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents' length percentile within their source: the
     cross-source-comparable length signal."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
     return percentile_normalize(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from faers_datalakehouse_spark.operators.normalize import (
     bucketed_global_rank,
 )
+from faers_datalakehouse_spark.sources.tables import read_table
 
 
 def _quintile(rank_col: str, n_col: str) -> F.Column:
@@ -106,7 +107,7 @@ def rfm_scores(
 def rfm_segments_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """125-cell RFM census of the order book: segment sizes and the
     money in each segment."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     scored = rfm_scores(orders)
     return (
         scored.groupBy("r_score", "f_score", "m_score")

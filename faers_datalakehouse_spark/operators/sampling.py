@@ -43,6 +43,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def _hash_bucket(id_col: Column, n: int) -> Column:
     """Engine-portable deterministic bucket in [0, n): md5 of the id's
@@ -264,5 +266,5 @@ LIMIT {int(k)}
 def priority_sample_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: 64-doc weighted sample of the corpus, weight =
     document length (proportional-to-size, the token-budget case)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return priority_sample(docs, "doc_id", "n_chars", k=64)

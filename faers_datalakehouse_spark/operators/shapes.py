@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def shape_of(col: Column) -> Column:
     """Character-class shape of a string column (see module doc)."""
@@ -68,7 +70,7 @@ def shape_profile(
 def shape_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shape census of the customer name column (Customer#000000042
     shapes) plus any drifted formats."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return shape_profile(cust, "c_name")
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .contamination import _distinct_ngrams
+from ..sources.tables import read_table
 
 
 def source_overlap_matrix(
@@ -129,7 +130,7 @@ def source_overlap_matrix(
 
 def source_overlap_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: trigram overlap matrix over the documents table."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return source_overlap_matrix(docs)
 
 
@@ -250,7 +251,7 @@ def source_minhash_similarity(
 
 def source_minhash_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: 16-component MinHash source-similarity estimates."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return source_minhash_similarity(docs)
 
 
@@ -366,7 +367,7 @@ def distinctive_terms(
 
 
 def distinctive_terms_query(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return distinctive_terms(docs)
 
 

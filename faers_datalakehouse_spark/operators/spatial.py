@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 EXTENT_M = 1_000_000  # 1,000 km square world at 1 m resolution
 
 
@@ -111,10 +113,10 @@ def spatial_radius_pairs(
     the 'assign demand points to nearby facilities' query. Ordered
     (customer, supplier, exact squared distance)."""
     cust = derive_points(
-        spark.read.parquet(f"{sf_dir}/customer.parquet"), "c_custkey"
+        read_table(spark, sf_dir, "customer"), "c_custkey"
     )
     supp = derive_points(
-        spark.read.parquet(f"{sf_dir}/supplier.parquet"), "s_suppkey"
+        read_table(spark, sf_dir, "supplier"), "s_suppkey"
     )
     return (
         radius_join(cust, supp, radius_m)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.normalize import bucketed_global_rank
+from faers_datalakehouse_spark.sources.tables import read_table
 
 
 def _tie_avg_rank2(
@@ -137,8 +138,8 @@ def spearman_by_group(
 def spearman_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation rank correlation between a customer's account balance
     and their total order spend (customers with >= 1 order)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
             "spend_c"

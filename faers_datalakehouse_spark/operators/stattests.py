@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def mann_whitney_by_group(
     df: DataFrame,
@@ -297,10 +299,10 @@ def welch_ttest_by_group(
 def welch_ttest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: do urgent-priority orders (1-URGENT/2-HIGH)
     carry a different mean order value than routine ones?"""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.round(F.col("o_totalprice")).cast("long").alias("v_usd"),
         F.col("o_orderpriority")
@@ -406,10 +408,10 @@ def odds_ratio_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: are urgent-priority orders associated with
     high order values (> $200k)? The FAERS-style disproportionality
     2x2 (reporting-odds-ratio shape) on the order book."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderpriority")
         .isin("1-URGENT", "2-HIGH")
@@ -625,10 +627,10 @@ def phi_coefficient_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: the phi effect size of urgent priority vs
     big order value — the bounded companion to the odds-ratio entry on
     the identical 2x2 frame."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderpriority")
         .isin("1-URGENT", "2-HIGH")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import _hash_bucket
+from ..sources.tables import read_table
 
 
 def target_encode_oof(
@@ -105,7 +106,7 @@ ORDER BY category, fold
 def target_encode_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: OOF-encode o_orderpriority against exact
     o_totalprice cents with the default 5 folds."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return target_encode_oof(
         orders,
         "o_orderpriority",

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def t_closeness_audit(
     df: DataFrame,
@@ -108,10 +110,10 @@ def t_closeness_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per market segment: how far does the order-priority distribution
     sit from the global one (priority rank 1-5 as the ordered sensitive
     attribute)?"""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.substring("o_orderpriority", 1, 1)
         .cast("long")

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def top_p_filter(
     df: DataFrame,
@@ -132,7 +134,7 @@ def top_p_sources_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: per-source nucleus at p = 1/2 over documents,
     weight = n_chars — 'the head documents carrying half of each
     source's character mass'."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     out = top_p_filter(docs, "source", "doc_id", "n_chars")
     return out.select(
         F.col("g").alias("source"),
@@ -346,7 +348,7 @@ def weighted_quantiles_query(spark, sf_dir: str) -> DataFrame:
     per returnflag — volume-weighted price distribution. Both quantiles
     come from ONE ``weighted_quantile_multi`` pass (shared bucket
     classification; identical values to two independent calls)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_orderkey",
         "l_linenumber",

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def cochran_armitage_by_group(
     df: DataFrame,
@@ -78,10 +80,10 @@ def cochran_armitage_query(
     """Per market segment: does the probability of a big order
     (> $200k) trend with the order's priority level (1-URGENT ..
     5-LOW as the ordered dose)?"""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.substring("o_orderpriority", 1, 1).cast("long").alias("dose"),
         (F.col("o_totalprice") > 200000).cast("int").alias("big"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import read_events
+from ..sources.tables import read_events, read_table
 
 
 def cents(col: str | Column) -> Column:
@@ -38,7 +38,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on the two low-cardinality group keys; partial aggregation
     (map-side combine) does nearly all the work before the exchange.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     qty = F.round("l_quantity").cast("long")
     price_c = cents("l_extendedprice")
     disc_pct = F.round(F.col("l_discount") * 100).cast("long")
@@ -109,8 +109,8 @@ def topk_parts(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     lineitem is pre-aggregated on its own join key (l_partkey) *before* the
     broadcast join to part, so the join input is |parts| rows, not |lineitem|.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     by_part = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n_shipments"),
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -155,8 +155,8 @@ LIMIT {k}
 
 def topk_by_group(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """Top-k suppliers per nation by account balance (ranked window)."""
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    supplier = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_name").orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
     return (
         supplier.join(
@@ -228,7 +228,7 @@ ORDER BY n_events DESC, event_type ASC
 
 def global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-row dataset profile (A3: global multi-aggregate)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -308,7 +308,7 @@ ORDER BY event_type
 
 def temporal_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yearly trend (A2 temporal: groupBy year(date))."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(F.year("o_orderdate").alias("order_year"))
         .agg(
@@ -637,13 +637,13 @@ def shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFram
     groupBy on a composite key, and top-k with deterministic tiebreaks.
     """
     cutoff = "1998-01-01"
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > cutoff
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < cutoff
     )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    customer = read_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
     rev_e4 = (
@@ -694,11 +694,11 @@ def regional_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⋈orders shuffles once; nation/region broadcast. Customer is left
     to AQE — it scales with the fact, so a forced broadcast breaks at 100 TB.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     rev_e4 = (
         F.round(F.col("l_extendedprice") * 100).cast("long")
         * (100 - F.round(F.col("l_discount") * 100).cast("long"))
@@ -744,7 +744,7 @@ ORDER BY region_name, revenue DESC, nation_name
 
 def moving_average(spark: SparkSession, sf_dir: str, days: int = 7) -> DataFrame:
     """Daily order volume with a trailing moving average (frame window)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(cents("o_totalprice")).alias("value_c"),
@@ -782,8 +782,8 @@ ORDER BY day
 
 def segment_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts per market segment × order status."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
     return (
         joined.groupBy(F.col("c_mktsegment").alias("market_segment"))
@@ -808,7 +808,7 @@ ORDER BY market_segment
 
 def distinct_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A7 parity: distinct counts + grouped counts in one result."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -835,7 +835,7 @@ ORDER BY l_returnflag
 
 def rollup_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals via ROLLUP (flag → flag×status → grand total)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -871,7 +871,7 @@ def grouping_sets_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     CUBE can express: (flag x status), (status), and the grand total,
     skipping the (flag) level. Uses the Spark 4 ``DataFrame.groupingSets``
     API; one shuffle, same partial-agg shape as rollup/cube."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupingSets(
             [["l_returnflag", "l_linestatus"], ["l_linestatus"], []],
@@ -908,7 +908,7 @@ ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
 
 def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long unpivot of per-returnflag measures (melt/stack)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.sum(F.round("l_quantity").cast("long")).cast("double").alias("qty"),
         (F.sum(cents("l_extendedprice")).cast("double") / 100.0).alias("base_price"),
@@ -952,7 +952,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     null rate and distinct count (the pipeline-health operator every
     large-scale ingest needs). Built as a stack of per-column aggregates —
     a single pass over the table, then a tiny unpivot."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
     aggs = []
@@ -1008,7 +1008,7 @@ def quantiles_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear interpolation ((1-g)*lo + g*hi) is the same IEEE arithmetic in
     both engines.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     price_c = cents("o_totalprice")
     return (
         orders.groupBy("o_orderpriority")
@@ -1051,7 +1051,7 @@ def customer_retention_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     second year only. Spark plans INTERSECT/EXCEPT as left-semi/anti joins
     after aggregation — no custom set machinery needed.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     y1 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
     y2 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
     retained = y1.intersect(y2).select(
@@ -1090,10 +1090,10 @@ def sql_api_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrates the equivalent surface here — Catalyst produces the same
     plan as the DataFrame version.
     """
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "v_orders"
     )
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "v_customer"
     )
     return spark.sql(
@@ -1124,7 +1124,7 @@ ORDER BY order_year, market_segment
 
 def cube_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-subtotal-combinations aggregate via CUBE (rollup's superset)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -1262,7 +1262,7 @@ def value_histogram(
     width-bucket projection + count. Bin ids and edges are exact
     integers in cents, so the histogram hash-matches DuckDB.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("p_c")
     )
     bounds = li.agg(
@@ -1379,7 +1379,7 @@ def anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude. Two window passes over one (status)-partitioned shuffle;
     no collect, no join. DuckDB reproduces every step bit-for-bit.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     # stats run on x div 100 (hundreds of dollars): with the ANSI-mode
     # exact multiplies below, the coarser unit buys ~4 orders of int64
     # headroom on (n*d - sd)^2 and n*sq at any realistic daily volume;
@@ -1461,7 +1461,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange); the series length per key is days-of-history — the same
     bound every per-key time-series operator here carries.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(
             F.col("o_orderstatus").alias("status"),
@@ -1560,7 +1560,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-group sort is the same cost any exact per-group quantile
     carries; nothing is single-partition and nothing collects.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderpriority").alias("priority"),
         cents("o_totalprice").alias("v"),
@@ -1675,7 +1675,7 @@ def pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB evaluates the mathematically identical single-frame SQL.
     """
     bucket_size = 1024  # cents per cell; price domain is fixed, ~200 cells
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     pts = part.select(
         "p_partkey",
         cents("p_retailprice").alias("price_c"),
@@ -1747,7 +1747,7 @@ def ewma_daily(spark: SparkSession, sf_dir: str, window: int = 8) -> DataFrame:
     on unbounded history (not expressible as a frame in either engine);
     the truncated form keeps >99.6% of the mass at w=8 and is a fixed
     LAG ladder — one window shuffle, null until the ladder is full."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(cents("o_totalprice")).alias("x")
     )
@@ -1806,7 +1806,7 @@ def comoment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side partial), then a 1-row stack() unpivot — the
     ``expectations_audit`` shape.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     q = li.select(
         F.round("l_quantity").cast("long").alias("qty"),
         F.round("l_extendedprice").cast("long").alias("price"),
@@ -1891,7 +1891,7 @@ def categorical_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcastable back onto a 100 TB fact for the actual encode); the
     frequency-major order is what keeps frequent categories in small
     code values for downstream embedding tables."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     counts = cust.groupBy(F.col("c_mktsegment").alias("value")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -2334,7 +2334,7 @@ def quantile_binning(
     single-partition window anywhere — then a map-side-combinable
     groupBy of |bins| rows.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     binned = global_ntile(
         li.select(
             F.expr(
@@ -2565,7 +2565,7 @@ def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine. One (custkey)-partitioned shuffle; each window below
     shares it, so Spark plans a single exchange + sort.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_custkey",
         "o_orderkey",
@@ -2634,7 +2634,7 @@ def period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare against true calendar neighbors. Growth ratios are single
     IEEE divisions of exact integers, bit-identical cross-engine.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     monthly = orders.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).alias(
             "mkey"
@@ -2710,7 +2710,7 @@ def rolling_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority, so the shuffle is keyed and the sort is per-partition —
     no single-partition window.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).alias(

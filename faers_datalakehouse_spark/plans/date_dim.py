@@ -7,7 +7,9 @@ the reference's only generator/lateral operator.
 
 Spark-first: ``sequence`` + ``explode`` materializes the row set with no input
 table and no shuffle; every attribute is a codegen'd projection. An ~11k-row
-dimension is broadcast-joined against facts for free.
+dimension is broadcast-joined against facts for free. The 32 attributes map
+1:1 onto Spark SQL, so the projection is SQL text (``_ATTRIBUTES``): one
+``selectExpr`` instead of hundreds of Column-API round trips to the JVM.
 
 Attributes are restricted to those with exact ANSI-SQL twins (DuckDB
 ``generate_series`` + date parts) so the dimension itself is
@@ -18,85 +20,77 @@ Spark-vs-DuckDB ``dayofweek`` origin mismatch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.transforms import sql_literal
 
 DEFAULT_START = "1995-01-01"
 DEFAULT_END = "2030-12-31"
+
+
+# ISO day of week: Monday=1 ... Sunday=7
+_ISO_DOW = "(weekday(date_value) + 1)"
+
+_ATTRIBUTES = (
+    "year(date_value) * 10000 + month(date_value) * 100 + dayofmonth(date_value)"
+    " AS date_key",
+    "date_value",
+    "year(date_value) AS year",
+    "quarter(date_value) AS quarter",
+    "concat('Q', CAST(quarter(date_value) AS STRING)) AS quarter_name",
+    "month(date_value) AS month",
+    "date_format(date_value, 'MMMM') AS month_name",
+    "date_format(date_value, 'MMM') AS month_short_name",
+    "dayofmonth(date_value) AS day_of_month",
+    "dayofyear(date_value) AS day_of_year",
+    f"{_ISO_DOW} AS iso_day_of_week",
+    "date_format(date_value, 'EEEE') AS day_name",
+    "date_format(date_value, 'EEE') AS day_short_name",
+    "weekofyear(date_value) AS iso_week",
+    "date_format(date_value, 'yyyy-MM-dd') AS date_string",
+    "date_format(date_value, 'yyyyMMdd') AS date_string_compact",
+    f"{_ISO_DOW} >= 6 AS is_weekend",
+    f"{_ISO_DOW} <= 5 AS is_weekday",
+    "dayofmonth(date_value) = 1 AS is_month_start",
+    "date_value = last_day(date_value) AS is_month_end",
+    "month(date_value) = 1 AND dayofmonth(date_value) = 1 AS is_year_start",
+    "month(date_value) = 12 AND dayofmonth(date_value) = 31 AS is_year_end",
+    "dayofmonth(last_day(date_value)) AS days_in_month",
+    "CAST((dayofmonth(date_value) - 1) / 7 AS INT) + 1 AS week_of_month",
+    "date_format(date_value, 'yyyy-MM') AS year_month",
+    "concat(CAST(year(date_value) AS STRING), '-Q', CAST(quarter(date_value) AS STRING))"
+    " AS year_quarter",
+    "concat(CAST(year(date_value) AS STRING), '-W',"
+    " lpad(CAST(weekofyear(date_value) AS STRING), 2, '0')) AS year_week",
+    "year(date_value) % 4 = 0"
+    " AND (year(date_value) % 100 != 0 OR year(date_value) % 400 = 0) AS is_leap_year",
+    # Season + July-basis fiscal calendar + FAERS reporting period
+    # (dim_date.py:109-156 parity).
+    "CASE WHEN month(date_value) IN (12, 1, 2) THEN 'Winter'"
+    " WHEN month(date_value) IN (3, 4, 5) THEN 'Spring'"
+    " WHEN month(date_value) IN (6, 7, 8) THEN 'Summer'"
+    " ELSE 'Fall' END AS season",
+    "CASE WHEN month(date_value) >= 7 THEN year(date_value) + 1"
+    " ELSE year(date_value) END AS fiscal_year",
+    "CASE WHEN month(date_value) BETWEEN 7 AND 9 THEN 1"
+    " WHEN month(date_value) BETWEEN 10 AND 12 THEN 2"
+    " WHEN month(date_value) BETWEEN 1 AND 3 THEN 3"
+    " ELSE 4 END AS fiscal_quarter",
+    "CASE WHEN year(date_value) < 2010 THEN 'Pre-2010'"
+    " WHEN year(date_value) BETWEEN 2010 AND 2015 THEN '2010-2015'"
+    " WHEN year(date_value) BETWEEN 2016 AND 2020 THEN '2016-2020'"
+    " ELSE '2021+' END AS reporting_period",
+)
 
 
 def build_date_dim(
     spark: SparkSession, start: str = DEFAULT_START, end: str = DEFAULT_END
 ) -> DataFrame:
     """One row per calendar day in [start, end], with derived attributes."""
-    days = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.to_date(F.lit(start)),
-                F.to_date(F.lit(end)),
-                F.expr("interval 1 day"),
-            )
-        ).alias("date_value")
+    days = spark.range(1).selectExpr(
+        f"explode(sequence(to_date({sql_literal(start)}), to_date({sql_literal(end)}),"
+        " interval 1 day)) AS date_value"
     )
-    d = F.col("date_value")
-    iso_dow = F.weekday(d) + F.lit(1)  # ISO: Monday=1 ... Sunday=7
-    return days.select(
-        (F.year(d) * 10000 + F.month(d) * 100 + F.dayofmonth(d)).alias("date_key"),
-        d,
-        F.year(d).alias("year"),
-        F.quarter(d).alias("quarter"),
-        F.concat(F.lit("Q"), F.quarter(d).cast("string")).alias("quarter_name"),
-        F.month(d).alias("month"),
-        F.date_format(d, "MMMM").alias("month_name"),
-        F.date_format(d, "MMM").alias("month_short_name"),
-        F.dayofmonth(d).alias("day_of_month"),
-        F.dayofyear(d).alias("day_of_year"),
-        iso_dow.alias("iso_day_of_week"),
-        F.date_format(d, "EEEE").alias("day_name"),
-        F.date_format(d, "EEE").alias("day_short_name"),
-        F.weekofyear(d).alias("iso_week"),
-        F.date_format(d, "yyyy-MM-dd").alias("date_string"),
-        F.date_format(d, "yyyyMMdd").alias("date_string_compact"),
-        (iso_dow >= 6).alias("is_weekend"),
-        (iso_dow <= 5).alias("is_weekday"),
-        (F.dayofmonth(d) == 1).alias("is_month_start"),
-        (d == F.last_day(d)).alias("is_month_end"),
-        ((F.month(d) == 1) & (F.dayofmonth(d) == 1)).alias("is_year_start"),
-        ((F.month(d) == 12) & (F.dayofmonth(d) == 31)).alias("is_year_end"),
-        F.dayofmonth(F.last_day(d)).alias("days_in_month"),
-        (((F.dayofmonth(d) - 1) / 7).cast("int") + 1).alias("week_of_month"),
-        F.date_format(d, "yyyy-MM").alias("year_month"),
-        F.concat(F.year(d).cast("string"), F.lit("-Q"), F.quarter(d).cast("string")).alias(
-            "year_quarter"
-        ),
-        F.concat(
-            F.year(d).cast("string"),
-            F.lit("-W"),
-            F.lpad(F.weekofyear(d).cast("string"), 2, "0"),
-        ).alias("year_week"),
-        ((F.year(d) % 4 == 0) & ((F.year(d) % 100 != 0) | (F.year(d) % 400 == 0))).alias(
-            "is_leap_year"
-        ),
-        # Season + July-basis fiscal calendar + FAERS reporting period
-        # (dim_date.py:109-156 parity).
-        F.when(F.month(d).isin(12, 1, 2), "Winter")
-        .when(F.month(d).isin(3, 4, 5), "Spring")
-        .when(F.month(d).isin(6, 7, 8), "Summer")
-        .otherwise("Fall")
-        .alias("season"),
-        F.when(F.month(d) >= 7, F.year(d) + 1).otherwise(F.year(d)).alias(
-            "fiscal_year"
-        ),
-        F.when(F.month(d).between(7, 9), 1)
-        .when(F.month(d).between(10, 12), 2)
-        .when(F.month(d).between(1, 3), 3)
-        .otherwise(4)
-        .alias("fiscal_quarter"),
-        F.when(F.year(d) < 2010, "Pre-2010")
-        .when(F.year(d).between(2010, 2015), "2010-2015")
-        .when(F.year(d).between(2016, 2020), "2016-2020")
-        .otherwise("2021+")
-        .alias("reporting_period"),
-    )
+    return days.selectExpr(*_ATTRIBUTES)
 
 
 DATE_DIM_ORACLE_SQL = """

@@ -23,6 +23,7 @@ from ..functions.text import (
 )
 from ..functions.transforms import guarded_double
 from ..operators.scd2 import scd2_initial_load, scd2_merge
+from ..sources.tables import read_table
 
 def stream_scratch_dir(prefix: str) -> str:
     """Per-invocation scratch tree for a streaming entry (landing zone +
@@ -75,7 +76,7 @@ def scd2_scenario(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``% 13 == 0`` arrive as brand-new business keys. The output is the full
     dimension state — history row + new version for changed keys.
     """
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
         "c_mktsegment",
@@ -147,7 +148,7 @@ def date_standardize_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses ``try_to_date`` under the regex guards (ANSI-safe): 8-digit, 6-digit
     (→ first of month), 4-digit (→ Jan 1), junk/empty → NULL.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     m = F.col("o_orderkey") % 5
     raw = (
         F.when(m == 0, F.date_format("o_orderdate", "yyyyMMdd"))
@@ -204,7 +205,7 @@ ORDER BY o_orderkey
 
 def numeric_standardize_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex-guarded numeric cast over derived raw strings."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     m = F.col("o_orderkey") % 6
     raw = (
         F.when(m == 0, F.round(F.col("o_totalprice") * 100).cast("long").cast("string"))
@@ -246,7 +247,7 @@ ORDER BY o_orderkey
 
 
 def token_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         token_count("text", "whitespace").alias("n_ws_tokens"),
@@ -267,7 +268,7 @@ ORDER BY doc_id
 
 
 def text_quality_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     q = quality_score_cols(F.col("text"))
     return docs.select("doc_id", *[v.alias(k) for k, v in q.items()]).orderBy("doc_id")
 
@@ -312,7 +313,7 @@ ORDER BY doc_id
 
 
 def lang_id_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -344,7 +345,7 @@ ORDER BY doc_id
 
 def fingerprint_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix fingerprint + survivor per fingerprint group."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     fp = docs.select("doc_id", doc_fingerprint(F.col("text"), 8).alias("fingerprint"))
     return (
         fp.groupBy("fingerprint")
@@ -383,7 +384,7 @@ def mixture_weights_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     grouped = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count("text")).alias("n_tokens"),
@@ -431,7 +432,7 @@ def repetition_filter_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero shuffle: one codegen'd projection over the scan, then a sort for
     display — the 100 TB shape is scan → project → write.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     r = repetition_stats_cols(F.col("text"))
     keep = (
         (r["r_top_word_frac"] <= 0.15)
@@ -544,7 +545,7 @@ def multimodal_decode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.multimodal import decode_media, sample_frames
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     width = (F.col("n_chars") % 1000 + 16).cast("int")
     height = (F.col("doc_id") % 500 + 16).cast("int")
     n_frames = (F.col("n_chars") % 97 + 1).cast("int")
@@ -645,7 +646,7 @@ def corpus_curation_query(
     """
     from ..operators.dedup import _norm_text
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     q = quality_score_cols(F.col("text"))
     scored = docs.select(
         F.md5(_norm_text(F.col("text"))).alias("content_hash"),
@@ -808,8 +809,8 @@ def salted_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the salt must not change results, so the oracle is the plain join."""
     from ..operators.skew import salted_join
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
     joined = salted_join(orders, customer, on=["o_custkey"], n_salts=8)
@@ -855,7 +856,7 @@ def chunk_documents_query(
     """One row per (doc, chunk): overlapping token windows over documents."""
     from ..functions.text import chunk_tokens
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -905,7 +906,7 @@ def redact_pii_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself, not just its side effects)."""
     from ..functions.text import PII_PATTERNS, redact_pii
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     red = redact_pii("text")
     n_redacted = sum(
         (
@@ -949,7 +950,7 @@ def split_assign_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test assignment over documents + per-split profile."""
     from ..operators.sampling import deterministic_split
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         deterministic_split(docs, "doc_id")
         .groupBy("split")
@@ -986,7 +987,7 @@ def stratified_cap_query(spark: SparkSession, sf_dir: str, cap: int = 30) -> Dat
     selection so the oracle verifies membership, not just counts."""
     from ..operators.sampling import stratified_cap
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         stratified_cap(docs, ["lang"], "doc_id", cap)
         .select("lang", "doc_id")
@@ -1025,7 +1026,7 @@ def versioned_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1064,7 +1065,7 @@ def versioned_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1110,7 +1111,7 @@ def versioned_partition_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", (F.col("doc_id") % 7).alias("score")
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1165,7 +1166,7 @@ def versioned_restore_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1211,7 +1212,7 @@ def versioned_zorder_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") * 2654435761 % 251).alias("x"),
         (F.col("doc_id") * 40503 % 251).alias("y"),
@@ -1256,7 +1257,7 @@ def versioned_changes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1295,7 +1296,7 @@ def incremental_matview_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.matview import IncrementalMatView
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     root = f"/tmp/spark_graft_matview/{tag}"
     shutil.rmtree(root, ignore_errors=True)
@@ -1349,7 +1350,7 @@ def hll_registers_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.sketches import hll_sketch
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return hll_sketch(li, "l_orderkey", p=8).orderBy("bucket")
 
 
@@ -1391,7 +1392,7 @@ def cms_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.sketches import cms_build, cms_point
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     sketch = cms_build(orders, "o_orderpriority", depth=4, width=64)
     keys = orders.select("o_orderpriority").distinct()
     return (
@@ -1433,13 +1434,13 @@ def bloom_prefilter_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cores_used ≈ 1.1 over ~5 s here. The guard is a no-op on any
     # well-laid-out (multi-file) table.
     li = ensure_compute_parallelism(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_table(spark, sf_dir, "lineitem")
     )
     # guard AFTER the filter: guarding the raw read would put a
     # round-robin exchange below the priority predicate and destroy
     # its parquet pushdown
     urgent = ensure_compute_parallelism(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+        read_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
     )
@@ -1485,7 +1486,7 @@ def versioned_merge_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1527,7 +1528,7 @@ def versioned_skip_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -1631,7 +1632,7 @@ def expectations_audit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     real violations, not a vacuous all-pass."""
     from ..operators.expectations import audit
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return audit(orders, ORDER_EXPECTATIONS)
 
 
@@ -1642,7 +1643,7 @@ def quarantine_rows_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-skipping ``concat_ws`` DuckDB shares."""
     from ..operators.expectations import quarantine
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     _clean, dirty = quarantine(orders, ORDER_EXPECTATIONS)
     return dirty.select("o_orderkey", "failed_rules").orderBy("o_orderkey")
 
@@ -1686,7 +1687,7 @@ def systematic_sample_query(
     answer through a different physical plan, which is the point."""
     from ..operators.sampling import systematic_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )
     return systematic_sample(docs, "n_chars", step, "doc_id").orderBy("doc_id")
@@ -1723,10 +1724,10 @@ def triangle_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB."""
     from ..operators.graph import triangle_counts
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
@@ -1772,10 +1773,10 @@ def bucketed_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("li_bucketed_entry", "ord_bucketed_entry"):
         spark.sql(f"DROP TABLE IF EXISTS silver.{t}")
         shutil.rmtree(f"{wh}/silver.db/{t}", ignore_errors=True)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
     (
@@ -1957,7 +1958,7 @@ def versioned_bloom_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2005,7 +2006,7 @@ PQ_PARAMS = {"m_sub": 8, "k": 16, "iters": 1, "dims": 64}
 def _pq_models(spark: SparkSession, sf_dir: str):
     from ..operators.pq import pq_train
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return emb, pq_train(emb, **PQ_PARAMS)
 
 
@@ -2039,7 +2040,7 @@ def pq_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, the recall integers) re-derived by the oracle."""
     from ..operators.pq import pq_recall
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return pq_recall(emb, n_queries=8, topk=5, **PQ_PARAMS)
 
 
@@ -2060,7 +2061,7 @@ def versioned_mor_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2107,7 +2108,7 @@ def versioned_rename_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2154,7 +2155,7 @@ def pyds_pushdown_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import register
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2195,7 +2196,7 @@ def pyds_write_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.pyds import register
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2244,7 +2245,7 @@ def pyds_stream_tail_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import register
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2460,7 +2461,7 @@ def versioned_evolve_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source"
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2563,7 +2564,7 @@ def streaming_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(landing, exist_ok=True)
     stage_events(sf_dir, f"{landing}/part-0.parquet")
     stream = stream_events_from_dir(spark, landing)
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         "c_mktsegment",
     )
@@ -2622,7 +2623,7 @@ def streaming_scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.scd2 import scd2_streaming_sink
 
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
         "c_mktsegment",
@@ -2715,7 +2716,7 @@ def scd2_event_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranges import range_join
     from ..operators.scd2 import scd2_initial_load, scd2_merge
 
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     dim0 = scd2_initial_load(
@@ -2815,7 +2816,7 @@ def cdc_apply_seq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.versioned import VersionedTable
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("prio"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),

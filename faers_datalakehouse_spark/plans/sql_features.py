@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_table
+
 
 def sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-statement SQL script (Spark 4 SQL scripting): declare a
@@ -28,7 +30,7 @@ def sql_scripting_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents), then report per-priority volume above the threshold. The
     script's LAST statement is its result — the whole block runs inside
     Spark's SQL scripting interpreter, not Python glue."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_script_v"
     )
     return spark.sql(
@@ -75,7 +77,7 @@ def sql_variables_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session variables + EXECUTE IMMEDIATE with USING parameters: a
     parameterized top-N report where the group column arrives through
     IDENTIFIER() — the safe dynamic-SQL idiom (no string splicing)."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_vars_v"
     )
     spark.sql("DECLARE OR REPLACE VARIABLE report_top INT DEFAULT 3")
@@ -136,7 +138,7 @@ def recursive_cte_reach_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion's path multiset, depth guard identical (new hops =
     r.hops + 1 <= 5)."""
     for t in ("lineitem", "orders", "customer", "supplier"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(
+        read_table(spark, sf_dir, t).createOrReplaceTempView(
             f"{t}_rec_v"
         )
     edge_rows = spark.sql(
@@ -241,7 +243,7 @@ def pipe_syntax_trend_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage a pipe step. Same Catalyst plan as the nested form; this entry
     pins the parser surface. Revenue is exact integer cents, so the
     plain-SQL DuckDB twin hashes bit-for-bit."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "orders_pipe_v"
     )
     return spark.sql(
@@ -278,7 +280,7 @@ def observed_quality_query(spark: SparkSession, sf_dir: str):
     ``observed_quality_metrics`` exposes the observation for tests."""
     from pyspark.sql import Observation
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     obs = Observation("curation")
     metered = docs.observe(
         obs,
@@ -365,10 +367,10 @@ def lateral_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical plan is the scalable shape — this entry pins the PARSER
     surface, not a per-nation re-scan. Balance kept as exact cents so
     the DuckDB LATERAL twin hashes bit-for-bit."""
-    spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "nation").createOrReplaceTempView(
         "nation_lat_v"
     )
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "customer_lat_v"
     )
     return spark.sql(

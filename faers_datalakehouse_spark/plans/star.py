@@ -33,7 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.transforms import bucketize, decode_ladder
+from ..functions.transforms import (
+    bucketize,
+    bucketize_sql,
+    decode_ladder,
+    decode_ladder_sql,
+)
+from ..sources.tables import read_table
 from .date_dim import build_date_dim
 
 ORDER_PRIORITY_DECODE = {
@@ -63,13 +69,13 @@ def build_fact_sales(
     with_date_dim: bool = True,
 ) -> DataFrame:
     """Assemble the wide sales fact (one row per lineitem)."""
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
+    part = read_table(spark, sf_dir, "part")
+    supplier = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
 
     # J1/J2 — inner equi-joins fixing the grain (large side stays partitioned
     # on orderkey through the chain).
@@ -90,93 +96,87 @@ def build_fact_sales(
     # J7 — expression join to the generated date dimension:
     # to_date(o_orderdate) == date_value (Catalyst normalizes to an equi-join).
     if with_date_dim:
-        dd = build_date_dim(spark).select(
+        dd = build_date_dim(spark).selectExpr(
             "date_key",
             "date_value",
-            F.col("year").alias("order_year"),
-            F.col("quarter_name").alias("order_quarter"),
-            F.col("is_weekend").alias("ordered_on_weekend"),
+            "year AS order_year",
+            "quarter_name AS order_quarter",
+            "is_weekend AS ordered_on_weekend",
         )
         fact = fact.join(
             F.broadcast(dd), F.to_date(orders.o_orderdate) == dd.date_value, "left"
         )
 
-    # Scaled-integer money math: the testdata's money columns are exact
-    # 2-decimal values, so round(x*100)→BIGINT is exact and every derived
-    # measure below is integer arithmetic divided back to double at the end —
-    # order-independent and engine-identical (see analytics.py module doc).
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_pct = F.round(F.col("l_discount") * 100).cast("long")
-    tax_pct = F.round(F.col("l_tax") * 100).cast("long")
-    qty = F.round(F.col("l_quantity")).cast("long")
-    revenue = (price_c * (100 - disc_pct)).cast("double") / 10000.0
-    charge = (price_c * (100 - disc_pct) * (100 + tax_pct)).cast("double") / 1000000.0
-    discount_amt = (price_c * disc_pct).cast("double") / 10000.0
-    # Weighted composite score (clinical_risk_score analog,
-    # fact_adverse_events.py:288-295): deterministic integer arithmetic.
-    sales_score = (
-        disc_pct * 4 + tax_pct * 3 + F.least(qty * 2, F.lit(100)) * 3
-    ).cast("double") / 100.0
-
-    cols = [
-        F.col("l_orderkey").alias("order_key"),
-        F.col("l_linenumber").alias("line_number"),
-        F.col("l_partkey").alias("part_key"),
-        F.col("l_suppkey").alias("supp_key"),
-        F.col("o_custkey").alias("cust_key"),
-        F.to_date("o_orderdate").alias("order_date"),
-        F.to_date("l_shipdate").alias("ship_date"),
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).alias("ship_delay_days"),
-        # Decimal casts of RAW 2dp doubles (measure-cast parity,
-        # fact_adverse_events.py:204-222), round-tripped back to DOUBLE for
-        # the driver-compared projection: Spark surfaces DECIMAL as
-        # decimal.Decimal while DuckDB's client lands float64, so the hash
-        # diverges on encoding even when values match. The round-trip is
-        # exact for 2dp/4dp-valued sources.
-        F.col("l_quantity").cast("decimal(8,2)").cast("double").alias("quantity"),
-        F.col("l_extendedprice")
-        .cast("decimal(18,2)")
-        .cast("double")
-        .alias("extended_price"),
-        F.col("l_discount").cast("decimal(5,4)").cast("double").alias("discount_rate"),
-        F.col("l_tax").cast("decimal(5,4)").cast("double").alias("tax_rate"),
-        revenue.alias("revenue"),
-        charge.alias("charge"),
-        discount_amt.alias("discount_amount"),
-        sales_score.alias("sales_score"),
-        decode_ladder("l_returnflag", RETURN_FLAG_DECODE).alias("return_status"),
-        F.col("l_linestatus").alias("line_status"),
-        decode_ladder("o_orderstatus", ORDER_STATUS_DECODE).alias("order_status"),
-        decode_ladder("o_orderpriority", ORDER_PRIORITY_DECODE).alias("priority_tier"),
-        F.coalesce(F.col("c_name"), F.lit("UNKNOWN")).alias("customer_name"),
-        decode_ladder("c_mktsegment", MKTSEGMENT_DECODE).alias("market_segment"),
-        bucketize(
-            "c_acctbal",
-            [0.0, 1000.0, 5000.0],
-            ["Delinquent", "Low", "Medium", "High"],
-        ).alias("account_tier"),
-        F.coalesce(F.col("p_name"), F.lit("UNKNOWN PART")).alias("part_name"),
-        F.coalesce(F.col("p_brand"), F.lit("UNKNOWN")).alias("part_brand"),
-        F.coalesce(F.col("s_name"), F.lit("UNKNOWN SUPPLIER")).alias("supplier_name"),
-        F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("customer_nation"),
-        F.coalesce(F.col("r_name"), F.lit("UNKNOWN")).alias("customer_region"),
-        # Data-quality tier ladder (fact_adverse_events.py:268-281 analog).
-        F.when(
-            F.col("p_partkey").isNotNull() & F.col("s_suppkey").isNotNull(),
-            F.lit("Complete"),
-        )
-        .when(F.col("p_partkey").isNotNull(), F.lit("Partial"))
-        .otherwise(F.lit("Minimal"))
-        .alias("data_quality_tier"),
-    ]
+    cols = list(_FACT_COLUMNS)
     if with_date_dim:
         cols += [
-            F.col("date_key").alias("order_date_key"),
-            F.col("order_year"),
-            F.col("order_quarter"),
-            F.col("ordered_on_weekend"),
+            "date_key AS order_date_key",
+            "order_year",
+            "order_quarter",
+            "ordered_on_weekend",
         ]
-    return fact.select(*cols)
+    # one selectExpr: SQL text costs one parse per column, where the same
+    # projection in the Column API costs a few JVM round trips per node
+    return fact.selectExpr(*cols)
+
+
+# Scaled-integer money math: the testdata's money columns are exact
+# 2-decimal values, so round(x*100)→BIGINT is exact and every derived
+# measure below is integer arithmetic divided back to double at the end —
+# order-independent and engine-identical (see analytics.py module doc).
+# The D suffix keeps the divisors DOUBLE (a bare 10000.0 parses as DECIMAL).
+_PRICE_C = "CAST(round(l_extendedprice * 100) AS BIGINT)"
+_DISC_PCT = "CAST(round(l_discount * 100) AS BIGINT)"
+_TAX_PCT = "CAST(round(l_tax * 100) AS BIGINT)"
+_QTY = "CAST(round(l_quantity) AS BIGINT)"
+
+_FACT_COLUMNS = (
+    "l_orderkey AS order_key",
+    "l_linenumber AS line_number",
+    "l_partkey AS part_key",
+    "l_suppkey AS supp_key",
+    "o_custkey AS cust_key",
+    "to_date(o_orderdate) AS order_date",
+    "to_date(l_shipdate) AS ship_date",
+    "datediff(l_shipdate, o_orderdate) AS ship_delay_days",
+    # Decimal casts of RAW 2dp doubles (measure-cast parity,
+    # fact_adverse_events.py:204-222), round-tripped back to DOUBLE for
+    # the driver-compared projection: Spark surfaces DECIMAL as
+    # decimal.Decimal while DuckDB's client lands float64, so the hash
+    # diverges on encoding even when values match. The round-trip is
+    # exact for 2dp/4dp-valued sources.
+    "CAST(CAST(l_quantity AS DECIMAL(8,2)) AS DOUBLE) AS quantity",
+    "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS extended_price",
+    "CAST(CAST(l_discount AS DECIMAL(5,4)) AS DOUBLE) AS discount_rate",
+    "CAST(CAST(l_tax AS DECIMAL(5,4)) AS DOUBLE) AS tax_rate",
+    f"CAST({_PRICE_C} * (100 - {_DISC_PCT}) AS DOUBLE) / 10000.0D AS revenue",
+    f"CAST({_PRICE_C} * (100 - {_DISC_PCT}) * ({_TAX_PCT} + 100) AS DOUBLE)"
+    " / 1000000.0D AS charge",
+    f"CAST({_PRICE_C} * {_DISC_PCT} AS DOUBLE) / 10000.0D AS discount_amount",
+    # Weighted composite score (clinical_risk_score analog,
+    # fact_adverse_events.py:288-295): deterministic integer arithmetic.
+    f"CAST({_DISC_PCT} * 4 + {_TAX_PCT} * 3 + least({_QTY} * 2, 100) * 3 AS DOUBLE)"
+    " / 100.0D AS sales_score",
+    decode_ladder_sql("l_returnflag", RETURN_FLAG_DECODE) + " AS return_status",
+    "l_linestatus AS line_status",
+    decode_ladder_sql("o_orderstatus", ORDER_STATUS_DECODE) + " AS order_status",
+    decode_ladder_sql("o_orderpriority", ORDER_PRIORITY_DECODE) + " AS priority_tier",
+    "coalesce(c_name, 'UNKNOWN') AS customer_name",
+    decode_ladder_sql("c_mktsegment", MKTSEGMENT_DECODE) + " AS market_segment",
+    bucketize_sql(
+        "c_acctbal", [0.0, 1000.0, 5000.0], ["Delinquent", "Low", "Medium", "High"]
+    )
+    + " AS account_tier",
+    "coalesce(p_name, 'UNKNOWN PART') AS part_name",
+    "coalesce(p_brand, 'UNKNOWN') AS part_brand",
+    "coalesce(s_name, 'UNKNOWN SUPPLIER') AS supplier_name",
+    "coalesce(n_name, 'UNKNOWN') AS customer_nation",
+    "coalesce(r_name, 'UNKNOWN') AS customer_region",
+    # Data-quality tier ladder (fact_adverse_events.py:268-281 analog).
+    "CASE WHEN p_partkey IS NOT NULL AND s_suppkey IS NOT NULL THEN 'Complete'"
+    " WHEN p_partkey IS NOT NULL THEN 'Partial' ELSE 'Minimal' END"
+    " AS data_quality_tier",
+)
 
 
 FACT_SALES_ORACLE_SQL = """
@@ -256,8 +256,8 @@ LEFT JOIN date_dim dd ON CAST(o.o_orderdate AS DATE) = dd.date_value
 
 def decode_ladders_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4/§2.7 conditional showcase: decode + bucket orders×customer."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     joined = orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
     return joined.select(
         F.col("o_orderkey").alias("order_key"),

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.text import token_count
 from ..operators.dedup import _md5_hash64
 from ..operators.sampling import _hash_bucket
+from ..sources.tables import read_table
 
 TERM_RE = "[a-z0-9]+"
 
@@ -40,7 +41,7 @@ def vocab_stats_query(
     materialization). Ties at the cut are broken lexicographically so the
     result set is deterministic.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", F.explode(_terms("text")).alias("term"))
         .groupBy("term")
@@ -81,7 +82,7 @@ def bpe_pair_counts_query(
     sequence [1, 0] (Spark's sequence reverses when start > stop), not an
     empty list.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(_terms("text")).alias("w")).filter(
         F.length("w") >= 2
     )
@@ -134,7 +135,7 @@ def pack_sequences_query(
     sharded layout is how packing actually runs (each dataloader shard
     packs independently), and each shard's window sorts only its slice.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         _hash_bucket(F.col("doc_id"), n_shards).alias("shard_id"),
@@ -199,7 +200,7 @@ def shard_manifest_query(
     text-only fold verifies a shard whose ids and texts were MISPAIRED,
     and any swap of two equal-text hashes XOR-cancels invisibly.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select(
             _hash_bucket(F.col("doc_id"), n_shards).alias("shard_id"),
@@ -280,7 +281,7 @@ def interleave_sources_query(
     weights = weights or {
         "src0": 5, "src1": 3, "src2": 2, "src3": 1, "src4": 1
     }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     wdf = F.broadcast(
         spark.createDataFrame(
             sorted(weights.items()), "source string, weight long"
@@ -366,7 +367,7 @@ def proportional_split_query(
     Returns per-doc assignments (doc_id, stratum, split) — the artifact
     a training job joins against.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy(strata_col).orderBy(
         _md5_hash64(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -434,7 +435,7 @@ def vocab_coverage_query(
     """
     from ..operators.collocations import _words
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.explode(_words(F.col("text"))).alias("w")
     ).filter(F.col("w") != "")

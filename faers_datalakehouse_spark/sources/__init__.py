@@ -5,8 +5,8 @@ from .catalog import (
     write_append_partitioned,
     write_overwrite,
 )
-from .ingest import add_ingestion_metadata, read_csv_enforced, read_table
-from .tables import TPCH_TABLES, load_tables, register_views
+from .ingest import add_ingestion_metadata, read_csv_enforced
+from .tables import TPCH_TABLES, load_tables, read_table, register_views
 
 __all__ = [
     "TPCH_TABLES",

@@ -71,11 +71,6 @@ def add_ingestion_metadata(
     )
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan of one testdata table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def documents_schema(
     text_col: str = "text", id_col: str = "doc_id"
 ) -> T.StructType:

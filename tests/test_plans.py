@@ -92,33 +92,18 @@ def test_read_events_normalizes_current_testdata(spark, sf_dir):
 
 
 @pytest.mark.parametrize("encoding", ["ts_us_utc", "ts_us_ntz", "ts_nanos"])
-def test_read_events_ts_encodings_equivalent(spark, sf_dir, tmp_path, encoding):
+def test_read_events_ts_encodings_equivalent(
+    spark, sf_dir, events_with_ts_encoding, encoding
+):
     """The driver's testdata has shipped events.ts as parquet TIMESTAMP(NANOS)
     (r1) and as timestamp[us] isAdjustedToUTC=false / TIMESTAMP_NTZ (r3).
     Pin all three observed encodings: read_events must surface a plain
     session-zoned TIMESTAMP and sessionize must produce identical output."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    d = events_with_ts_encoding(encoding)
 
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    idx = t.schema.get_field_index("ts")
-    ts_us_ntz = t.column(idx).cast(pa.timestamp("us"))
-    if encoding == "ts_us_ntz":
-        ts = ts_us_ntz
-    elif encoding == "ts_us_utc":
-        ts = ts_us_ntz.cast(pa.timestamp("us", tz="UTC"))
-    else:
-        ts = ts_us_ntz.cast(pa.timestamp("ns"))
-    t = t.set_column(idx, pa.field("ts", ts.type), ts)
-    d = tmp_path / encoding
-    d.mkdir()
-    # version=2.6 keeps nanos as parquet TIMESTAMP(NANOS) instead of
-    # silently coercing to micros
-    pq.write_table(t, d / "events.parquet", version="2.6")
-
-    ev = read_events(spark, str(d))
+    ev = read_events(spark, d)
     assert dict(ev.dtypes)["ts"] == "timestamp"
-    got = sessionize(spark, str(d), gap_minutes=30).collect()
+    got = sessionize(spark, d, gap_minutes=30).collect()
     want = sessionize(spark, sf_dir, gap_minutes=30).collect()
     assert got == want
 

@@ -7,7 +7,8 @@ touches). Every consumer must route through it — r9 ADVICE item 4 fixed
 stattests/subsample, r10 VERDICT flagged the last straggler in
 plans/showcase.py. This pin keeps the class closed: a new raw
 ``read.parquet(.../events.parquet)`` site fails here, not three rounds
-later when the encoding drifts again.
+later when the encoding drifts again. The same holds for every testdata
+table: ``sources.tables.read_table`` is the one read path.
 """
 
 from __future__ import annotations
@@ -41,6 +42,27 @@ def test_no_raw_events_parquet_reads_outside_tables():
     assert not offenders, (
         "raw events.parquet batch reads must go through "
         "sources.tables.read_events:\n" + "\n".join(offenders)
+    )
+
+
+# Batch read of a testdata table by path. ``sources.tables.read_table`` is
+# the one read path: it remembers each file's schema, so a raw read
+# elsewhere re-runs a schema-inference job on every plan build.
+_RAW_TABLE_READ = re.compile(r"read\.parquet\(\s*f[\"']\{sf_dir\}/")
+
+
+def test_no_raw_testdata_reads_outside_sources():
+    offenders = []
+    for path in list(PKG.rglob("*.py")) + [REPO / "__spark_entry__.py"]:
+        if path.parent.name == "sources":
+            continue
+        text = path.read_text()
+        for m in _RAW_TABLE_READ.finditer(text):
+            lineno = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{path}:{lineno}: {text.splitlines()[lineno - 1].strip()}")
+    assert not offenders, (
+        "testdata tables must be read through "
+        "sources.tables.read_table:\n" + "\n".join(offenders)
     )
 
 

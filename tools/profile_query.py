@@ -1,7 +1,10 @@
 """Per-query profiler for the optimization rounds (guide §1).
 
 For each named bench query (or entry-map key) this times, separately:
-  - build:    Python plan construction (the ``fn(spark, sf_dir)`` call)
+  - build:    Python plan construction (the ``fn(spark, sf_dir)`` call),
+              and counts the Python→JVM (py4j) commands it sends
+              (``py4j_calls``: a count that repeats exactly run to run,
+              unlike build time)
   - action:   the bench's own action (collect/count) — what BENCH_r*.json
               times — plus a noop-sink run (full-column materialization,
               guide §1.4) so column-pruning artifacts are visible
@@ -23,7 +26,7 @@ import json
 import sys
 import time
 import uuid
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -42,6 +45,29 @@ def formatted_plan(df) -> str:
     return buf.getvalue()
 
 
+@contextmanager
+def count_py4j(spark):
+    """Count the py4j commands the driver sends while the block runs, by
+    wrapping ``GatewayClient.send_command`` for its duration only. Yields a
+    one-element list holding the count. Object deletes (``m\nd\n``) are not
+    counted: py4j's finalizer thread sends them whenever Python's garbage
+    collector runs, so they would make the count vary run to run."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    count = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            count[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield count
+    finally:
+        del client.send_command  # back to the class method
+
+
 def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -51,11 +77,13 @@ def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
     getattr(df, "count" if action == "count" else "collect")()
     spark.catalog.clearCache()
 
-    builds, actions, noops, jobs = [], [], [], []
+    builds, actions, noops, jobs, calls = [], [], [], [], []
     for _ in range(runs):
-        t0 = time.time()
-        df = queries[key](spark, SF_DIR)
-        t1 = time.time()
+        with count_py4j(spark) as n_calls:
+            t0 = time.time()
+            df = queries[key](spark, SF_DIR)
+            t1 = time.time()
+        calls.append(n_calls[0])
         # a group per timed action: a length delta over all job ids goes
         # negative once Spark's job retention drops old ids
         group = f"profile:{key}:{uuid.uuid4().hex}"
@@ -76,6 +104,7 @@ def profile(spark, queries, key: str, action: str, runs: int, plan_tag):
         noops.append(t4 - t3)
         jobs.append(n_jobs)
     out["build_s"] = round(sorted(builds)[len(builds) // 2], 3)
+    out["py4j_calls"] = sorted(calls)[len(calls) // 2]
     out["action_s"] = round(sorted(actions)[len(actions) // 2], 3)
     out["noop_s"] = round(sorted(noops)[len(noops) // 2], 3)
     out["n_jobs"] = jobs[len(jobs) // 2]
