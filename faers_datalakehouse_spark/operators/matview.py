@@ -209,13 +209,13 @@ class IncrementalMatView:
             F.col("_bucket").isin(affected)  # partition-pruned scan
         )
         merged = self._merge(old.unionByName(partials))
-        with _dynamic_overwrite(spark):
-            (
-                merged.repartition("_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(self.path)
-            )
+        (
+            merged.repartition("_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(self.path)
+        )
         return {
             "buckets_touched": len(affected),
             "buckets_total": self.n_buckets,
@@ -249,13 +249,13 @@ class IncrementalMatView:
 
         before = n_files()
         state = spark.read.parquet(self.path)
-        with _dynamic_overwrite(spark):
-            (
-                state.repartition(self.n_buckets, "_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(self.path)
-            )
+        (
+            state.repartition(self.n_buckets, "_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(self.path)
+        )
         return {"files_before": before, "files_after": n_files()}
 
     def streaming_sink(self, stream_df: DataFrame, checkpoint: str):
@@ -279,20 +279,3 @@ class IncrementalMatView:
             .foreachBatch(lambda b, _id: self.refresh_changes(b))
         )
 
-
-class _dynamic_overwrite:
-    """Scoped ``partitionOverwriteMode=dynamic``: only partitions present
-    in the written frame are replaced; untouched bucket directories keep
-    their files byte-identical."""
-
-    KEY = "spark.sql.sources.partitionOverwriteMode"
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.KEY, "static")
-        self.spark.conf.set(self.KEY, "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.KEY, self.prev)

@@ -33,35 +33,26 @@ from pyspark.sql import functions as F
 from ..sources.tables import read_table
 
 
+# Scanned-input bytes at which ``bucketed_global_rank`` checkpoints an
+# aggregate input; see ``_auto_materialize``.
+RANK_MATERIALIZE_BYTES = 8 * 1024**3
+
+
 def _auto_materialize(df: DataFrame) -> bool:
     """Size-aware input materialization policy for the rank primitive
     (VERDICT r12 item 3). True when the input should be eagerly
     checkpointed before the two consumers (bucket counts + final join)
     re-derive it: its optimized plan re-runs an AGGREGATE over at least
-    ``spark.graft.rank.materialize.bytes`` of scanned input — that
-    duplicated branch is a corpus pass at cluster scale — and it is not
-    already materialized (checkpointed RDD / cached relation) or a
-    plain scan (re-scanning parquet is the cheapest recompute; copying
-    the corpus into a checkpoint to avoid it is a loss).
+    ``RANK_MATERIALIZE_BYTES`` of scanned input — that duplicated
+    branch is a corpus pass at cluster scale — and it is not already
+    materialized (checkpointed RDD / cached relation) or a plain scan
+    (re-scanning parquet is the cheapest recompute; copying the corpus
+    into a checkpoint to avoid it is a loss).
 
-    The threshold defaults to 8 GiB, a deliberate no-op at bench scale:
-    the r12 persist A/B measured the synchronous materialization
-    barrier regressing every light consumer at sf0.1 (q127_theil_sen
-    0.53 -> 3.44 s), and sf0.1 / the 5x scale probe scan ~1e8-1e9 B.
-    Production tuning: set the conf to ~2-4x executor-aggregate memory
-    so only genuinely corpus-sized aggregate inputs pay one checkpoint
-    instead of two derivations."""
-    spark = df.sparkSession
-    try:
-        thresh = int(
-            spark.conf.get(
-                "spark.graft.rank.materialize.bytes", str(8 * 1024**3)
-            )
-        )
-    except ValueError:
-        return False
-    if thresh <= 0:
-        return False
+    The threshold is 8 GiB, a deliberate no-op at bench scale: the r12
+    persist A/B measured the synchronous materialization barrier
+    regressing every light consumer at sf0.1 (q127_theil_sen
+    0.53 -> 3.44 s), and sf0.1 / the 5x scale probe scan ~1e8-1e9 B."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         tree = plan.treeString()
@@ -76,7 +67,7 @@ def _auto_materialize(df: DataFrame) -> bool:
             # py4j maps scala BigInt to int when it fits; fall back to
             # the string form for the Long.MaxValue-ish defaults
             total += size if isinstance(size, int) else int(size.toString())
-        return total >= thresh
+        return total >= RANK_MATERIALIZE_BYTES
     except Exception:  # noqa: BLE001 — introspection must never break the query
         return False
 

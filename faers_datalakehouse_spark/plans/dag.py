@@ -98,22 +98,14 @@ class PipelineDAG:
             raise ValueError(f"dependency cycle involving: {stuck}")
         return order
 
-    def run(
-        self, spark: SparkSession, fail_fast: bool = False
-    ) -> dict[str, TaskResult]:
+    def run(self, spark: SparkSession) -> dict[str, TaskResult]:
         """Execute all tasks; returns per-task results in execution order.
 
-        ``fail_fast=False`` (default, the reference scheduler's behavior):
-        a failure marks its descendants ``skipped`` but sibling branches
-        still run. ``fail_fast=True`` stops the whole run at the first
-        failure (remaining tasks recorded ``skipped``).
+        A failure marks its descendants ``skipped`` but sibling branches
+        still run (the reference scheduler's behavior).
         """
         results: dict[str, TaskResult] = {}
-        stop = False
         for t in self._order:
-            if stop:
-                results[t.name] = TaskResult("skipped", blocked_by="fail_fast")
-                continue
             bad = next(
                 (d for d in t.depends_on if results[d].status != "ok"), None
             )
@@ -134,8 +126,6 @@ class PipelineDAG:
                     exception=e,
                     traceback=_tb.format_exc(),
                 )
-                if fail_fast:
-                    stop = True
         return results
 
 

@@ -12,9 +12,9 @@ atomic; the honest equivalent is **partition-granularity** compaction:
   projection, no data columns read);
 - pick only the partitions whose file count exceeds what
   ``target_file_bytes`` implies for their data volume;
-- rewrite *just those partitions* with dynamic partition overwrite
-  (``spark.sql.sources.partitionOverwriteMode=dynamic``), coalesced to the
-  target file count. Already-compact partitions are not rewritten and keep
+- rewrite *just those partitions*, each with an ``INSERT OVERWRITE``
+  under a fully static partition spec, repartitioned to the target file
+  count. Already-compact partitions are not rewritten and keep
   their physical files byte-identical.
 
 Unpartitioned tables compact as a single "partition" (full rewrite, but
@@ -37,6 +37,8 @@ import math
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.transforms import sql_literal
 
 
 def file_inventory(spark: SparkSession, table: str):
@@ -72,8 +74,10 @@ def compact_table(
     physically untouched (verified by tests via ``_metadata.file_path``).
     """
     inv, part_cols = file_inventory(spark, table)
+    # partition values as Spark renders them: a collected timestamp
+    # would come back converted to the Python process's zone
     per_part = (
-        inv.groupBy(*part_cols)
+        inv.groupBy(*(F.col(c).cast("string").alias(c) for c in part_cols))
         .agg(
             F.count(F.lit(1)).alias("n_files"),
             F.sum("file_size").alias("bytes"),
@@ -98,24 +102,35 @@ def compact_table(
             "files_after": files_before,
         }
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for r, n_target in fragmented:
-            rows = spark.table(table)
-            for c in part_cols:
-                # null-safe: a partition value can legitimately be NULL
-                rows = rows.filter(F.col(c).eqNullSafe(F.lit(r[c])))
-            # localCheckpoint before the overwrite: (a) Spark refuses plans
-            # that read and overwrite the same table, so the lineage must
-            # be cut to an RDD scan first; (b) it pins the partition's rows
-            # before its files are replaced. Partition-sized state, not
-            # table-sized; a cluster deployment with executor loss risk
-            # would use a reliable checkpoint dir instead.
-            rows = rows.repartition(n_target).localCheckpoint()
+    data_cols = ", ".join(
+        f"`{c}`" for c in spark.table(table).columns if c not in part_cols
+    )
+    for r, n_target in fragmented:
+        rows = spark.table(table)
+        for c in part_cols:
+            # null-safe: a partition value can legitimately be NULL
+            rows = rows.filter(F.col(c).cast("string").eqNullSafe(r[c]))
+        # localCheckpoint before the overwrite: (a) Spark refuses plans
+        # that read and overwrite the same table, so the lineage must be
+        # cut to an RDD scan first; (b) it pins the partition's rows
+        # before its files are replaced. Partition-sized state, not
+        # table-sized; a cluster deployment with executor loss risk would
+        # use a reliable checkpoint dir instead.
+        rows = rows.repartition(n_target).localCheckpoint()
+        if not part_cols:
             rows.write.mode("overwrite").insertInto(table)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            continue
+        # a fully static partition spec replaces exactly this partition
+        # whatever partitionOverwriteMode the session holds
+        spec = ", ".join(
+            f"`{c}` = " + ("NULL" if r[c] is None else sql_literal(r[c]))
+            for c in part_cols
+        )
+        spark.sql(
+            f"INSERT OVERWRITE TABLE {table} PARTITION ({spec}) "
+            f"SELECT {data_cols} FROM {{rows}}",
+            rows=rows,
+        )
 
     if analyze:
         spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")

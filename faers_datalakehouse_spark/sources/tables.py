@@ -13,6 +13,8 @@ schema-inference job.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -136,25 +138,37 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table with ``ts`` normalized to a microsecond TIMESTAMP."""
-    # TIMESTAMP(NANOS) must surface as LONG nanos. Every get_spark() session
-    # already reads it so; any other session gets the conf for this read
-    # only and has its prior value RESTORED afterwards (the conf is captured
-    # by this relation at analysis; leaving it set would silently change how
-    # every OTHER parquet read in the session surfaces TIMESTAMP(NANOS))
+@contextmanager
+def nanos_as_long(spark: SparkSession) -> Iterator[None]:
+    """Scope in which parquet TIMESTAMP(NANOS) infers as LONG nanos.
+
+    Only footer inference needs the conf: a read given an explicit
+    ``bigint`` schema decodes the column without it. Every ``get_spark()``
+    session already holds ``"true"``, so this is a no-op there; any other
+    session gets the conf for the block only and has its prior value
+    RESTORED afterwards (leaving it set would silently change how every
+    OTHER parquet read in the session surfaces TIMESTAMP(NANOS))."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(key, None)
     if prev == "true":
-        return normalize_event_ts(read_table(spark, sf_dir, "events"))
+        yield
+        return
     spark.conf.set(key, "true")
     try:
-        df = read_table(spark, sf_dir, "events")
+        yield
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events table with ``ts`` normalized to a microsecond TIMESTAMP."""
+    # the conf is captured by this relation at analysis, so the window
+    # need only cover the read
+    with nanos_as_long(spark):
+        df = read_table(spark, sf_dir, "events")
     return normalize_event_ts(df)
 
 

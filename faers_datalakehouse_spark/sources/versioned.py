@@ -389,13 +389,14 @@ class VersionedTable:
         reconstructs the partition columns from the ``col=value``
         directory names of exactly the listed files, so manifest-level
         pruning still works (only kept files are passed). Partition
-        TYPE INFERENCE is disabled for the read: values surface in the
-        directory-name string encoding the manifest itself records, and
-        are cast to the generation's recorded types — the identical
-        cast the previous literal-per-tuple form applied, without its
-        one-union-branch-per-distinct-tuple plan (34 relations in the
-        versioned_evolve bench entry; at day/region-grained
-        partitioning that shape is a driver-side planning blowup).
+        columns are read with an explicit ``string`` type: values
+        surface in the directory-name string encoding the manifest
+        itself records, and are cast to the generation's recorded
+        types — the identical cast the previous literal-per-tuple form
+        applied, without its one-union-branch-per-distinct-tuple plan
+        (34 relations in the versioned_evolve bench entry; at
+        day/region-grained partitioning that shape is a driver-side
+        planning blowup).
         Column order is restored from the snapshot schema when
         recorded.
 
@@ -412,31 +413,33 @@ class VersionedTable:
         where a file lacks it), and physical columns that map to no
         logical name (dropped columns) are projected away."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         lineage = bool(deletes) or keep_lineage
 
-        _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
-
-        def _scan(paths: list[str], base_path: str | None = None) -> DataFrame:
-            reader = spark.read.option("mergeSchema", "true")
+        def _scan(
+            paths: list[str],
+            base_path: str | None = None,
+            pcols: tuple[str, ...] = (),
+        ) -> DataFrame:
+            df = spark.read.option("mergeSchema", "true").parquet(*paths)
             if base_path is not None:
-                # inference off: partition values must surface as the
+                # partition columns typed string: values surface as the
                 # raw directory-name strings (the manifest's own
                 # encoding) so the recorded-type cast below reproduces
-                # the literal form exactly ("01" must not become 1).
-                # Partition discovery is eager (resolveRelation), so
-                # the set/restore window is sufficient.
-                prev = spark.conf.get(_INFER_KEY, None)
-                spark.conf.set(_INFER_KEY, "false")
-                try:
-                    df = reader.option("basePath", base_path).parquet(*paths)
-                finally:
-                    if prev is None:
-                        spark.conf.unset(_INFER_KEY)
-                    else:
-                        spark.conf.set(_INFER_KEY, prev)
-            else:
-                df = reader.parquet(*paths)
+                # the literal form exactly ("01" must not become 1),
+                # whatever the session's type-inference conf holds. The
+                # data columns come from the read above, which names
+                # files, not a basePath, so discovers no partitions.
+                schema = T.StructType(
+                    df.schema.fields
+                    + [T.StructField(c, T.StringType()) for c in pcols]
+                )
+                df = (
+                    spark.read.schema(schema)
+                    .option("basePath", base_path)
+                    .parquet(*paths)
+                )
             if lineage:
                 # _metadata must be projected off the scan relation
                 # itself (it does not survive joins/aggregations)
@@ -483,7 +486,7 @@ class VersionedTable:
                     parts.append(_scan(paths))
                     continue
                 types = {**fallback, **dict(ptypes)}
-                part = _scan(paths, base_path=str(self.root / prefix))
+                part = _scan(paths, str(self.root / prefix), pcols)
                 for c in pcols:
                     if c in types:
                         part = part.withColumn(

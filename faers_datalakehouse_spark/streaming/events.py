@@ -65,11 +65,11 @@ def stream_events_from_dir(spark: SparkSession, dir_path: str) -> DataFrame:
     """
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    from ..sources.tables import normalize_event_ts
+    from ..sources.tables import nanos_as_long, normalize_event_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        schema = spark.read.parquet(dir_path).schema
+        with nanos_as_long(spark):
+            schema = spark.read.parquet(dir_path).schema
     except AnalysisException:
         schema = DEFAULT_EVENTS_SCHEMA
     raw = (
@@ -212,34 +212,30 @@ def streaming_funnel_sink(
         spark = batch.sparkSession
         # replay-idempotent landing: foreachBatch is at-least-once, and a
         # plain append would duplicate the batch on restart-after-partial-
-        # failure; partitioning by batch id + dynamic partition overwrite
+        # failure; partitioning by batch id + a static-partition overwrite
         # makes a replay rewrite ITS OWN partition, byte-equivalent
-        stamped = batch.withColumn("_batch_id", F.lit(batch_id))
         if not spark.catalog.tableExists(landing_table):
             (
-                stamped.write.partitionBy("_batch_id")
+                batch.withColumn("_batch_id", F.lit(batch_id))
+                .write.partitionBy("_batch_id")
                 .saveAsTable(landing_table)
             )
         else:
-            # insertInto (NOT saveAsTable: overwrite there replaces the
-            # whole table) honors dynamic partition overwrite, so a
-            # replay rewrites only its own _batch_id partition;
+            # a fully static partition spec replaces exactly this batch's
+            # partition whatever partitionOverwriteMode the session holds
+            # (a writer option on insertInto is ignored); the SELECT is
             # position-based, so project into the table's column order
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+            cols = ", ".join(
+                f"`{c}`"
+                for c in spark.table(landing_table).columns
+                if c != "_batch_id"
             )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
+            spark.sql(
+                f"INSERT OVERWRITE TABLE {landing_table} "
+                f"PARTITION (_batch_id = {int(batch_id)}) "
+                f"SELECT {cols} FROM {{rows}}",
+                rows=batch,
             )
-            try:
-                cols = spark.table(landing_table).columns
-                stamped.select(*cols).write.mode("overwrite").insertInto(
-                    landing_table
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
         result = funnel_over(
             spark.table(landing_table).drop("_batch_id"), steps
         )

@@ -68,18 +68,6 @@ def test_failure_isolation_skips_descendants_only():
     assert r["s1"].status == "ok"
 
 
-def test_fail_fast_stops_everything():
-    log: list[str] = []
-    dag = PipelineDAG(
-        [_t("a", log, fail=True), _t("b", log), _t("c", log, deps=["b"])]
-    )
-    r = dag.run(spark=None, fail_fast=True)
-    assert log == []
-    assert r["a"].status == "failed"
-    assert r["b"].status == "skipped" and r["b"].blocked_by == "fail_fast"
-    assert r["c"].status == "skipped"
-
-
 def test_dag_from_config_binds_known_kwargs_only():
     seen = {}
 

@@ -8,7 +8,8 @@ stattests/subsample, r10 VERDICT flagged the last straggler in
 plans/showcase.py. This pin keeps the class closed: a new raw
 ``read.parquet(.../events.parquet)`` site fails here, not three rounds
 later when the encoding drifts again. The same holds for every testdata
-table: ``sources.tables.read_table`` is the one read path.
+table: ``sources.tables.read_table`` is the one read path. Runtime
+session-conf writes are pinned to ``session.py`` and two named helpers.
 """
 
 from __future__ import annotations
@@ -98,3 +99,35 @@ def test_stage_events_handles_file_and_directory_sources(tmp_path):
         "part-0-1.parquet",
         "part-0-2.parquet",
     ]
+
+
+# Runtime session-conf writes. session.py sets conf once, at session
+# build; a read or write carries its own semantics (writer option, static
+# partition spec, explicit read schema). The two exceptions are the
+# scoped TIMESTAMP(NANOS) inference window and the one-way enable Spark
+# requires before it accepts a pushFilters Python data source.
+_CONF_WRITE = re.compile(r"\.conf\.(set|unset)\(")
+_CONF_WRITE_ALLOWED = {
+    ("session.py", None),
+    ("sources/tables.py", "nanos_as_long"),
+    ("sources/pyds.py", "register"),
+}
+
+
+def test_runtime_conf_writes_only_in_allowed_functions():
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        rel = path.relative_to(PKG).as_posix()
+        top = None  # enclosing top-level def/class
+        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
+            m = re.match(r"(?:def|class) (\w+)", line)
+            if m:
+                top = m.group(1)
+            if _CONF_WRITE.search(line) and not (
+                {(rel, None), (rel, top)} & _CONF_WRITE_ALLOWED
+            ):
+                offenders.append(f"{path}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "runtime spark.conf.set/unset belongs in session.py; give the "
+        "read or write its own option instead:\n" + "\n".join(offenders)
+    )

@@ -60,6 +60,17 @@ def test_partitioned_typed_values_roundtrip(spark, tmp_path):
     ]
 
 
+def test_numeric_looking_string_partitions_roundtrip_unchanged(spark, tmp_path):
+    """Directory names like ``day=01`` / ``day=1e3`` would infer as numbers;
+    a string partition column must come back exactly as written."""
+    t = VersionedTable(str(tmp_path / "vt"))
+    rows = [(1, "01", 10), (2, "007", 20), (3, "1e3", 30), (4, None, 40)]
+    t.write(_df(spark, rows), partition_by=("day",), committed_at="t1")
+    got = t.read(spark)
+    assert dict(got.dtypes)["day"] == "string"
+    assert _vals(got) == rows
+
+
 def test_read_partitions_prunes_from_manifest(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "vt"))
     rows = [(i, d, i * 10) for i, d in enumerate("aabbcc")]
