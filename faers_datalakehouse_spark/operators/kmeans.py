@@ -16,30 +16,35 @@ arithmetic so a fixed number of Lloyd rounds is bit-reproducible in DuckDB:
   (``sign · (2·|S| + n) // (2·n)``) — no float mean, no banker's rounding
   mismatch. Empty clusters keep their previous centroid.
 
-Scale shape (per round): one codegen'd projection for assignment (centroids
-ride along as literals — k·dims integers, the classic broadcast-the-model
-pattern), then ``posexplode → groupBy (cluster, dim)`` whose partial
-aggregation reduces the shuffle to k·dims rows regardless of corpus size.
-Driver state is k·dims integers per round — same bounded-collect contract as
-the IVF centroid sample (``similarity.py``). Rounds are a driver loop, as in
-Spark MLlib's own KMeans; ``iters`` is fixed, not convergence-gated, so the
-oracle can mirror it as a finite CTE chain.
+Scale shape (per round): one job and no shuffle. Each partition runs the
+numpy argmin over its Arrow batches (the centroids ride in the kernel's
+closure — the broadcast-the-model pattern) and accumulates per-cluster
+sums and counts into one fixed-shape int64 array
+(``functions.kernels.partition_sum``). The driver receives one partial per
+input partition, m·k·(d+1) int64 (4 KiB for ``kmeans_clusters``: m=1,
+k=8, d=64), and adds them as Python ints. PQ trains its m subspace
+codebooks in the same pass (``lloyd_round`` takes ``(m, k, d)``
+codebooks; k-means is m=1). Rounds are a driver loop, as in Spark MLlib's
+own KMeans; ``iters`` is fixed, not convergence-gated, so the oracle can
+mirror it as a finite CTE chain.
 
 No counterpart in the reference (LLM-pipeline extension surface).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import math
 
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..functions.kernels import map_batches, matrix, partition_sum
 from .dedup import _md5_hash64
 from .parallelism import ensure_compute_parallelism
-from .similarity import QUANT
-
-
-def _quantized(col: Column) -> Column:
-    return F.transform(col, lambda x: F.round(x * QUANT).cast("long"))
+from .similarity import QUANT, _quantized
 
 
 def _round_half_away(s: int, n: int) -> int:
@@ -50,99 +55,124 @@ def _round_half_away(s: int, n: int) -> int:
     return -((2 * -s + n) // (2 * n))
 
 
-def assign_expr(cents: list[tuple[int, list[int]]], qv: Column) -> Column:
-    """Nearest-centroid id for a quantized-vector column (exact integer
-    distances, ties to the lowest cid). Centroids are expression literals —
-    the broadcast-the-model pattern; pure projection, no join, no shuffle,
-    so callers (SemDeDup blocking, IVF routing) can compute the cluster id
-    inline wherever the vector is already in hand."""
-    import numpy as np
-
-    scored = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        qv,
-                        # a 1-D int64 ndarray is ONE array<bigint> literal;
-                        # F.lit(list) expands to array(lit(x), ...), a
-                        # literal Column per dim
-                        F.lit(np.asarray(vec, dtype=np.int64)),
-                        lambda x, c: (x - c) * (x - c),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                ).alias("dist"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, vec in cents
-        ]
-    )
-    # array_min on struct<dist,cid> = lexicographic (dist, then cid) argmin
-    return F.array_min(scored)["cid"]
-
-
-def _assign(q: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
-    return q.withColumn("cid", assign_expr(cents, F.col("qv")))
-
-
-def cents_np(cents: list[tuple[int, list[int]]]):
-    """Centroids as an int64 ndarray ``(k, d)`` indexed by cid."""
-    import numpy as np
-
-    C = np.zeros((len(cents), len(cents[0][1])), dtype=np.int64)
-    for cid, vec in cents:
-        C[cid] = vec
-    return C
-
-
-def nearest_cids(X, C):
+def nearest_cids(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Argmin of exact int64 squared distance of each row of ``X``
     (B, d) to each centroid row of ``C`` (k, d). ``np.argmin``'s
     first-minimum rule IS the tie-to-lowest-cid contract (rows indexed
-    by cid) — identical semantics to :func:`assign_expr`, which remains
-    the codegen-inline variant for composing WITHIN a larger projection
-    (IVF routing); the numpy kernel is the batch path (the k·d literal
-    expression tree costs seconds of Catalyst analysis per query at
-    k·d ≳ 500, while the numpy broadcast is one vectorized op)."""
+    by cid).
+
+    Raises ``ArithmeticError`` when a value of ``X`` or ``C`` reaches
+    ``isqrt(2**63 // d) // 2`` in magnitude. Below that bound every
+    ``|x - c|`` is under twice it, so a distance (d squares) stays under
+    2**63, and a partition's per-cluster sum stays in int64 for up to
+    2**63 / bound rows (about 4.8e10 at d = 64)."""
+    bound = math.isqrt(2**63 // max(X.shape[1], 1)) // 2
+    for M in (X, C):
+        if M.size and (M.max() >= bound or M.min() <= -bound):
+            raise ArithmeticError(
+                f"quantized vector value outside ±{bound} (d={X.shape[1]}):"
+                " int64 squared distances would overflow"
+            )
     D = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
     return D.argmin(axis=1)
 
 
+def nearest_codes(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``(B, m)`` nearest cid per subspace: column s is
+    :func:`nearest_cids` of the s-th ``d``-wide slice of ``X`` against
+    the codebook ``C[s]`` (``C``: ``(m, k, d)``)."""
+    m, _, d = C.shape
+    return np.stack(
+        [nearest_cids(X[:, s * d : (s + 1) * d], C[s]) for s in range(m)],
+        axis=1,
+    )
+
+
+def lloyd_round(q: DataFrame, C: np.ndarray, qv_col: str = "qv") -> np.ndarray:
+    """One Lloyd round over the quantized vectors ``q[qv_col]``: codebooks
+    ``C`` ``(m, k, d)`` int64 in, the next codebooks out.
+
+    One job, no shuffle: a :func:`partition_sum` of per-(subspace, cid)
+    vector sums and counts, ``(m, k, d + 1)``. Each new centroid is the
+    exact mean rounded half away from zero in integers; an empty cluster
+    keeps its centroid."""
+    m, k, d = C.shape
+
+    def stats(batch: pa.RecordBatch) -> np.ndarray:
+        X = matrix(batch, qv_col)
+        acc = np.zeros((m, k, d + 1), dtype=np.int64)
+        for s, cid in enumerate(nearest_codes(X, C).T):
+            np.add.at(acc[s, :, :d], cid, X[:, s * d : (s + 1) * d])
+            acc[s, :, d] = np.bincount(cid, minlength=k)
+        return acc
+
+    tot = partition_sum(q.select(qv_col), stats, (m, k, d + 1))
+    out = C.copy()
+    for s in range(m):
+        for c in range(k):
+            n = tot[s, c, d]
+            if n:
+                out[s, c] = [_round_half_away(v, n) for v in tot[s, c, :d]]
+    return out
+
+
+def train_codebooks(
+    q: DataFrame,
+    k: int,
+    iters: int,
+    m_sub: int = 1,
+    id_col: str = "vec_id",
+    qv_col: str = "qv",
+) -> np.ndarray:
+    """Seeds plus ``iters`` :func:`lloyd_round` rounds over ``q``
+    (``id_col``, ``qv_col``): ``(m_sub, k, d_sub)`` int64 codebooks.
+    Every subspace seeds from the same ``k`` rows (smallest md5 id hash),
+    codebook s from their s-th ``d_sub``-wide slice."""
+    seeds = (
+        q.select(
+            id_col, qv_col, _md5_hash64(F.col(id_col).cast("string")).alias("h")
+        )
+        .orderBy("h", id_col)
+        .limit(k)
+        .collect()
+    )  # bounded: k rows
+    S = np.array([r[qv_col] for r in seeds], dtype=np.int64)
+    d_sub = S.shape[1] // m_sub
+    C = S[:, : m_sub * d_sub].reshape(len(S), m_sub, d_sub).transpose(1, 0, 2)
+    for _ in range(iters):
+        C = lloyd_round(q, C, qv_col)
+    return C
+
+
 def assign_kernel_frame(
     q: DataFrame,
-    cents: list[tuple[int, list[int]]],
+    cents: np.ndarray,
     id_col: str = "vec_id",
     qv_col: str = "qv",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(id_col, passthrough..., cluster_id)`` via a vectorized numpy
-    Arrow batch — broadcast-the-model as a closure instead of a literal
-    expression tree. ``passthrough`` columns ride the Arrow batch so
-    consumers that need the vector alongside the assignment (SemDeDup's
-    self-join) avoid a corpus-wide join-back on id."""
-    import numpy as np
-    import pandas as pd
-
-    C = cents_np(cents)
-    out_schema = ", ".join(
-        [f"{id_col} long"]
-        + [f"{c} {q.schema[c].dataType.simpleString()}" for c in passthrough]
-        + ["cluster_id long"]
+    """``(id_col, passthrough..., cluster_id)``: the nearest of the
+    ``cents`` ``(k, d)`` centroids for each row of ``q``, one Arrow batch
+    at a time — broadcast-the-model as a closure. ``passthrough`` columns
+    leave as the same Arrow arrays (no copy), so consumers that need the
+    vector alongside the assignment (SemDeDup's self-join) avoid a
+    corpus-wide join-back on id."""
+    schema = StructType(
+        [StructField(id_col, LongType())]
+        + [q.schema[c] for c in passthrough]
+        + [StructField("cluster_id", LongType())]
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[qv_col].to_numpy())
-            out = {id_col: pdf[id_col]}
-            for c in passthrough:
-                out[c] = pdf[c]
-            out["cluster_id"] = nearest_cids(X, C).astype(np.int64)
-            yield pd.DataFrame(out)
+    def kernel(batch: pa.RecordBatch) -> pa.RecordBatch:
+        cid = nearest_cids(matrix(batch, qv_col), cents)
+        return pa.RecordBatch.from_arrays(
+            [batch.column(id_col).cast(pa.int64())]
+            + [batch.column(c) for c in passthrough]
+            + [pa.array(cid, pa.int64())],
+            names=schema.names,
+        )
 
-    return q.mapInPandas(kernel, schema=out_schema)
+    return map_batches(q, kernel, schema)
 
 
 def train_centroids(
@@ -153,100 +183,29 @@ def train_centroids(
     emb_col: str = "embedding",
     quantized: DataFrame | None = None,
     qv_col: str = "qv",
-) -> list[tuple[int, list[int]]]:
+) -> np.ndarray:
     """Run ``iters`` Lloyd rounds from deterministic seeds and return the
-    trained model: ``[(cid, quantized centroid vector)]`` — k·dims driver
-    integers, the bounded state callers turn into an ``assign_expr``.
+    trained model: the ``(k, d)`` int64 centroids indexed by cid — k·d
+    driver integers, the bounded state ``assign_kernel_frame`` takes.
 
-    ``quantized``: a caller-held (persisted) frame with ``id_col`` and
-    ``qv_col`` = the QUANT-quantized vector. Callers that also need the
-    quantized corpus for their own assignment pass (``kmeans_assign``,
-    SemDeDup) share ONE quantize projection + cache instead of training
-    on a second scan-and-quantize of the corpus; the persist/unpersist
-    lifecycle is then theirs (guide §5 multi-consumer persist)."""
-    own = quantized is None
-    if own:
-        emb = ensure_compute_parallelism(emb)
-        q = emb.select(
-            F.col(id_col), _quantized(F.col(emb_col)).alias("qv")
-        ).persist()
-    else:
-        q = quantized.select(F.col(id_col), F.col(qv_col).alias("qv"))
-    seeds = (
-        q.select(
-            id_col, "qv", _md5_hash64(F.col(id_col).cast("string")).alias("h")
-        )
-        .orderBy("h", id_col)
-        .limit(k)
-        .collect()
-    )  # bounded: k rows
-    cents = [(i, list(r["qv"])) for i, r in enumerate(seeds)]
-    dims = len(cents[0][1])
-
-    import numpy as np
-    import pandas as pd
-
-    for _ in range(iters):
-        # Lloyd statistics via a numpy Arrow kernel: each batch emits
-        # per-cid partial sums/counts (a map-side combine in numpy), so
-        # the shuffle carries at most batches·k rows and the collect is
-        # k rows of (d+1) integers — same bound as before, without the
-        # k·d literal-expression assignment tree whose Catalyst
-        # analysis+codegen dominated wall time (see nearest_cids)
-        C = cents_np(cents)
-
-        def stats_kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["qv"].to_numpy())
-                cid = nearest_cids(X, C)
-                out_c, out_sum, out_n = [], [], []
-                for c in range(len(cents)):
-                    mask = cid == c
-                    n = int(mask.sum())
-                    if n:
-                        out_c.append(c)
-                        out_sum.append(X[mask].sum(axis=0).tolist())
-                        out_n.append(n)
-                yield pd.DataFrame(
-                    {"cid": out_c, "vsum": out_sum, "n": out_n}
-                )
-
-        sums = (
-            q.mapInPandas(
-                stats_kernel, schema="cid long, vsum array<long>, n long"
-            )
-            .groupBy("cid")
-            .agg(
-                # one parsed expression, not dims F.sum(F.element_at(...))
-                # Column trees (~24 JVM round trips per dim)
-                F.expr(
-                    "array("
-                    + ", ".join(f"sum(vsum[{i}])" for i in range(dims))
-                    + ") AS vsum"
-                ),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )  # bounded: k rows
-        by_cid: dict[int, list[int]] = {}
-        counts: dict[int, int] = {}
-        for r in sums:
-            by_cid[r["cid"]] = list(r["vsum"])
-            counts[r["cid"]] = r["n"]
-        cents = [
-            (
-                cid,
-                [_round_half_away(s, counts[cid]) for s in by_cid[cid]]
-                if cid in by_cid  # empty cluster keeps its previous centroid
-                else vec,
-            )
-            for cid, vec in cents
-        ]
-    if own:
+    ``quantized``: a persisted frame with ``id_col`` and ``qv_col`` = the
+    QUANT-quantized vector. Callers that also need the quantized corpus
+    for their own assignment pass (``kmeans_assign``, SemDeDup) share ONE
+    quantize projection + cache. The caller owns that frame: it persists
+    it and unpersists it after its last consumer. With ``quantized=None``
+    this function persists its own quantized copy and unpersists it
+    before returning, on error too."""
+    if quantized is not None:
+        return train_codebooks(quantized, k, iters, 1, id_col, qv_col)[0]
+    q = (
+        ensure_compute_parallelism(emb)
+        .select(F.col(id_col), _quantized(F.col(emb_col)).alias("qv"))
+        .persist()
+    )
+    try:
+        return train_codebooks(q, k, iters, 1, id_col)[0]
+    finally:
         q.unpersist()
-    return cents
 
 
 def kmeans_assign(
@@ -261,21 +220,26 @@ def kmeans_assign(
     (SemDeDup blocking, IVF-style routing) without the size rollup.
 
     ``cluster_id`` is the seed index (0..k-1), NOT a row id.
-    """
-    # ONE quantize pass + cache for training AND assignment: the train
-    # rounds and the final assign kernel all read the persisted frame
-    # (before: training quantized its own copy, then the assign pass
-    # re-scanned and re-quantized the corpus). Run-internal cache, same
-    # policy as the minhash/allpairs frames (bench clearCache per run).
+
+    The quantized corpus is persisted for the rounds and the assignment
+    pass and unpersisted before returning (on error too). The returned
+    frame is the assignment, locally checkpointed (eager): its consumers
+    re-read it without re-running the kernel, and its blocks live as long
+    as the frame does."""
     q = (
         ensure_compute_parallelism(emb)
         .select(F.col(id_col), _quantized(F.col(emb_col)).alias("qv"))
         .persist()
     )
-    cents = train_centroids(
-        emb, k=k, iters=iters, id_col=id_col, emb_col=emb_col, quantized=q
-    )
-    return assign_kernel_frame(q, cents, id_col=id_col)
+    try:
+        cents = train_centroids(
+            emb, k=k, iters=iters, id_col=id_col, emb_col=emb_col, quantized=q
+        )
+        return assign_kernel_frame(q, cents, id_col=id_col).localCheckpoint(
+            eager=True
+        )
+    finally:
+        q.unpersist()
 
 
 def kmeans_lite(
@@ -287,8 +251,9 @@ def kmeans_lite(
 ) -> DataFrame:
     """``kmeans_assign`` plus cluster sizes:
     ``(id_col, cluster_id, cluster_size)`` ordered by id. Sizes come from a
-    k-row aggregate broadcast back onto the assignment — never a window
-    over the corpus partitioned by the k hot cluster keys.
+    k-row aggregate of the checkpointed assignment broadcast back onto it —
+    never a window over the corpus partitioned by the k hot cluster keys,
+    and never a second run of the assignment kernel.
     """
     final = kmeans_assign(emb, k=k, iters=iters, id_col=id_col, emb_col=emb_col)
     sizes = final.groupBy("cluster_id").agg(

@@ -20,9 +20,10 @@ codes are exact argmins, and ADC tables/distances are exact int64. The
 oracle unrolls one prefixed k-means CTE chain per subspace over the SAME
 sliced input, re-derives the codes, and re-computes the ADC sum.
 
-Scale shape: training collects k·dims integers per subspace (bounded
-driver state); encoding is ONE codegen projection (codebooks are
-expression literals — broadcast-the-model); ADC search is a projection
+Scale shape: training is one job per Lloyd round for all subspaces
+(``kmeans.lloyd_round``: no shuffle, one m_sub·k·(d_sub+1) integer
+partial per partition); encoding is ONE Arrow pass (codebooks ride the
+kernel's closure — broadcast-the-model); ADC search is a projection
 over the codes frame (tables are literals) + ``orderBy().limit()`` →
 TakeOrderedAndProject. Nothing corpus-proportional ever reaches the
 driver, and the only shuffle in search is the top-k reduction.
@@ -32,13 +33,16 @@ No counterpart in the reference (LLM-pipeline extension surface).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_batches, matrix
 from .dedup import _md5_hash64
-from .kmeans import kmeans_ctes
+from .kmeans import kmeans_ctes, nearest_codes, train_codebooks
 from .parallelism import ensure_compute_parallelism
-from .similarity import QUANT
+from .similarity import QUANT, _quantized
 
 CODE_BASE = 16  # codes packed base-16: requires k <= 16
 
@@ -51,162 +55,40 @@ def pq_train(
     dims: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-) -> list[list[tuple[int, list[int]]]]:
+) -> np.ndarray:
     """One integer-exact k-means codebook per subspace:
-    ``models[s] = [(cid, quantized centroid)]``. Bounded driver state
-    (m_sub · k · d_sub integers)."""
+    ``(m_sub, k, d_sub)`` int64, ``models[s, cid]`` the quantized
+    centroid. Bounded driver state (m_sub · k · d_sub integers).
+
+    All m_sub trainings share one job per round: ``kmeans.lloyd_round``
+    assigns every subspace in the same Arrow pass over the full
+    quantized vector. The per-subspace seeds are slices of the SAME k
+    rows (the seed order is the md5 hash of the id, independent of the
+    subspace), so the math is that of m_sub independent trainings,
+    which the per-subspace SQL oracle checks. The quantized corpus is
+    persisted for the rounds and unpersisted before returning."""
     if dims % m_sub:
         raise ValueError(f"dims {dims} not divisible by m_sub {m_sub}")
     if k > CODE_BASE:
         raise ValueError(f"k must be <= {CODE_BASE} for base-16 packing")
-    d_sub = dims // m_sub
-    # All m_sub trainings are FUSED into one job chain. The per-subspace
-    # seeds are slices of the SAME k rows (the seed order is the md5 hash
-    # of the id, independent of the subspace), and a Lloyd round's
-    # statistics for every subspace can ride one posexplode of the FULL
-    # quantized vector: position p belongs to subspace p div d_sub, and
-    # the per-row array of subspace assignments rides along so the
-    # groupBy key (pos, cid) partial-aggregates to dims·k rows total.
-    # Identical math to m_sub independent trainings (verified against
-    # the per-subspace SQL oracle), but 1 scan + 1 shuffle + 1 collect
-    # per round instead of m_sub of each. Measured 8.1 s -> ~2 s at
-    # m_sub=8, iters=1, sf0.1 on local[32].
-    from .kmeans import _quantized, _round_half_away
-
     q = (
         ensure_compute_parallelism(emb)
-        .select(F.col(id_col), _quantized(F.col(emb_col)).alias("qv"))
+        .select(F.col(id_col), _quantized_slice(emb_col, 1, dims).alias("qv"))
         .persist()
     )
-    seeds = (
-        q.select(
-            id_col, "qv", _md5_hash64(F.col(id_col).cast("string")).alias("h")
-        )
-        .orderBy("h", id_col)
-        .limit(k)
-        .collect()
-    )  # bounded: k rows
-    models = [
-        [
-            (i, list(r["qv"])[s * d_sub : (s + 1) * d_sub])
-            for i, r in enumerate(seeds)
-        ]
-        for s in range(m_sub)
-    ]
-    import numpy as np
-    import pandas as pd
-
-    for _ in range(iters):
-        # Lloyd statistics via a numpy Arrow kernel: each batch emits
-        # per-(subspace, cid) partial sums and counts — a map-side
-        # combine in numpy, so the shuffle carries at most
-        # batches · m_sub · k rows and the final agg collects
-        # m_sub · k · (d_sub + 1) integers regardless of corpus size.
-        # (The literal-expression argmin was dropped here for the same
-        # reason as in pq_encode: its Catalyst tree costs seconds of
-        # analysis/codegen per round.)
-        C = _models_np(models)
-
-        def stats_kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["qv"].to_numpy())
-                out_s, out_c, out_sum, out_n = [], [], [], []
-                for s in range(m_sub):
-                    Xs = X[:, s * d_sub : (s + 1) * d_sub]
-                    cid = _nearest_cids(Xs, C[s])
-                    for c in range(k):
-                        mask = cid == c
-                        n = int(mask.sum())
-                        if n:
-                            out_s.append(s)
-                            out_c.append(c)
-                            out_sum.append(Xs[mask].sum(axis=0).tolist())
-                            out_n.append(n)
-                yield pd.DataFrame(
-                    {
-                        "s_idx": out_s,
-                        "cid": out_c,
-                        "vsum": out_sum,
-                        "n": out_n,
-                    }
-                )
-
-        sums = (
-            q.mapInPandas(
-                stats_kernel,
-                schema="s_idx long, cid long, vsum array<long>, n long",
-            )
-            .groupBy("s_idx", "cid")
-            .agg(
-                F.array(
-                    *[
-                        F.sum(F.element_at("vsum", i + 1))
-                        for i in range(d_sub)
-                    ]
-                ).alias("vsum"),
-                F.sum("n").alias("n"),
-            )
-            .collect()
-        )  # bounded: m_sub·k rows
-        by: list[dict[int, list[int]]] = [{} for _ in range(m_sub)]
-        counts: list[dict[int, int]] = [{} for _ in range(m_sub)]
-        for r in sums:
-            by[r["s_idx"]][r["cid"]] = list(r["vsum"])
-            counts[r["s_idx"]][r["cid"]] = r["n"]
-        models = [
-            [
-                (
-                    cid,
-                    [
-                        _round_half_away(v, counts[s][cid])
-                        for v in by[s][cid]
-                    ]
-                    if cid in by[s]  # empty cluster keeps its centroid
-                    else vec,
-                )
-                for cid, vec in models[s]
-            ]
-            for s in range(m_sub)
-        ]
-    q.unpersist()
-    return models
+    try:
+        return train_codebooks(q, k, iters, m_sub, id_col)
+    finally:
+        q.unpersist()
 
 
 def _quantized_slice(emb_col: str, start: int, length: int):
-    return F.transform(
-        F.slice(F.col(emb_col), start, length),
-        lambda x: F.round(x * QUANT).cast("long"),
-    )
-
-
-def _models_np(models: list[list[tuple[int, list[int]]]]):
-    """Codebooks as an int64 ndarray ``(m_sub, k, d_sub)`` indexed by cid."""
-    import numpy as np
-
-    m_sub = len(models)
-    k = len(models[0])
-    d_sub = len(models[0][0][1])
-    C = np.zeros((m_sub, k, d_sub), dtype=np.int64)
-    for s, model in enumerate(models):
-        for cid, cent in model:
-            C[s, cid] = cent
-    return C
-
-
-def _nearest_cids(X, C_s):
-    """Argmin of exact int64 squared distance of each row of ``X``
-    (B, d_sub) to each centroid row of ``C_s`` (k, d_sub); np.argmin's
-    first-minimum rule IS the tie-to-lowest-cid contract because rows
-    are indexed by cid."""
-    D = ((X[:, None, :] - C_s[None, :, :]) ** 2).sum(axis=2)
-    return D.argmin(axis=1)
+    return _quantized(F.slice(F.col(emb_col), start, length))
 
 
 def pq_encode(
     emb: DataFrame,
-    models: list[list[tuple[int, list[int]]]],
+    models: np.ndarray,
     dims: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -214,63 +96,43 @@ def pq_encode(
     """``(id_col, code)`` — each subspace's nearest-centroid index packed
     base-16 into one int64 (``code = Σ cid_s · 16^s``).
 
-    The nearest-centroid kernel is a vectorized numpy Arrow batch
-    (``mapInPandas``), NOT a Catalyst expression: the m_sub·k·d_sub
-    literal-expression argmin builds a ~4000-node interpreted
-    higher-order-function tree whose analysis+codegen alone costs
-    seconds per query and ~1.2 MB task binaries, while the numpy batch
-    is one (B, k, d_sub) integer broadcast per subspace — the
-    SIMD-batch shape real PQ codecs use. Quantization stays JVM-side
-    (``F.round`` half-up), so Python sees only exact int64 — no float
-    rounding divergence. Codebooks ride the closure (broadcast-the-
-    model); codes remain bit-exact vs the SQL oracle's independently
-    derived codebooks."""
-    import numpy as np
-    import pandas as pd
+    The nearest-centroid kernel is a vectorized numpy Arrow batch, NOT a
+    Catalyst expression: the m_sub·k·d_sub literal-expression argmin
+    builds a ~4000-node interpreted higher-order-function tree whose
+    analysis+codegen alone costs seconds per query and ~1.2 MB task
+    binaries, while the numpy batch is one (B, k, d_sub) integer
+    broadcast per subspace — the SIMD-batch shape real PQ codecs use.
+    Quantization stays JVM-side (``F.round`` half-up), so Python sees
+    only exact int64 — no float rounding divergence. Codebooks ride the
+    closure (broadcast-the-model); codes remain bit-exact vs the SQL
+    oracle's independently derived codebooks."""
+    pows = CODE_BASE ** np.arange(len(models), dtype=np.int64)
 
-    m_sub = len(models)
-    d_sub = dims // m_sub
-    C = _models_np(models)
-    pows = [CODE_BASE**s for s in range(m_sub)]
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["qv"].to_numpy())
-            code = np.zeros(len(pdf), dtype=np.int64)
-            for s in range(m_sub):
-                Xs = X[:, s * d_sub : (s + 1) * d_sub]
-                code += _nearest_cids(Xs, C[s]).astype(np.int64) * pows[s]
-            yield pd.DataFrame({id_col: pdf[id_col], "code": code})
+    def kernel(batch: pa.RecordBatch) -> pa.RecordBatch:
+        code = nearest_codes(matrix(batch, "qv"), models) @ pows
+        return pa.RecordBatch.from_arrays(
+            [batch.column(id_col).cast(pa.int64()), pa.array(code, pa.int64())],
+            names=[id_col, "code"],
+        )
 
     q = ensure_compute_parallelism(emb).select(
         F.col(id_col), _quantized_slice(emb_col, 1, dims).alias("qv")
     )
-    return q.mapInPandas(kernel, schema=f"{id_col} long, code long")
+    return map_batches(q, kernel, f"{id_col} long, code long")
 
 
-def _adc_tables(
-    models: list[list[tuple[int, list[int]]]], query: list[float]
-) -> list[list[int]]:
-    """Per-subspace ADC tables: exact int64 squared distance from the
-    quantized query slice to every centroid, indexed by cid."""
-    m_sub = len(models)
-    d_sub = len(models[0][0][1])
-    qq = [round(x * QUANT) for x in query]
-    tables = []
-    for s, model in enumerate(models):
-        qs = qq[s * d_sub : (s + 1) * d_sub]
-        table = [0] * len(model)
-        for cid, cent in model:
-            table[cid] = sum((a - b) * (a - b) for a, b in zip(qs, cent))
-        tables.append(table)
-    return tables
+def _adc_tables(models: np.ndarray, query: list[float]) -> list[list[int]]:
+    """Per-subspace ADC tables: exact squared distance (Python ints) from
+    the quantized query slice to every centroid, indexed by cid."""
+    m_sub, _, d_sub = models.shape
+    qq = np.array([round(x * QUANT) for x in query], dtype=object)
+    qq = qq[: m_sub * d_sub].reshape(m_sub, 1, d_sub)
+    return ((models.astype(object) - qq) ** 2).sum(axis=2).tolist()
 
 
 def pq_topk(
     codes: DataFrame,
-    models: list[list[tuple[int, list[int]]]],
+    models: np.ndarray,
     query: list[float],
     topk: int = 10,
     id_col: str = "vec_id",
@@ -407,7 +269,7 @@ LIMIT {topk}
 
 def pq_recall(
     emb: DataFrame,
-    models: list[list[tuple[int, list[int]]]] | None = None,
+    models: np.ndarray | None = None,
     n_queries: int = 8,
     topk: int = 5,
     m_sub: int = 8,
@@ -435,8 +297,6 @@ def pq_recall(
     (n_queries · m_sub · k rows) and sums per (query, doc): the
     compressed-domain path with no per-row float math.
     """
-    from .dedup import _md5_hash64
-
     if models is None:
         models = pq_train(
             emb, m_sub=m_sub, k=k, iters=iters, dims=dims,

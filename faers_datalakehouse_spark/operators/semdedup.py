@@ -8,9 +8,9 @@ pair search collapses to O(Σ cluster_size²) while still catching the
 paraphrase-level duplicates that token-hash dedup (MinHash/SimHash) misses.
 
 Spark-first layout:
-- blocking = ``kmeans_assign`` (exact-integer Lloyd, ``operators/kmeans.py``)
-  — assignment is one codegen'd projection per round, centroids ride along
-  as broadcast literals;
+- blocking = the exact-integer Lloyd of ``operators/kmeans.py`` — one
+  Arrow pass per round, centroids ride the kernel's closure
+  (broadcast-the-model);
 - the pair search is a hash **equi-join on cluster_id** with an ``id_a <
   id_b`` residual — never a cartesian; Catalyst plans a shuffled hash join
   keyed on the cluster, so each task sees one cluster's rows (the classic
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .kmeans import assign_expr, kmeans_ctes, train_centroids
+from .kmeans import assign_kernel_frame, kmeans_ctes, train_centroids
 from .parallelism import ensure_compute_parallelism
 from .similarity import _cosine, _dot, with_quantized_norm
 
@@ -51,45 +51,37 @@ def semantic_neardup_pairs(
     Pairs crossing cluster boundaries are *not* reported — that recall loss
     is SemDeDup's deliberate trade for linearity, and callers wanting belt
     and braces union this with the hash-based ``minhash_lsh_pairs``.
+
+    Lifecycle: the quantized corpus ``(id, q_emb, q_norm2)`` is persisted
+    here, shared by the Lloyd rounds and the assignment pass, and
+    unpersisted here before returning (on error too). The assignment
+    (with ``q_emb``/``q_norm2`` carried through) is locally checkpointed
+    (eager), so both self-join sides read it without re-running the
+    kernel; its blocks live as long as the returned frame does.
     """
     # Train once on the driver (k·dims integers), then compute the cluster
-    # id in the SAME pass that quantizes (the numpy Arrow kernel carries
-    # q_emb/q_norm2 through as passthrough columns) — joining a separate
-    # kmeans_assign frame back by id would shuffle the corpus on id once
-    # per self-join side for an assignment derivable from the vector
-    # already in hand.
-    from .kmeans import assign_kernel_frame
-
-    # ONE quantize pass + cache shared by the Lloyd rounds AND the
-    # assignment kernel (r13): training previously quantized its own
-    # copy of the corpus and the q_emb/q_norm2 projection below
-    # re-scanned and re-quantized it a second time. Run-internal cache
-    # (bench clearCache per run), kept until eviction — same policy as
-    # the assignment frame below.
+    # id in the SAME Arrow pass that carries q_emb/q_norm2 through —
+    # joining a separate kmeans_assign frame back by id would shuffle the
+    # corpus on id once per self-join side.
     emb = ensure_compute_parallelism(emb)
     qn = (
         with_quantized_norm(emb.select(id_col, emb_col), emb_col)
         .select(F.col(id_col).alias("id"), "q_emb", "q_norm2")
         .persist()
     )
-    # id_col="id": the shared frame aliases the id; seeding hashes the
-    # VALUES, so the seed set (and every centroid) is unchanged
-    cents = train_centroids(
-        emb, k=k, iters=iters, id_col="id", emb_col=emb_col,
-        quantized=qn, qv_col="q_emb",
-    )
-    # Persist the assignment frame: BOTH self-join sides consume it, and
-    # mapInPandas is opaque to Catalyst (no subtree reuse across the
-    # broadcast build/probe sides), so unpersisted the quantize+assign
-    # Arrow kernel ran TWICE over the corpus — the r12 before-plan shows
-    # two MapInPandas nodes over two separate parquet scans (guide §5
-    # "caching is worth it when a DataFrame is reused and recomputing is
-    # expensive"). Run-internal cache, cleared by bench/clearCache like
-    # the minhash and allpairs frames.
-    e = assign_kernel_frame(
-        qn, cents, id_col="id", qv_col="q_emb",
-        passthrough=("q_emb", "q_norm2"),
-    ).persist()
+    try:
+        # id_col="id": the shared frame aliases the id; seeding hashes the
+        # VALUES, so the seed set (and every centroid) is unchanged
+        cents = train_centroids(
+            emb, k=k, iters=iters, id_col="id", emb_col=emb_col,
+            quantized=qn, qv_col="q_emb",
+        )
+        e = assign_kernel_frame(
+            qn, cents, id_col="id", qv_col="q_emb",
+            passthrough=("q_emb", "q_norm2"),
+        ).localCheckpoint(eager=True)
+    finally:
+        qn.unpersist()
     a, b = e.alias("a"), e.alias("b")
     cosine = _cosine(
         _dot(F.col("a.q_emb"), F.col("b.q_emb")),

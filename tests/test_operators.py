@@ -520,6 +520,46 @@ def test_kmeans_lite_empty_cluster_keeps_centroid(spark):
     assert all(r["cluster_size"] == 4 for r in out)
 
 
+def test_kmeans_refuses_quantized_values_that_overflow_int64(spark):
+    from faers_datalakehouse_spark.operators.kmeans import kmeans_lite
+
+    # 1e7 quantizes to 1e10; its squared distance to -1e10 is 4e20, past
+    # int64. Unguarded, it wrapped negative, every point took the far
+    # centroid, and the blobs came back under swapped cluster ids (the
+    # same rows at ±1e4 give ids 1 and 0)
+    rows = [(i, [1.0e7, float(i)]) for i in range(3)] + [
+        (i, [-1.0e7, float(i)]) for i in range(3, 6)
+    ]
+    df = spark.createDataFrame(rows, "vec_id: bigint, embedding: array<float>")
+    with pytest.raises(Exception, match="ArithmeticError"):
+        kmeans_lite(df, k=2, iters=2).collect()
+
+
+@pytest.mark.parametrize("op", ["kmeans_lite", "semantic_neardup_pairs"])
+def test_kmeans_ops_leave_no_cached_dataset(spark, op):
+    from faers_datalakehouse_spark.operators.kmeans import kmeans_lite
+    from faers_datalakehouse_spark.operators.semdedup import (
+        semantic_neardup_pairs,
+    )
+
+    run, n_rows = {
+        "kmeans_lite": (lambda df: kmeans_lite(df, k=2, iters=2), 8),
+        "semantic_neardup_pairs": (
+            lambda df: semantic_neardup_pairs(df, k=2, iters=2, threshold=0.99),
+            12,  # C(4, 2) identical pairs per cluster
+        ),
+    }[op]
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.createDataFrame(
+        [(i, [float(i % 2), 1.0]) for i in range(8)],
+        "vec_id: bigint, embedding: array<float>",
+    )
+    for _ in range(2):  # a long-lived session: no clearCache between calls
+        assert len(run(df).collect()) == n_rows
+        assert cache.isEmpty()
+
+
 def test_cluster_assignments_rejects_unknown_algorithm(spark):
     from faers_datalakehouse_spark.operators.clustering import cluster_assignments
 

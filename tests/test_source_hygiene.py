@@ -9,7 +9,9 @@ plans/showcase.py. This pin keeps the class closed: a new raw
 ``read.parquet(.../events.parquet)`` site fails here, not three rounds
 later when the encoding drifts again. The same holds for every testdata
 table: ``sources.tables.read_table`` is the one read path. Runtime
-session-conf writes are pinned to ``session.py`` and two named helpers.
+session-conf writes are pinned to ``session.py`` and two named helpers,
+and Arrow/pandas kernel calls to ``functions/kernels.py`` plus a list of
+older modules that may only shrink.
 """
 
 from __future__ import annotations
@@ -131,3 +133,36 @@ def test_runtime_conf_writes_only_in_allowed_functions():
         "runtime spark.conf.set/unset belongs in session.py; give the "
         "read or write its own option instead:\n" + "\n".join(offenders)
     )
+
+
+# Arrow/pandas kernel calls. ``functions/kernels.py`` is the one Arrow
+# boundary; the modules listed here call the APIs directly and predate
+# it. The list may only shrink: a module that moves onto the boundary
+# must leave it (the stale-entry check below), and none may join it.
+_KERNEL_CALL = re.compile(r"\.(mapInPandas|applyInPandas|mapInArrow|applyInArrow)\(")
+_KERNEL_CALL_ALLOWED = {
+    "operators/dedup.py",
+    "operators/heavyhitters.py",
+    "operators/kmv.py",
+    "operators/bpe.py",
+    "operators/multimodal.py",
+    "operators/mmr.py",
+    "operators/cogroup.py",
+}
+
+
+def test_arrow_kernel_calls_only_through_kernels_module():
+    offenders, callers = [], set()
+    for path in list(PKG.rglob("*.py")) + [REPO / "__spark_entry__.py"]:
+        rel = path.relative_to(PKG).as_posix() if PKG in path.parents else path.name
+        for lineno, line in enumerate(path.read_text().splitlines(), start=1):
+            if _KERNEL_CALL.search(line):
+                callers.add(rel)
+                if rel not in _KERNEL_CALL_ALLOWED | {"functions/kernels.py"}:
+                    offenders.append(f"{path}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "Arrow kernels go through functions.kernels (map_batches, "
+        "partition_sum):\n" + "\n".join(offenders)
+    )
+    stale = _KERNEL_CALL_ALLOWED - callers
+    assert not stale, f"no longer call the Arrow APIs; drop from the list: {sorted(stale)}"
