@@ -150,11 +150,13 @@ def connected_components_star(
     component height every two rounds → O(log n) rounds on any graph.
 
     Per round: one groupBy-min per node + one join to re-emit edges toward
-    the neighborhood minimum — both shuffles hash on the node id, AQE
-    coalesces, and each round's edge set is persisted so round N+1 reads a
-    materialized frame. Edges are kept normalized (a > b) so the fixpoint
-    is literally a star forest: each node's single neighbor is its
-    component min.
+    the neighborhood minimum — both shuffles hash on the node id and AQE
+    coalesces. Each round's output edge set is an eager
+    ``localCheckpoint``, so round N+1 reads a materialized frame; only the
+    in-round small-star input is persisted, and it is unpersisted once the
+    round's checkpoint has run. Edges are kept normalized (a > b) so the
+    fixpoint is literally a star forest: each node's single neighbor is
+    its component min.
 
     - large-star: per node u, every strictly-larger neighbor v re-attaches
       to m = min(Γ(u) ∪ u) — cuts long tails onto local minima.
@@ -162,11 +164,11 @@ def connected_components_star(
       itself) attaches to the minimum of the small neighborhood — flattens
       the stars built by large-star.
 
-    Convergence = edge set unchanged (exact check: count + antijoin-empty,
-    two scalar jobs per round on the checkpointed frame, no driver collect
-    of the edges). Rounds eagerly ``localCheckpoint`` — see the lineage
-    note in ``connected_components``; the plan would otherwise grow ~4x
-    per round and drown the driver in re-analysis.
+    Convergence = edge set unchanged (exact check: the edge count, observed
+    on the checkpoint job, then an antijoin-empty job only when the counts
+    match; no driver collect of the edges). The checkpoints cut lineage —
+    see the note in ``connected_components``; the plan would otherwise
+    grow ~4x per round and drown the driver in re-analysis.
     """
     # normalized undirected edges: (a, b) with a > b, no self-loops.
     # Edge counts ride the checkpoint jobs via ``observe`` (r12) — the

@@ -111,23 +111,6 @@ ORDER BY keep_id
 """
 
 
-def char_shingles(col: Column, k: int = 8) -> Column:
-    """Distinct k-char shingles of the normalized text (built-in exprs only)."""
-
-    def build(norm: Column) -> Column:
-        n = F.length(norm)
-        return F.when(n < k, F.array(norm)).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n - F.lit(k) + 1),
-                    lambda i: norm.substr(i, F.lit(k)),
-                )
-            )
-        )
-
-    return _let(_norm_text(col), build)
-
-
 def char_shingle_hashes(col: Column, k: int = 8) -> Column:
     """Distinct k-char shingles hashed to raw 64-bit ints.
 

@@ -59,10 +59,7 @@ def incremental_dedup_decisions(
 
     ``normalize``: hash ``_norm_text`` of the text instead of the raw
     bytes — pass True wherever the exact layer must agree with
-    ``dedup_exact``'s normalized hashing (e.g. the streaming curation
-    sink, where the within-batch and cross-corpus exact layers would
-    otherwise classify the same pair differently depending on which
-    micro-batch it arrived in). Default False preserves the
+    ``dedup_exact``'s normalized hashing. Default False preserves the
     raw-byte semantics the DuckDB oracle twin reproduces.
     """
     from .dedup import _norm_text

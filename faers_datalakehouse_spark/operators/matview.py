@@ -257,25 +257,3 @@ class IncrementalMatView:
             .parquet(self.path)
         )
         return {"files_before": before, "files_after": n_files()}
-
-    def streaming_sink(self, stream_df: DataFrame, checkpoint: str):
-        """Maintain the view from a stream: ``foreachBatch`` folds each
-        micro-batch through the same ``refresh`` path as batch loads."""
-        return (
-            stream_df.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda b, _id: self.refresh(b))
-        )
-
-    def streaming_changes_sink(self, cdf_stream: DataFrame, checkpoint: str):
-        """Maintain the view from a STREAM OF CHANGES (rows carrying
-        ``change_type`` insert/delete — e.g. a replicated
-        ``VersionedTable.changes`` feed): each micro-batch folds through
-        ``refresh_changes``, so deletes retract instead of accumulating.
-        The streaming twin of CDC-fed view maintenance."""
-        return (
-            cdf_stream.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(lambda b, _id: self.refresh_changes(b))
-        )
-

@@ -28,10 +28,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-class DuplicateMergeKeysError(ValueError):
-    pass
-
-
 def merge_into(
     target: DataFrame,
     source: DataFrame,

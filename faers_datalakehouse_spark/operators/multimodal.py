@@ -30,7 +30,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -156,61 +155,5 @@ def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
                 mids.append(mid)
                 feats.append(hist.tolist())
             yield pd.DataFrame({"media_id": mids, "features": feats})
-
-    return df.select("media_id", "payload").mapInPandas(batches, schema=out_schema)
-
-
-def media_summary(decoded: DataFrame) -> DataFrame:
-    """Relational rollup over decoded metadata (pure DataFrame ops)."""
-    return (
-        decoded.groupBy("ok")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.avg("width").alias("avg_width"),
-            F.avg("height").alias("avg_height"),
-            F.sum("n_frames").alias("total_frames"),
-        )
-        .orderBy("ok")
-    )
-
-
-def resize_media(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize each payload's raster to (target_w, target_h) — the
-    decode→resize→re-encode shape of an image-preprocessing stage.
-
-    The fake container has no real raster, so the "resize" deterministically
-    rewrites the header dims and nearest-neighbor-samples the 32-byte body
-    to ``min(32, target_w)`` bytes; a real implementation swaps the body
-    transform for PIL/cv2 at the same single point decode_media marks. The
-    Spark mechanics are the production shape: binary in → binary out through
-    one ``mapInPandas`` pass, zero shuffle, Arrow-batched.
-    """
-    import struct as _struct
-
-    out_schema = "media_id long, payload binary, width int, height int, ok boolean"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, _, n = _decode_header(payload)
-                except ValueError:
-                    rows.append((mid, None, None, None, False))
-                    continue
-                body = np.frombuffer(payload[12:], dtype=np.uint8)
-                out_len = max(1, min(len(body), target_w))
-                # Nearest-neighbor index sampling — the real raster op's slot.
-                idx = (np.arange(out_len) * len(body) // out_len).astype(np.int64)
-                new_body = body[idx].tobytes() if len(body) else b""
-                new_payload = (
-                    MAGIC + _struct.pack(">HHI", target_w, target_h, n) + new_body
-                )
-                rows.append((mid, new_payload, target_w, target_h, True))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "payload", "width", "height", "ok"]
-            )
 
     return df.select("media_id", "payload").mapInPandas(batches, schema=out_schema)

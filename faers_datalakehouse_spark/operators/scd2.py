@@ -192,22 +192,6 @@ def scd2_merge(
     ).unionByName(inserted)
 
 
-def scd2_current_view(dim: DataFrame) -> DataFrame:
-    """Convenience: the current slice (reference's dead ``get_current_records``)."""
-    return dim.filter(F.col("is_current"))
-
-
-def scd2_history(dim: DataFrame, business_key_values: dict[str, object]) -> DataFrame:
-    """Full change history for one business key (``get_change_history`` analog)."""
-    cond = None
-    for k, v in business_key_values.items():
-        # eqNullSafe: NULL business keys are first-class here (tracked by
-        # the merge via eqNullSafe), so their history must be retrievable
-        c = F.col(k).eqNullSafe(F.lit(v))
-        cond = c if cond is None else (cond & c)
-    return dim.filter(cond).orderBy("effective_date")
-
-
 def scd2_versioned_apply(
     table,
     source: DataFrame,

@@ -192,15 +192,6 @@ def cms_build(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Registers of the combined input — exact, like ``hll_merge``."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "col")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_point(
     sketch: DataFrame, keys: DataFrame, key_col: str, depth: int = 4,
     width: int = 256,

@@ -104,25 +104,6 @@ def surprisal_scores(
     )
 
 
-def surprisal_filter(
-    docs: DataFrame,
-    low_bits: float,
-    high_bits: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet-style band-pass: keep documents whose average surprisal sits in
-    ``[low_bits, high_bits]`` — below is boilerplate, above is garble."""
-    scores = surprisal_scores(docs, id_col, text_col)
-    return docs.join(
-        scores.filter(
-            (F.col("avg_surprisal_bits") >= low_bits)
-            & (F.col("avg_surprisal_bits") <= high_bits)
-        ).select(id_col),
-        id_col,
-    )
-
-
 def surprisal_oracle_sql() -> str:
     """DuckDB twin of ``surprisal_scores`` (self-scored). Identical
     normalization, identical bin()-length surprisal integers, identical

@@ -31,7 +31,7 @@ def stream_scratch_dir(prefix: str) -> str:
     returned DataFrame lazily reads the sink parquet, so the tree must
     outlive the call — exit-time removal keeps repeated invocations from
     leaking one staged events.parquet copy each (ADVICE r7 hygiene item;
-    pinned by tests/test_streaming_curation.py)."""
+    pinned by tests/test_streaming.py)."""
     import atexit
     import shutil
     import tempfile

@@ -69,44 +69,3 @@ def add_ingestion_metadata(
     return df.withColumn("_ingest_ts", ts).withColumn(
         "_source_file", F.input_file_name()
     )
-
-
-def documents_schema(
-    text_col: str = "text", id_col: str = "doc_id"
-) -> T.StructType:
-    """Typed schema for JSONL document ingestion (id, text, metadata)."""
-    return T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), True),
-            T.StructField(text_col, T.StringType(), True),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("source", T.StringType(), True),
-            T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-        ]
-    )
-
-
-def read_jsonl_documents(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    corrupt_record_col: str = "_corrupt_record",
-) -> DataFrame:
-    """Schema-enforced JSON-Lines scan for document corpora.
-
-    The de-facto interchange format for LLM training data is JSONL; like the
-    CSV path (S1), the scan is explicit-schema (no inference pass over the
-    corpus), PERMISSIVE, and captures malformed lines in
-    ``corrupt_record_col`` for quarantine instead of failing the read.
-    """
-    schema = schema or documents_schema()
-    if corrupt_record_col not in [f.name for f in schema.fields]:
-        schema = T.StructType(
-            [*schema.fields, T.StructField(corrupt_record_col, T.StringType(), True)]
-        )
-    return (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_record_col)
-        .schema(schema)
-        .json(path)
-    )

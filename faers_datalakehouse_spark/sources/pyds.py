@@ -309,7 +309,6 @@ class VersionedWriter(DataSourceArrowWriter):
             files, extra = entries, {
                 "deletes": [],
                 "column_mapping": {},
-                "column_mapping_dropped": [],
             }
         else:
             prev = (

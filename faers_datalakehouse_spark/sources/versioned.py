@@ -202,82 +202,6 @@ class VersionedTable:
     def history(self) -> list[Snapshot]:
         return [self.snapshot(v) for v in self.versions()]
 
-    def version_as_of(self, committed_at: str) -> int:
-        """The newest version whose ``committed_at`` is <= the given
-        timestamp string (``TIMESTAMP AS OF`` analog). Commit stamps are
-        caller-supplied ISO-sortable strings (the repo's injectable-clock
-        rule), so the comparison is lexicographic."""
-        best = None
-        for s in self.history():
-            if s.committed_at <= committed_at:
-                best = s.version
-        if best is None:
-            raise FileNotFoundError(
-                f"no snapshot of {self.root} at or before {committed_at!r}"
-            )
-        return best
-
-    def read_as_of(
-        self, spark: SparkSession, committed_at: str
-    ) -> DataFrame:
-        """Time travel by timestamp: read the table as of the given
-        commit-stamp (newest snapshot committed at or before it)."""
-        return self.read(spark, version=self.version_as_of(committed_at))
-
-    # -- metadata frames --------------------------------------------------
-
-    def history_df(self, spark: SparkSession) -> DataFrame:
-        """``DESCRIBE HISTORY`` analog: one row per snapshot —
-        ``(version, operation, committed_at, n_files, n_bytes,
-        n_constraints)`` — built driver-side from the manifests (KBs;
-        never touches data files)."""
-        rows = [
-            (
-                s.version,
-                s.operation,
-                s.committed_at,
-                len(s.files),
-                sum(f["bytes"] for f in s.files),
-                len(s.constraints),
-            )
-            for s in self.history()
-        ]
-        return spark.createDataFrame(
-            rows,
-            "version int, operation string, committed_at string, "
-            "n_files int, n_bytes bigint, n_constraints int",
-        )
-
-    def files_df(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame:
-        """``DESCRIBE DETAIL``-style file inventory of one snapshot:
-        ``(path, bytes, partition, n_stats_cols, n_bloom_cols)`` with
-        the partition tuple as a ``col=value`` string (empty for
-        unpartitioned tables)."""
-        snap = self.snapshot(version)
-        spec = snap.extra.get("partition_spec")
-        cols = spec["cols"] if spec else []
-        rows = [
-            (
-                f["path"],
-                f["bytes"],
-                "/".join(
-                    f"{c}={f['partition'].get(c)}" for c in cols
-                )
-                if "partition" in f
-                else "",
-                len(f.get("stats", {})),
-                len(f.get("bloom", {})),
-            )
-            for f in snap.files
-        ]
-        return spark.createDataFrame(
-            rows,
-            "path string, bytes bigint, partition string, "
-            "n_stats_cols int, n_bloom_cols int",
-        )
-
     # -- partition layout -------------------------------------------------
 
     def evolve_partition_spec(
@@ -410,8 +334,7 @@ class VersionedTable:
         names, newest first]}``) — renamed columns resolve each logical
         name by COALESCING its physical aliases across the mixed-name
         file generations (mergeSchema surfaces every physical name, null
-        where a file lacks it), and physical columns that map to no
-        logical name (dropped columns) are projected away."""
+        where a file lacks it)."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -744,14 +667,13 @@ class VersionedTable:
         if cur is not None:
             prev_extra = self.snapshot(cur).extra
             for key in ("partition_spec", "partition_spec_history", "txn",
-                        "deletes", "column_mapping",
-                        "column_mapping_dropped"):
+                        "deletes", "column_mapping"):
                 if key not in extra and prev_extra.get(key) is not None:
                     extra[key] = prev_extra[key]
         # an explicit empty delete list exists only to BLOCK the carry
         # (overwrite/compact/zorder); the published manifest omits it so
         # delete-free snapshots stay byte-identical to pre-MOR ones
-        for k in ("deletes", "column_mapping", "column_mapping_dropped"):
+        for k in ("deletes", "column_mapping"):
             if not extra.get(k):
                 extra.pop(k, None)
         # allocate from the SAME snapshot read the carry-forward used: if
@@ -931,21 +853,10 @@ class VersionedTable:
                 # the new snapshot
                 extra.setdefault("deletes", [])
                 extra.setdefault("column_mapping", {})
-                extra.setdefault("column_mapping_dropped", [])
             live_map = (
                 latest.extra.get("column_mapping") if latest else None
             ) or {}
             if live_map and mode != "overwrite":
-                dropped = set(
-                    latest.extra.get("column_mapping_dropped") or []
-                )
-                clash = [c for c in df.columns if c in dropped]
-                if clash:
-                    raise ValueError(
-                        f"columns {clash} reuse physical names of DROPPED "
-                        "columns still present in data files; compact() "
-                        "first to purge them"
-                    )
                 newmap = dict(live_map)
                 for c in df.columns:  # schema evolution: identity-map
                     if c not in newmap:
@@ -1417,7 +1328,6 @@ class VersionedTable:
             extra={
                 "deletes": [],
                 "column_mapping": {},
-                "column_mapping_dropped": [],
             },
             parent_version=snap.version,
         )
@@ -1512,7 +1422,6 @@ class VersionedTable:
             extra={
                 "deletes": [],
                 "column_mapping": {},
-                "column_mapping_dropped": [],
             },
             parent_version=snap.version,
         )
@@ -1561,10 +1470,6 @@ class VersionedTable:
                 "partition_spec": target.extra.get("partition_spec"),
                 "deletes": target.extra.get("deletes") or [],
                 "column_mapping": target.extra.get("column_mapping") or {},
-                "column_mapping_dropped": target.extra.get(
-                    "column_mapping_dropped"
-                )
-                or [],
             },
             parent_version=cur,
         )
@@ -1948,9 +1853,7 @@ class VersionedTable:
         mapping = dict(snap.extra.get("column_mapping") or {})
         if not mapping:
             mapping = {n: [n] for n in names}
-        all_phys = {p for ps in mapping.values() for p in ps} | set(
-            snap.extra.get("column_mapping_dropped") or []
-        )
+        all_phys = {p for ps in mapping.values() for p in ps}
         if new in all_phys:
             raise ValueError(
                 f"{new!r} collides with a physical column name still "
@@ -1978,58 +1881,7 @@ class VersionedTable:
             "rename_column",
             committed_at,
             schema_json=new_schema.json(),
-            extra={
-                "column_mapping": out,
-                "column_mapping_dropped": snap.extra.get(
-                    "column_mapping_dropped"
-                )
-                or [],
-            },
-            parent_version=snap.version,
-        )
-
-    def drop_column(
-        self,
-        col: str,
-        committed_at: str = "1970-01-01T00:00:00Z",
-    ) -> int:
-        """``ALTER TABLE ... DROP COLUMN`` as a METADATA-ONLY commit: the
-        column leaves the schema and the mapping, so reads project it
-        away; its bytes stay in the data files until a rewrite
-        (``compact()``) purges them. The physical name is remembered as
-        DROPPED so a later append cannot reuse it and silently resurrect
-        stale values from pre-drop files."""
-        snap = self.snapshot()
-        schema = self._schema_fields(snap)
-        names = [f.name for f in schema.fields]
-        if col not in names:
-            raise ValueError(f"no column {col!r} in {names}")
-        if len(names) == 1:
-            raise ValueError("cannot drop the only column")
-        spec = snap.extra.get("partition_spec")
-        if spec and col in spec["cols"]:
-            raise ValueError(f"{col!r} is a partition column")
-        self._check_constraint_refs(snap, col, "drop")
-        mapping = dict(snap.extra.get("column_mapping") or {})
-        if not mapping:
-            mapping = {n: [n] for n in names}
-        physicals = mapping.pop(col)
-        dropped = list(snap.extra.get("column_mapping_dropped") or [])
-        dropped.extend(p for p in physicals if p not in dropped)
-        from pyspark.sql.types import StructType
-
-        new_schema = StructType(
-            [f for f in schema.fields if f.name != col]
-        )
-        return self._commit(
-            snap.files,
-            "drop_column",
-            committed_at,
-            schema_json=new_schema.json(),
-            extra={
-                "column_mapping": mapping,
-                "column_mapping_dropped": dropped,
-            },
+            extra={"column_mapping": out},
             parent_version=snap.version,
         )
 
@@ -2330,15 +2182,6 @@ class VersionedTable:
             for p in sorted(refs.glob("*.json"))
             if not p.name.startswith(".")
         }
-
-    def read_tag(self, spark: SparkSession, name: str) -> DataFrame:
-        """Time travel by NAME: read the snapshot a tag points at."""
-        t = self.tags()
-        if name not in t:
-            raise ValueError(
-                f"no tag {name!r} on {self.root}; have {sorted(t)}"
-            )
-        return self.read(spark, version=t[name])
 
     def apply_cdc(
         self,

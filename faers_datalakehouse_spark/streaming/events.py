@@ -180,78 +180,6 @@ def finish_sessionize(sessions: DataFrame) -> DataFrame:
     )
 
 
-def streaming_funnel_sink(
-    stream: DataFrame,
-    landing_table: str,
-    result_table: str,
-    steps: tuple[str, ...] = ("view", "click", "signup", "purchase"),
-    checkpoint_dir: str | None = None,
-    query_name: str = "funnel_sink",
-):
-    """Continuously-maintained conversion funnel: each micro-batch appends
-    to ``landing_table`` and refreshes ``result_table`` with the EXACT
-    funnel over all events so far (batch operator ``plans.analytics.
-    funnel_over`` reused verbatim).
-
-    Why recompute instead of bounded incremental state: the funnel's
-    step-N time depends on step-(N-1)'s — an out-of-order event that
-    LOWERS a user's earliest step-0 time can retroactively qualify
-    step-1 events that were previously discarded, so no bounded per-user
-    state short of retaining every step-candidate timestamp is correct.
-    Recompute-per-trigger is exact under any arrival order; the funnel
-    aggregate itself is one shuffle over the landing table, and on a real
-    cluster the landing table is partitioned by event date so the scan
-    stays pruned. (Same engineering stance as ``streaming.scd2``: the
-    batch engine IS the streaming engine, applied per micro-batch.)
-    """
-    from ..plans.analytics import funnel_over
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        # replay-idempotent landing: foreachBatch is at-least-once, and a
-        # plain append would duplicate the batch on restart-after-partial-
-        # failure; partitioning by batch id + a static-partition overwrite
-        # makes a replay rewrite ITS OWN partition, byte-equivalent
-        if not spark.catalog.tableExists(landing_table):
-            (
-                batch.withColumn("_batch_id", F.lit(batch_id))
-                .write.partitionBy("_batch_id")
-                .saveAsTable(landing_table)
-            )
-        else:
-            # a fully static partition spec replaces exactly this batch's
-            # partition whatever partitionOverwriteMode the session holds
-            # (a writer option on insertInto is ignored); the SELECT is
-            # position-based, so project into the table's column order
-            cols = ", ".join(
-                f"`{c}`"
-                for c in spark.table(landing_table).columns
-                if c != "_batch_id"
-            )
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {landing_table} "
-                f"PARTITION (_batch_id = {int(batch_id)}) "
-                f"SELECT {cols} FROM {{rows}}",
-                rows=batch,
-            )
-        result = funnel_over(
-            spark.table(landing_table).drop("_batch_id"), steps
-        )
-        # tiny frame (len(steps) rows): materialize via collect, then
-        # overwrite — avoids read-overwrite staging for a 4-row table
-        rows = result.collect()
-        spark.createDataFrame(rows, result.schema).write.mode(
-            "overwrite"
-        ).option("overwriteSchema", "true").saveAsTable(result_table)
-
-    writer = stream.writeStream.foreachBatch(_apply).queryName(query_name)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
 def streaming_type_counts(events: DataFrame) -> DataFrame:
     """Running per-type counts (update-mode stateful aggregate)."""
     return events.groupBy("event_type").agg(
@@ -341,74 +269,6 @@ def streaming_dedup(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
-
-
-def stream_jsonl_documents(
-    spark: SparkSession,
-    path: str,
-    ts_col: str = "ingest_ts",
-    corrupt_record_col: str = "_corrupt_record",
-) -> DataFrame:
-    """Streaming twin of ``sources.ingest.read_jsonl_documents``.
-
-    Explicit-schema PERMISSIVE JSONL scan: malformed lines land in
-    ``corrupt_record_col`` for quarantine instead of failing the stream, and
-    ``ts_col`` (event-time ingest timestamp) is part of the contract so
-    downstream stateful operators can watermark. One batch == the files
-    visible at trigger time; in production the source line changes to Kafka.
-    """
-    from ..sources.ingest import documents_schema
-
-    schema = T.StructType(
-        [
-            *documents_schema().fields,
-            T.StructField(ts_col, T.TimestampType(), True),
-            T.StructField(corrupt_record_col, T.StringType(), True),
-        ]
-    )
-    return (
-        spark.readStream.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_record_col)
-        .schema(schema)
-        .json(path)
-    )
-
-
-def streaming_document_curation(
-    docs: DataFrame,
-    ts_col: str = "ingest_ts",
-    watermark: str = "10 minutes",
-    min_score: float = 0.5,
-    min_tokens: int = 10,
-) -> DataFrame:
-    """Continuous corpus curation: the streaming twin of
-    ``plans.showcase.corpus_curation_query``'s row-grain stages.
-
-    Content-hash dedup within the watermark horizon (bounded state — the
-    only viable layout for an unbounded feed) → language-ID + quality
-    projections → threshold filter. Every stage is append-mode safe: no
-    aggregation, so rows flow through as soon as the dedup state admits
-    them. The per-language corpus rollup deliberately stays OUT of the
-    stream — it runs as a batch query over the curated sink table, keeping
-    streaming at row grain and batch on corpus stats (no duplicated logic:
-    both sides compose the same oracle-checked Column builders).
-    """
-    from ..functions.text import language_id, quality_score_cols
-    from ..operators.dedup import _norm_text
-
-    hashed = docs.withColumn("content_hash", F.md5(_norm_text(F.col("text"))))
-    deduped = hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
-    q = quality_score_cols(F.col("text"))
-    return deduped.select(
-        "doc_id",
-        ts_col,
-        "content_hash",
-        language_id(F.col("text")).alias("pred_lang"),
-        q["q_tokens"].alias("q_tokens"),
-        q["q_score"].alias("q_score"),
-    ).filter((F.col("q_score") >= min_score) & (F.col("q_tokens") >= min_tokens))
 
 
 def streaming_click_purchase_join(

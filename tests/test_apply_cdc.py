@@ -109,15 +109,15 @@ def test_tags_name_time_travel_and_anchor_vacuum(spark, tmp_path):
         committed_at="t3",
     )
     assert t.tags() == {"v1.0": 1}
-    assert [tuple(r) for r in t.read_tag(spark, "v1.0").collect()] == [
-        (1, "a")
-    ]
+    assert [
+        tuple(r) for r in t.read(spark, version=t.tags()["v1.0"]).collect()
+    ] == [(1, "a")]
     # vacuum keeps the tagged snapshot alive (and its files readable)
     t.vacuum(keep_last=1)
     assert 1 in t.versions()
-    assert [tuple(r) for r in t.read_tag(spark, "v1.0").collect()] == [
-        (1, "a")
-    ]
+    assert [
+        tuple(r) for r in t.read(spark, version=t.tags()["v1.0"]).collect()
+    ] == [(1, "a")]
     # untagged middle snapshot was dropped
     assert 2 not in t.versions()
     # after dropping the tag, vacuum reclaims it
@@ -138,5 +138,3 @@ def test_tag_validation(spark, tmp_path):
         t.tag("x")
     with _pytest.raises(ValueError, match="invalid tag name"):
         t.tag("../escape")
-    with _pytest.raises(ValueError, match="no tag"):
-        t.read_tag(spark, "missing")

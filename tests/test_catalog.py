@@ -44,21 +44,3 @@ def test_overwrite_with_analyze_and_exists(spark):
     # overwrite replaces, not appends
     write_overwrite(df, "silver.cat_demo2", target_files=1)
     assert spark.table("silver.cat_demo2").count() == 2
-
-
-def test_read_jsonl_documents(spark, tmp_path):
-    from faers_datalakehouse_spark.sources.ingest import read_jsonl_documents
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web", "meta": {"k": "v"}}\n'
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr", "source": "web", "meta": null}\n'
-        "this line is not json at all\n"
-    )
-    df = read_jsonl_documents(spark, str(p))
-    rows = {r["doc_id"]: r for r in df.collect()}
-    assert rows[1]["text"] == "hello world" and rows[1]["meta"]["k"] == "v"
-    assert rows[2]["lang"] == "fr"
-    # malformed line quarantined, not dropped and not fatal
-    bad = [r for r in rows.values() if r["doc_id"] is None]
-    assert len(bad) == 1 and "not json" in bad[0]["_corrupt_record"]

@@ -29,7 +29,6 @@ from faers_datalakehouse_spark.sources.versioned import VersionedTable
 from faers_datalakehouse_spark.streaming.events import (
     run_to_completion,
     stream_events_from_dir,
-    streaming_funnel_sink,
 )
 
 OVERWRITE = "spark.sql.sources.partitionOverwriteMode"
@@ -128,50 +127,6 @@ def test_matview_refresh_and_optimize(spark, tmp_path, mode):
     }
     assert got == want
     assert opt["files_after"] == len(after)
-
-
-@pytest.mark.parametrize("mode", ["static", "dynamic"])
-def test_streaming_funnel_replay_rewrites_its_own_partition(
-    spark, tmp_path, sf_dir, mode
-):
-    from faers_datalakehouse_spark.plans.analytics import funnel_steps
-
-    ensure_schemas(spark)
-    landing = f"gold.conf_funnel_landing_{mode}"
-    result = f"gold.conf_funnel_result_{mode}"
-    for t in (landing, result):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    src = tmp_path / "funnel_stream"
-    src.mkdir()
-    ev = read_events(spark, sf_dir)
-    ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.parquet(
-        str(src / "batch-a")
-    )
-    ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.parquet(
-        str(src / "batch-b")
-    )
-
-    def run():
-        # no checkpoint: every run replays batch ids 0 and 1 from scratch
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "batch-*"))
-        )
-        q = streaming_funnel_sink(stream, landing, result)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run()
-    with session_conf(spark, OVERWRITE, mode):
-        run()
-    assert spark.table(landing).count() == ev.count()
-    batch_ids = spark.table(landing).select("_batch_id").distinct()
-    assert sorted(r["_batch_id"] for r in batch_ids.collect()) == [0, 1]
-    got = spark.table(result).orderBy("step_index").collect()
-    assert got == funnel_steps(spark, sf_dir).collect()
 
 
 @pytest.mark.parametrize("value", ["false", "true"])

@@ -98,37 +98,6 @@ def test_empty_batch_is_noop(spark, tmp_path):
     assert _as_dict(mv.read(spark)) == before
 
 
-def test_streaming_sink_matches_batch(spark, tmp_path):
-    """The foreachBatch sink folds micro-batches through the same refresh
-    path — end state equals one big batch refresh."""
-    src_dir = tmp_path / "stream_src"
-    for i, (lo, hi) in enumerate([(0, 80), (80, 150)]):
-        _src(spark, lo, hi).write.parquet(str(src_dir / f"b{i}"))
-
-    mv = _mv(tmp_path)
-    stream = (
-        spark.readStream.schema("k int, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        mv.streaming_sink(stream, str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    expect = _as_dict(
-        _src(spark, 0, 150).groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("total"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-    )
-    assert _as_dict(mv.read(spark)) == expect
-
-
 def test_refresh_changes_maintains_under_deletes(spark, tmp_path):
     """Folding a VersionedTable change feed keeps the view equal to a
     recompute over the table's CURRENT content — deletes retract."""
@@ -194,44 +163,6 @@ def test_optimize_compacts_bucket_files(spark, tmp_path):
     assert info["files_after"] <= info["files_before"]
     assert info["files_after"] <= mv.n_buckets  # ~one file per bucket
     assert _as_dict(mv.read(spark)) == before  # content unchanged
-
-
-def test_streaming_changes_sink_retracts(spark, tmp_path):
-    """A streamed change feed (inserts then deletes across micro-batches)
-    leaves the view equal to the net content — deletes retract through
-    the streaming path too."""
-    src_dir = tmp_path / "cdf_src"
-    b0 = spark.createDataFrame(
-        [(1, 10, "insert"), (1, 20, "insert"), (2, 5, "insert")],
-        "k int, v long, change_type string",
-    )
-    b1 = spark.createDataFrame(
-        [(1, 10, "delete"), (3, 7, "insert")],
-        "k int, v long, change_type string",
-    )
-    b0.coalesce(1).write.parquet(str(src_dir / "b0"))
-    b1.coalesce(1).write.parquet(str(src_dir / "b1"))
-
-    mv = IncrementalMatView(
-        path=str(tmp_path / "mv"),
-        group_keys=["k"],
-        measures={"n": ("count", ""), "total": ("sum", "v")},
-        n_buckets=4,
-    )
-    stream = (
-        spark.readStream.schema("k int, v long, change_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        mv.streaming_changes_sink(stream, str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {r["k"]: (r["n"], r["total"]) for r in mv.read(spark).collect()}
-    assert got == {1: (1, 20), 2: (1, 5), 3: (1, 7)}
 
 
 def test_reserved_state_names_rejected(tmp_path):

@@ -5,13 +5,11 @@ codecs are deterministic fakes (no media libs in this container)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.multimodal import (
     decode_media,
     extract_features,
     make_fake_payload,
-    media_summary,
     sample_frames,
 )
 
@@ -59,33 +57,3 @@ def test_extract_features_shape(media):
     for r in feats:
         assert len(r["features"]) == 16
         assert abs(sum(r["features"]) - 1.0) < 1e-5  # normalized histogram
-
-
-def test_media_summary(media):
-    out = {r["ok"]: r["n_media"] for r in media_summary(decode_media(media)).collect()}
-    assert out == {False: 1, True: 2}
-
-
-def test_resize_media_roundtrip(spark):
-    from faers_datalakehouse_spark.operators.multimodal import (
-        decode_media,
-        make_fake_payload,
-        resize_media,
-    )
-
-    rows = [
-        (1, make_fake_payload(640, 480, 30)),
-        (2, b"not a container"),
-    ]
-    df = spark.createDataFrame(rows, ["media_id", "payload"])
-    resized = resize_media(df, target_w=64, target_h=48)
-    got = {r["media_id"]: r for r in resized.collect()}
-    assert got[1]["ok"] and got[1]["width"] == 64 and got[1]["height"] == 48
-    assert not got[2]["ok"] and got[2]["payload"] is None
-    # resized payload is itself a decodable container with the new dims
-    redecoded = decode_media(
-        resized.filter("ok").select("media_id", "payload")
-    ).collect()[0]
-    assert (redecoded["width"], redecoded["height"], redecoded["n_frames"]) == (
-        64, 48, 30,
-    )

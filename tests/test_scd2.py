@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.scd2 import (
     one_per_key,
-    scd2_current_view,
     scd2_initial_load,
     scd2_merge,
     scd2_table_apply,
@@ -76,7 +75,7 @@ def test_missing_key_untouched_and_new_key_inserted(spark, base):
     )
     merged = scd2_merge(dim, batch, BK, TRACKED, "2024-06-01")
     assert merged.count() == 3
-    assert scd2_current_view(merged).count() == 3
+    assert merged.filter(F.col("is_current")).count() == 3
     c3 = merged.filter(F.col("customer_id") == "C003").collect()[0]
     assert c3["effective_date"] == dt.date(2024, 6, 1) and c3["is_current"]
 

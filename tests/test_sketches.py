@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.sketches import (
     cms_build,
-    cms_merge,
     cms_point,
     hll_estimate,
     hll_merge,
@@ -66,15 +65,6 @@ def test_cms_overestimates_never_under(spark):
     assert all(est[k] >= truth[k] for k in truth)
     # 37 keys in 64 columns x 4 rows: the min-over-rows is exact for most
     assert sum(est[k] == truth[k] for k in truth) >= 30
-
-
-def test_cms_merge_is_exact(spark):
-    df = spark.range(0, 2000).withColumn("k", (F.col("id") % 11).cast("string"))
-    a, b = df.filter("id < 900"), df.filter("id >= 900")
-    merged = cms_merge(cms_build(a, "k"), cms_build(b, "k"))
-    whole = cms_build(df, "k")
-    as_set = lambda s: {(r["row"], r["col"], r["cnt"]) for r in s.collect()}
-    assert as_set(merged) == as_set(whole)
 
 
 def test_cms_absent_key_small(spark):

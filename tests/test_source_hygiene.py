@@ -11,11 +11,13 @@ later when the encoding drifts again. The same holds for every testdata
 table: ``sources.tables.read_table`` is the one read path. Runtime
 session-conf writes are pinned to ``session.py`` and two named helpers,
 and Arrow/pandas kernel calls to ``functions/kernels.py`` plus a list of
-older modules that may only shrink.
+older modules that may only shrink. Every package definition must be
+reached from an entry point, the bench, the benchmark or a tool.
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -166,3 +168,104 @@ def test_arrow_kernel_calls_only_through_kernels_module():
     )
     stale = _KERNEL_CALL_ALLOWED - callers
     assert not stale, f"no longer call the Arrow APIs; drop from the list: {sorted(stale)}"
+
+
+# Reachability. A definition (top-level function or class, or method) is
+# reached when its name occurs in a root or in the body of a reached
+# definition. The walk matches names as words, comments and docstrings
+# included, so it can only over-count what is reached. Roots: the driver
+# contract, bench.py, the benchmark and the tools, the package's
+# __init__/__main__ modules, and each module's code outside its
+# definitions. Dunder methods and the callbacks pyspark invokes on
+# DataSource/reader/writer/UDTF classes are reached by construction.
+_ROOT_SCRIPTS = ("__spark_entry__.py", "bench.py", "perfbench/*.py", "tools/*.py")
+_PYSPARK_CALLBACKS = {
+    "sources/pyds.py": {
+        "name", "schema", "reader", "writer", "streamReader", "pushFilters",
+        "partitions", "read", "write", "commit", "abort", "initialOffset",
+        "latestOffset",
+    },
+    "functions/udtf_ops.py": {"eval", "analyze", "terminate"},
+}
+# Unreached definitions that tests of reached code depend on. The list may
+# only shrink: an entry that is reached or gone fails the test.
+_UNREACHED_ALLOWED = {
+    # reference estimators the sketch tests bound the HLL registers with
+    "operators/sketches.py::hll_estimate",
+    "operators/sketches.py::hll_estimate_grouped",
+    # container fixture for the decode_media tests
+    "operators/multimodal.py::make_fake_payload",
+    # drives the streaming operators in tests/test_streaming.py
+    "streaming/events.py::run_to_completion",
+}
+_WORD = re.compile(r"\w+")
+_FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEF = (*_FUNC, ast.ClassDef)
+
+
+def _span(node) -> tuple[int, int]:
+    first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+    return first - 1, node.end_lineno
+
+
+def _unreached_definitions() -> set[str]:
+    roots = [
+        path.read_text()
+        for pattern in _ROOT_SCRIPTS
+        for path in sorted(REPO.glob(pattern))
+    ]
+    defs = []  # (id, name, body text)
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        text = path.read_text()
+        if path.name in ("__init__.py", "__main__.py"):
+            roots.append(text)
+            continue
+        lines = text.splitlines()
+        free = [True] * len(lines)  # module code outside definitions
+        for node in ast.parse(text).body:
+            if not isinstance(node, _DEF):
+                continue
+            a, b = _span(node)
+            free[a:b] = [False] * (b - a)
+            if not isinstance(node, ast.ClassDef):
+                body = "\n".join(lines[a:b])
+                defs.append((f"{rel}::{node.name}", node.name, body))
+                continue
+            own = [a <= i < b for i in range(len(lines))]
+            for m in node.body:
+                if not isinstance(m, _FUNC):
+                    continue
+                ma, mb = _span(m)
+                own[ma:mb] = [False] * (mb - ma)
+                body = "\n".join(lines[ma:mb])
+                dunder = m.name.startswith("__") and m.name.endswith("__")
+                if dunder or m.name in _PYSPARK_CALLBACKS.get(rel, ()):
+                    roots.append(body)
+                else:
+                    defs.append((f"{rel}::{node.name}.{m.name}", m.name, body))
+            own_text = "\n".join(ln for ln, k in zip(lines, own) if k)
+            defs.append((f"{rel}::{node.name}", node.name, own_text))
+        roots.append("\n".join(ln for ln, k in zip(lines, free) if k))
+
+    reached = set(_WORD.findall("\n".join(roots)))
+    unreached = defs
+    while True:
+        hit = [d for d in unreached if d[1] in reached]
+        if not hit:
+            return {d[0] for d in unreached}
+        unreached = [d for d in unreached if d[1] not in reached]
+        for _, _, body in hit:
+            reached.update(_WORD.findall(body))
+
+
+def test_every_definition_is_reached_from_a_root():
+    unreached = _unreached_definitions()
+    dead = sorted(unreached - _UNREACHED_ALLOWED)
+    assert not dead, (
+        "no entry point, bench, benchmark or tool reaches these "
+        "definitions; call them from a root or delete them:\n"
+        + "\n".join(dead)
+    )
+    stale = sorted(_UNREACHED_ALLOWED - unreached)
+    assert not stale, f"reached or gone; drop from the allowlist: {stale}"

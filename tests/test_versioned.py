@@ -466,19 +466,6 @@ def test_merge_rows_honors_constraints(spark, tmp_path):
     assert {r["v"] for r in t.read(spark).filter("id = 5").collect()} == {5}
 
 
-def test_read_as_of_timestamp(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(spark.range(0, 5), committed_at="2024-01-01T00:00:00Z")
-    t.write(spark.range(5, 8), mode="append", committed_at="2024-02-01T00:00:00Z")
-    t.write(spark.range(100, 102), mode="overwrite", committed_at="2024-03-01T00:00:00Z")
-
-    assert _ids(t.read_as_of(spark, "2024-01-15T00:00:00Z")) == list(range(5))
-    assert _ids(t.read_as_of(spark, "2024-02-01T00:00:00Z")) == list(range(8))
-    assert _ids(t.read_as_of(spark, "2099-01-01T00:00:00Z")) == [100, 101]
-    with pytest.raises(FileNotFoundError, match="at or before"):
-        t.read_as_of(spark, "2023-12-31T00:00:00Z")
-
-
 def test_update_where_honors_constraints(spark, tmp_path):
     """Regression: UPDATE used to bypass CHECK validation."""
     from faers_datalakehouse_spark.sources.versioned import (

@@ -1,4 +1,4 @@
-"""Metadata-only column evolution (rename/drop via column mapping) for
+"""Metadata-only column evolution (rename via column mapping) for
 VersionedTable — Iceberg column-mapping analog on plain parquet."""
 
 from __future__ import annotations
@@ -60,35 +60,22 @@ def test_append_after_rename_mixes_generations(spark, root):
     assert out.filter("tag = 'y'").count() == 10
 
 
-def test_drop_column_hides_and_append_cannot_resurrect(spark, root):
-    t = _table(spark, root)
-    t.drop_column("tag", committed_at=T1)
-    out = t.read(spark)
-    assert out.columns == ["id", "grp"]
-    bad = spark.range(100, 105).select(
-        "id", (F.col("id") % 5).alias("grp"), F.lit("z").alias("tag")
-    )
-    with pytest.raises(ValueError, match="DROPPED"):
-        t.write(bad, mode="append", committed_at=T2)
-
-
 def test_compact_materializes_logical_names(spark, root):
     t = _table(spark, root)
     t.rename_column("grp", "bucket", committed_at=T1)
-    t.drop_column("tag", committed_at=T2)
-    res = t.compact(spark, target_file_bytes=10**9, committed_at=T3)
+    # the old physical name still sits in the data files
+    with pytest.raises(ValueError, match="collides"):
+        t.rename_column("tag", "grp")
+    res = t.compact(spark, target_file_bytes=10**9, committed_at=T2)
     assert res["compacted"]
     snap = t.snapshot()
     assert (snap.extra.get("column_mapping") or {}) == {}
     out = t.read(spark)
-    assert out.columns == ["id", "bucket"]
+    assert out.columns == ["id", "bucket", "tag"]
     assert out.count() == 20
-    # post-compaction, the dropped physical name is purged -> reusable
-    again = spark.range(100, 105).select(
-        "id", (F.col("id") % 5).alias("bucket"), F.lit("z").alias("tag")
-    )
-    t.write(again, mode="append", committed_at="2024-01-05T00:00:00Z")
-    assert t.read(spark).filter("tag = 'z'").count() == 5
+    # post-compaction, the renamed-away physical name is purged -> reusable
+    t.rename_column("tag", "grp", committed_at=T3)
+    assert t.read(spark).filter("grp = 'x'").count() == 20
 
 
 def test_rename_translates_stats_and_bloom_probes(spark, root):
@@ -119,8 +106,6 @@ def test_rename_validations(spark, root):
     t.add_constraint(spark, "grp >= 0", committed_at=T1)
     with pytest.raises(ValueError, match="CHECK"):
         t.rename_column("grp", "bucket")
-    with pytest.raises(ValueError, match="CHECK"):
-        t.drop_column("grp")
 
 
 def test_rename_partition_column_rejected(spark, root):
@@ -129,8 +114,6 @@ def test_rename_partition_column_rejected(spark, root):
     t.write(df, mode="overwrite", committed_at=T0, partition_by=("p",))
     with pytest.raises(ValueError, match="partition column"):
         t.rename_column("p", "q")
-    with pytest.raises(ValueError, match="partition column"):
-        t.drop_column("p")
 
 
 def test_mutations_after_rename(spark, root):
