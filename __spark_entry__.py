@@ -1195,7 +1195,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the recall numbers themselves are oracle-reproducible
         "ann_recall": _ann_recall,
         # Morton-curve (ZORDER) values — the clustering expression behind
-        # sources.zorder.write_zordered, bit-exact cross-engine
+        # VersionedTable.optimize_zorder, bit-exact cross-engine
         "zorder_curve": _zorder_curve,
         # first/last-touch attribution (stacked frame windows + full join)
         "attribution": A.attribution,

@@ -4,7 +4,6 @@ from .dedup import (
     ngram_jaccard_pairs,
     simhash_64,
 )
-from .merge import merge_into
 from .scd2 import add_scd2_metadata, scd2_initial_load, scd2_merge
 from .similarity import cosine_neardup_pairs, topk_neighbors_bruteforce
 
@@ -12,7 +11,6 @@ __all__ = [
     "add_scd2_metadata",
     "cosine_neardup_pairs",
     "dedup_exact",
-    "merge_into",
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
     "scd2_initial_load",

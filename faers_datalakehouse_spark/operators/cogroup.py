@@ -34,8 +34,6 @@ _SCHEMA = (
 
 
 def _reconcile(left, right):
-    import pandas as pd
-
     li = (
         right.groupby("o_orderkey", as_index=False)["line_cents"]
         .sum()

@@ -1,9 +1,8 @@
 """Snapshot reconciliation diff: added / removed / changed / unchanged.
 
 The data-diff primitive (Datafold-style): given two keyed snapshots of
-a table — yesterday's load vs today's, a replica vs its source
-(``sources/replication.py`` verifies transport; this verifies
-CONTENT), or pre- vs post-backfill — classify every key and emit a
+a table — yesterday's load vs today's, a replica vs its source, or
+pre- vs post-backfill — classify every key and emit a
 compact, exact reconciliation summary. The row-level variant
 (``table_diff_rows``) feeds repair jobs; the summary feeds monitors.
 

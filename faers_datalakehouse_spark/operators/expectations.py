@@ -5,16 +5,14 @@ The reference validates inputs imperatively inside each silver job
 ``src/silver/silver_demographics.py`` drops rows failing its sex/age
 screens); lakehouse engines have since standardized the declarative
 form: a rule set ``{name: boolean SQL expr}`` attached to a dataset,
-with per-rule violation metrics and a policy (warn / drop / fail) —
-Delta Live Tables ``@expect`` semantics, re-expressed on plain
-DataFrames.
+with per-rule violation metrics and a quarantine split — Delta Live
+Tables ``@expect`` semantics, re-expressed on plain DataFrames.
 
 Scale shape: the audit is ONE scan — every rule becomes a
 ``sum(case when not expr then 1 else 0)`` in a single global aggregate
-(map-side partial, rule-count-sized result). ``enforce(drop)`` is a
-pure filter (scan-stage predicate, no shuffle); ``enforce(fail)``
-raises inside the same single-pass aggregate via the audit. Violation
-counts are exact integers → bit-identical DuckDB twin.
+(map-side partial, rule-count-sized result). ``quarantine`` is a
+pure per-row tag and filter (scan-stage predicate, no shuffle).
+Violation counts are exact integers → bit-identical DuckDB twin.
 """
 
 from __future__ import annotations
@@ -37,10 +35,6 @@ def _check_rule_names(rules: Mapping[str, str]) -> None:
             raise ValueError(
                 f"rule name {name!r} must match [A-Za-z_][A-Za-z0-9_]*"
             )
-
-
-class ExpectationError(ValueError):
-    """Raised by ``enforce(policy="fail")`` when any rule is violated."""
 
 
 def audit(df: DataFrame, rules: Mapping[str, str]) -> DataFrame:
@@ -79,37 +73,6 @@ def audit(df: DataFrame, rules: Mapping[str, str]) -> DataFrame:
         .cast("long")
         .alias("pass_milli"),
     ).orderBy("rule")
-
-
-def enforce(
-    df: DataFrame, rules: Mapping[str, str], policy: str = "drop"
-) -> DataFrame:
-    """Apply the rule set with a policy:
-
-    - ``"drop"``: rows failing ANY rule are removed (scan-stage filter,
-      NULL-safe: a NULL rule result drops the row);
-    - ``"warn"``: passthrough (pair with ``audit`` for the metrics);
-    - ``"fail"``: raise ``ExpectationError`` with per-rule counts if any
-      violation exists (one aggregate pass), else return ``df``.
-    """
-    if policy not in ("drop", "warn", "fail"):
-        raise ValueError(f"unknown policy {policy!r}")
-    _check_rule_names(rules)
-    if not rules or policy == "warn":
-        return df
-    if policy == "drop":
-        cond = F.lit(True)
-        for expr in rules.values():
-            cond = cond & F.coalesce(F.expr(expr), F.lit(False))
-        return df.filter(cond)
-    bad = {
-        r["rule"]: r["n_violations"]
-        for r in audit(df, rules).collect()  # rule-count-sized
-        if r["n_violations"] > 0
-    }
-    if bad:
-        raise ExpectationError(f"expectations violated: {bad}")
-    return df
 
 
 def quarantine(

@@ -47,7 +47,6 @@ def incremental_dedup_decisions(
     threshold: float = 0.5,
     seed: int = 42,
     portable_hash: bool = True,
-    normalize: bool = False,
 ) -> DataFrame:
     """Per-new-doc dedup decision against the existing corpus:
     ``(doc_id, dup_exact, dup_near, keep)`` ordered by doc_id.
@@ -55,24 +54,15 @@ def incremental_dedup_decisions(
     ``dup_exact``: content hash matches an existing doc. ``dup_near``:
     exact Jaccard ≥ ``threshold`` with at least one existing doc sharing a
     MinHash band bucket (exact matches trivially qualify). ``keep`` =
-    neither.
-
-    ``normalize``: hash ``_norm_text`` of the text instead of the raw
-    bytes — pass True wherever the exact layer must agree with
-    ``dedup_exact``'s normalized hashing. Default False preserves the
-    raw-byte semantics the DuckDB oracle twin reproduces.
+    neither. The exact layer hashes the raw text bytes, as the DuckDB
+    oracle twin does.
     """
-    from .dedup import _norm_text
-
-    def _content(col):
-        return _norm_text(col) if normalize else col
-
     new_hashed = new.select(
         F.col(id_col).alias("doc_id"),
-        _md5_hash64(_content(F.col(text_col))).alias("chash"),
+        _md5_hash64(F.col(text_col)).alias("chash"),
     )
     old_hashes = existing.select(
-        _md5_hash64(_content(F.col(text_col))).alias("chash")
+        _md5_hash64(F.col(text_col)).alias("chash")
     ).distinct()
     exact = (
         new_hashed.join(old_hashes, "chash", "left_semi")

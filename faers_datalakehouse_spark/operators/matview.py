@@ -22,9 +22,7 @@ buckets reads and writes ~5% of a state table of any size.
 
 Supported aggregates are the self-mergeable ones — ``count``, ``sum``,
 ``min``, ``max`` — which are exact under append-only sources (the FAERS
-quarterly-load shape; for retractions, pair with
-``sources.versioned.VersionedTable.changes`` and feed deletes as negated
-counts/sums — min/max are then only monotone-safe). Derived measures
+quarterly-load shape). Derived measures
 (averages, rates) belong at read time, computed from exact integer state
 (the repo's cross-engine float rule).
 
@@ -72,13 +70,10 @@ class IncrementalMatView:
                     f"got {agg!r} (derived measures like avg belong at read "
                     "time, computed from sum/count state)"
                 )
-        clash = {"_bucket", "_sign"} & (
-            set(self.group_keys) | set(self.measures)
-        )
-        if clash:
+        if "_bucket" in set(self.group_keys) | set(self.measures):
             raise ValueError(
-                f"column names {sorted(clash)} are reserved by the view's "
-                "internal state; rename the keys/measures"
+                "column name '_bucket' is reserved by the view's internal "
+                "state; rename the keys/measures"
             )
 
     # -- internals --------------------------------------------------------
@@ -120,67 +115,7 @@ class IncrementalMatView:
     def refresh(self, batch: DataFrame) -> dict:
         """Fold one source batch into the view. Returns
         ``{"buckets_touched", "buckets_total", "groups_in_batch"}``."""
-        return self._fold(self._partials(batch))
-
-    def refresh_changes(self, cdf: DataFrame) -> dict:
-        """Fold a change feed (``sources.versioned.VersionedTable.changes``
-        output: table columns + ``change_type`` in insert/delete) into the
-        view — incremental maintenance under DELETEs, not just appends.
-
-        Deletes retract: counts fold as -1, sums as the negated measure.
-        ``min``/``max`` are NOT retractable (removing the current extreme
-        would need the runner-up, which the state doesn't keep), so this
-        raises if the view declares them — recompute those views, or keep
-        their sources append-only."""
-        bad = [o for o, (a, _) in self.measures.items() if a in ("min", "max")]
-        if bad:
-            raise ValueError(
-                f"measures {bad} use min/max, which cannot be maintained "
-                "under deletes; refresh_changes supports count/sum only"
-            )
-        if not any(a == "count" for a, _ in self.measures.values()):
-            raise ValueError(
-                "refresh_changes needs a count measure: fully-retracted "
-                "groups are kept as zero-count tombstones in state (so "
-                "their bucket still rewrites under dynamic partition "
-                "overwrite) and filtered out at read()"
-            )
-        # fail loudly on unexpected change_type values (e.g. Delta CDF's
-        # update_preimage/update_postimage, or a typo) — mapping "not
-        # delete" to +1 would silently count them as inserts
-        sign = (
-            F.when(F.col("change_type") == "delete", F.lit(-1))
-            .when(F.col("change_type") == "insert", F.lit(1))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "refresh_changes: unsupported change_type '"
-                        ),
-                        F.col("change_type"),
-                        F.lit("' (expected insert/delete)"),
-                    )
-                ).cast("int")
-            )
-        )
-        signed = cdf.withColumn("_sign", sign)
-        aggs = []
-        for out, (agg, expr) in self.measures.items():
-            src = F.lit(1) if agg == "count" else F.expr(expr)
-            aggs.append(F.sum(src * F.col("_sign")).alias(out))
-        partials = (
-            signed.groupBy(*self.group_keys)
-            .agg(*aggs)
-            .withColumn("_bucket", self._bucket_col())
-        )
-        return self._fold(partials)
-
-    def _fold(self, partials: DataFrame) -> dict:
-        """Merge partial-aggregate rows into the bucket-partitioned state
-        (shared by refresh and refresh_changes). Fully-retracted groups
-        stay as zero-count tombstone rows: writing them keeps their
-        bucket in the dynamic-overwrite output (an empty bucket would be
-        silently left stale), and ``read()`` filters them out."""
+        partials = self._partials(batch)
         spark = partials.sparkSession
         if not self._exists(spark):
             out = self._merge(partials)
@@ -223,16 +158,10 @@ class IncrementalMatView:
         }
 
     def read(self, spark: SparkSession) -> DataFrame:
-        """The current view: group keys + measure columns (no bucket).
-        Zero-count tombstones (groups fully retracted by
-        ``refresh_changes``) are filtered out."""
-        df = spark.read.parquet(self.path)
-        count_cols = [
-            o for o, (a, _) in self.measures.items() if a == "count"
-        ]
-        if count_cols:
-            df = df.filter(F.col(count_cols[0]) > 0)
-        return df.select(*self.group_keys, *self.measures.keys())
+        """The current view: group keys + measure columns (no bucket)."""
+        return spark.read.parquet(self.path).select(
+            *self.group_keys, *self.measures.keys()
+        )
 
     def optimize(self, spark: SparkSession) -> dict:
         """Compact fragmented bucket partitions: every refresh appends

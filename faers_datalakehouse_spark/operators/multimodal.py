@@ -13,9 +13,6 @@ STUBBED because image/audio libraries are not in this container:
 - ``sample_frames``     — video-style frame sampling: one output row per
   sampled frame index (deterministic stride), again ``mapInPandas`` so each
   Arrow batch amortizes Python overhead.
-- ``extract_features``  — fixed-width feature vector per payload
-  (deterministic fake: byte histogram), the shape a real embedding model
-  would produce.
 
 Scale notes: ``mapInPandas`` keeps the operator embarrassingly parallel
 (no shuffle), streams Arrow batches (bounded memory), and passes binary
@@ -129,31 +126,5 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
                 rows,
                 columns=["media_id", "frame_index", "frame_key", "ok"],
             )
-
-    return df.select("media_id", "payload").mapInPandas(batches, schema=out_schema)
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Fixed-width feature vector per payload (byte-histogram fake).
-
-    Stands in for an embedding model; output shape (``array<float>`` of
-    fixed dim) matches what similarity.py consumes downstream.
-    """
-    out_schema = f"media_id long, features array<float>"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            mids, feats = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                buf = np.frombuffer(payload or b"", dtype=np.uint8)
-                hist = np.zeros(dim, dtype=np.float32)
-                if buf.size:
-                    binned = np.bincount(buf % dim, minlength=dim).astype(np.float32)
-                    hist = binned / buf.size
-                mids.append(mid)
-                feats.append(hist.tolist())
-            yield pd.DataFrame({"media_id": mids, "features": feats})
 
     return df.select("media_id", "payload").mapInPandas(batches, schema=out_schema)

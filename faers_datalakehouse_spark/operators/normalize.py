@@ -27,7 +27,7 @@ alongside ``quantile_binning`` / ``numeric_standardize``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import read_table

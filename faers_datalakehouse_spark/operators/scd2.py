@@ -192,49 +192,6 @@ def scd2_merge(
     ).unionByName(inserted)
 
 
-def scd2_versioned_apply(
-    table,
-    source: DataFrame,
-    business_keys: Sequence[str],
-    tracked_cols: Sequence[str],
-    effective_date: str,
-    committed_at: str = "1970-01-01T00:00:00Z",
-    key_extra: str | None = None,
-) -> int:
-    """Apply one SCD2 merge against a ``sources.versioned.VersionedTable``.
-
-    ``key_extra``: per-batch surrogate-key token (see
-    ``add_scd2_metadata``) — REQUIRED when merging more than one batch
-    under the same ``effective_date``, or the new and closed versions of
-    a key collide on ``dim_key``.
-
-    The cleanest writer shape: the merge reads the current snapshot's
-    files and the commit stages brand-new files, so there is no
-    read-overwrite conflict — no staging table, no ``localCheckpoint``
-    (compare the stage-then-rename swap in ``scd2_table_apply``)
-    — and the swap is atomic: readers see the pre- or post-merge dimension,
-    never a mix. Every merge is also a retained snapshot, so
-    ``table.read(spark, version=N)`` time-travels the dimension state as
-    of merge N on top of the row-level history SCD2 itself keeps.
-    Returns the committed version.
-    """
-    spark = source.sparkSession
-    if table.current_version() is None:
-        out = scd2_initial_load(
-            source, business_keys, tracked_cols, effective_date
-        )
-    else:
-        out = scd2_merge(
-            table.read(spark),
-            source,
-            business_keys,
-            tracked_cols,
-            effective_date,
-            key_extra=key_extra,
-        )
-    return table.write(out, mode="overwrite", committed_at=committed_at)
-
-
 def scd2_table_apply(
     spark,
     table: str,
@@ -265,7 +222,7 @@ def scd2_table_apply(
     finds ``table`` missing and the stage present, renames the stage into
     place and then merges, so the dimension's history is never lost to
     the initial-load path. Delta/Iceberg replace the swap with an atomic
-    MERGE; ``scd2_versioned_apply`` gets atomicity from the manifest log.
+    MERGE.
     Shared by the batch dims (plans.medallion) and the streaming sink
     (streaming.scd2) — one code path, one set of semantics.
     """

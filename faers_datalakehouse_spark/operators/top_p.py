@@ -162,80 +162,6 @@ ORDER BY source, n_chars DESC, doc_id
 """
 
 
-def weighted_quantile(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    value_col: str,
-    weight_col: str,
-    q_num: int = 1,
-    q_den: int = 2,
-) -> DataFrame:
-    """Exact WEIGHTED q-quantile per group without a group-sized sort —
-    the same two-phase bit-length-bucket machinery as ``top_p_filter``,
-    pointed at quantile selection: the answer is the value of the first
-    row (ordered by value asc, id asc) whose inclusive cumulative
-    weight reaches ``q_num/q_den`` of the group's total weight
-    (the weighted "lower" quantile — integer-exact, no interpolation).
-
-    Phase 1 classifies ~64 weight-magnitude buckets per group from a
-    bucket-count-sized frame; only the single crossing bucket per group
-    gets an exact running-sum window. Values and weights must be
-    non-negative / positive integers. Returns ``(group, total_w,
-    value)``."""
-    if not (0 < q_num <= q_den):
-        raise ValueError("need 0 < q_num <= q_den")
-    t = df.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("id"),
-        F.col(value_col).cast("long").alias("v"),
-        F.col(weight_col).cast("long").alias("w"),
-    ).where((F.col("w") > 0) & (F.col("v") >= 0))
-    # ``rows`` feeds two consumers (bucket sums + the boundary join), and
-    # callers ask for several quantiles of the same frame (p50 + p90 in
-    # weighted_quantiles_query) — because Spark's cache is keyed by the
-    # analyzed plan, one persist here makes every same-input call share
-    # ONE materialization instead of re-scanning per consumer per call
-    # (4 scans of lineitem before, r12 plan audit).
-    rows = t.withColumn("bkt", F.length(F.bin("v"))).persist()
-
-    per_bucket = rows.groupBy("g", "bkt").agg(F.sum("w").alias("bw"))
-    wg = Window.partitionBy("g")
-    wrun = (
-        Window.partitionBy("g")
-        .orderBy(F.asc("bkt"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    classified = per_bucket.select(
-        "g",
-        "bkt",
-        (F.sum("bw").over(wrun) - F.col("bw")).alias("cum_before"),
-        F.sum("bw").over(wrun).alias("cum_end"),
-        F.sum("bw").over(wg).alias("total_w"),
-    )
-    crossing = classified.where(
-        (F.col("cum_before") * q_den < q_num * F.col("total_w"))
-        & (F.col("cum_end") * q_den >= q_num * F.col("total_w"))
-    ).select("g", "bkt", "cum_before", "total_w")
-
-    boundary = rows.join(F.broadcast(crossing), ["g", "bkt"])
-    wexact = (
-        Window.partitionBy("g", "bkt")
-        .orderBy(F.asc("v"), F.asc("id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        boundary.withColumn(
-            "cum_row", F.col("cum_before") + F.sum("w").over(wexact)
-        )
-        .where(F.col("cum_row") * q_den >= q_num * F.col("total_w"))
-        .groupBy("g", "total_w")
-        .agg(F.min("v").alias("value"))
-        .select(F.col("g"), "total_w", "value")
-        .orderBy("g")
-    )
-
-
 def weighted_quantile_multi(
     df: DataFrame,
     group_col: str,
@@ -247,12 +173,13 @@ def weighted_quantile_multi(
     """Several exact weighted quantiles of the SAME frame in one pass:
     ``(g, total_w, <name> for each (q_num, q_den, name))``, one row per
     group — the bucket classification (phase 1) runs ONCE and each
-    quantile contributes only its crossing-bucket window (r12; two
-    independent ``weighted_quantile`` calls re-ran the bucket aggregate,
-    the classify windows, and the boundary join per quantile — guide
-    §2.4 "two operations keyed the same way can share one exchange").
-    Each quantile's value is bit-identical to the single-quantile
-    function (same crossing rule, same window, same tie-break)."""
+    quantile contributes only its crossing-bucket window.
+
+    Each quantile is the value of the first row (ordered by value asc,
+    id asc) whose inclusive cumulative weight reaches ``q_num/q_den`` of
+    the group's total weight (the weighted "lower" quantile —
+    integer-exact, no interpolation). Values and weights must be
+    non-negative / positive integers."""
     for q_num, q_den, _ in quantiles:
         if not (0 < q_num <= q_den):
             raise ValueError("need 0 < q_num <= q_den")
@@ -347,7 +274,7 @@ def weighted_quantiles_query(spark, sf_dir: str) -> DataFrame:
     """Driver entry: quantity-weighted p50/p90 of lineitem price cents
     per returnflag — volume-weighted price distribution. Both quantiles
     come from ONE ``weighted_quantile_multi`` pass (shared bucket
-    classification; identical values to two independent calls)."""
+    classification)."""
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_orderkey",

@@ -38,10 +38,6 @@ def ensure_schemas(
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {s}")
 
 
-def table_exists(spark: SparkSession, table: str) -> bool:
-    return spark.catalog.tableExists(table)
-
-
 def read_latest_partition(
     spark: SparkSession, table: str, partition_col: str = "_ingest_ts"
 ) -> DataFrame:
@@ -56,39 +52,6 @@ def read_latest_partition(
     if latest is None:
         return df
     return df.filter(F.col(partition_col) == F.lit(latest))
-
-
-def write_append_partitioned(
-    df: DataFrame, table: str, partition_by: list[str] | None = None
-) -> None:
-    """S4: append sink, partitioned for downstream pruning."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table)
-
-
-def write_overwrite(
-    df: DataFrame,
-    table: str,
-    partition_by: list[str] | None = None,
-    target_files: int | None = None,
-    analyze: bool = False,
-) -> None:
-    """S5/S6: overwrite sink with optional partitioning + compaction.
-
-    ``target_files`` coalesces the final stage to bound file count (OSS
-    substitute for Delta autoCompact); ``analyze`` runs
-    ``ANALYZE TABLE ... COMPUTE STATISTICS`` (S9) so the CBO sees row counts.
-    """
-    if target_files:
-        df = df.coalesce(target_files)
-    writer = df.write.mode("overwrite").option("overwriteSchema", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table)
-    if analyze:
-        df.sparkSession.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
 
 
 def optimize_table(

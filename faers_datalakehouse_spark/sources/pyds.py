@@ -218,7 +218,7 @@ class VersionedWriter(DataSourceArrowWriter):
     publishes ONE manifest snapshot via the table's exclusive-link
     protocol — a concurrent writer surfaces as ``ConcurrentWriteError``
     instead of a lost update, and a failed job leaves only unreferenced
-    staging files (``abort()`` removes them; ``vacuum`` would too).
+    staging files (``abort()`` removes them).
 
     Per-file min/max stats for ``.option("stats_cols", "a,b")`` come
     from the PARQUET FOOTERS of the staged files — no second Spark job

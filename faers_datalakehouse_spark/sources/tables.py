@@ -170,25 +170,3 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     with nanos_as_long(spark):
         df = read_table(spark, sf_dir, "events")
     return normalize_event_ts(df)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Lazy DataFrames for each table under ``sf_dir``."""
-    return {
-        name: (
-            read_events(spark, sf_dir)
-            if name == "events"
-            else read_table(spark, sf_dir, name)
-        )
-        for name in names
-    }
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> None:
-    """Register each table as a temp view for the SQL API paths."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

@@ -24,8 +24,7 @@ the semantics the reference actually relies on:
 - **transactional compaction**: ``compact()`` writes new files and a new
   manifest — at no instant can a reader observe a partially-compacted
   table (this closes the documented non-transactional window of
-  ``sources.maintenance.compact_table`` on live directories);
-- **vacuum**: physically deletes files unreferenced by retained manifests.
+  ``sources.maintenance.compact_table`` on live directories).
 
 Data skipping: per-file min/max stats (``read_pruned`` — clustered
 columns) and per-file bloom filter indexes (``read_bloom_pruned`` —
@@ -123,6 +122,17 @@ def _probe_safe(v):
     return v
 
 
+def _check_name_free(mapping: dict[str, list[str]], name: str) -> None:
+    """A new logical column may not take a physical name that data files
+    still carry under another column: reads would resolve the old files'
+    values under the new name."""
+    if name in {p for ps in mapping.values() for p in ps}:
+        raise ValueError(
+            f"{name!r} collides with a physical column name still "
+            "present in data files; compact() first"
+        )
+
+
 class ConstraintViolation(ValueError):
     """A write violated a table CHECK constraint; nothing was committed."""
 
@@ -150,7 +160,7 @@ class Snapshot:
     # table-level CHECK constraints (SQL boolean expressions) carried
     # forward snapshot-to-snapshot, Delta-style
     constraints: list[str] = None
-    # free-form commit metadata (e.g. replication watermark) — recorded
+    # free-form commit metadata (e.g. a streaming txn watermark) — recorded
     # atomically WITH the snapshot, so bookkeeping can never diverge
     # from the data it describes
     extra: dict = None
@@ -198,9 +208,6 @@ class VersionedTable:
             constraints=doc.get("constraints") or [],
             extra=doc.get("extra") or {},
         )
-
-    def history(self) -> list[Snapshot]:
-        return [self.snapshot(v) for v in self.versions()]
 
     # -- partition layout -------------------------------------------------
 
@@ -860,6 +867,11 @@ class VersionedTable:
                 newmap = dict(live_map)
                 for c in df.columns:  # schema evolution: identity-map
                     if c not in newmap:
+                        try:
+                            _check_name_free(live_map, c)
+                        except ValueError:
+                            self._drop_staged(new_files)
+                            raise
                         newmap[c] = [c]
                 extra["column_mapping"] = newmap
             try:
@@ -884,14 +896,12 @@ class VersionedTable:
         spark: SparkSession,
         new_files: list[dict],
         checks: list[str],
-        cleanup: bool = True,
         spec: dict | None = None,
     ) -> None:
         """One pass over the given files counting violations per
         constraint; on any hit, raise with counts + up to 3 sample rows
-        per failing check. ``cleanup`` deletes the files first (staged
-        uncommitted files only — callers validating LIVE files, e.g.
-        ``add_constraint``, MUST pass False). ``spec``: partition spec,
+        per failing check, after deleting the (staged, uncommitted)
+        files. ``spec``: partition spec,
         so CHECKs may reference partition columns (stripped from the
         data files by the Hive layout)."""
         from pyspark.sql import functions as F
@@ -921,15 +931,18 @@ class VersionedTable:
             ]
             for c in bad
         }
-        if cleanup:
-            for f in new_files:
-                p = self.root / f["path"]
-                if p.exists():
-                    p.unlink()
+        self._drop_staged(new_files)
         raise ConstraintViolation(
             f"write rejected, nothing committed: {bad} violating rows "
             f"(constraint -> count); samples: {samples}"
         )
+
+    def _drop_staged(self, files: list[dict]) -> None:
+        """Delete staged, never-committed files."""
+        for f in files:
+            p = self.root / f["path"]
+            if p.exists():
+                p.unlink()
 
     # -- reads ------------------------------------------------------------
 
@@ -1278,7 +1291,7 @@ class VersionedTable:
         fragmented (more files than ``ceil(bytes/target)``), write
         compacted files and publish them as a new snapshot. Readers always
         see either the old or the new snapshot, never a mix; prior
-        versions stay readable until ``vacuum``.
+        versions stay readable.
 
         The skipping index survives compaction: whatever columns the
         current snapshot carries stats for are re-recorded on the new
@@ -1365,7 +1378,7 @@ class VersionedTable:
 
         State-dependent like ``compact``: a concurrent commit surfaces as
         ``ConcurrentWriteError`` — re-run on the new snapshot. Time
-        travel to pre-optimize versions still works until ``vacuum``."""
+        travel to pre-optimize versions still works."""
         from pyspark.sql import functions as F
 
         from .zorder import bucketize, z_value
@@ -1442,7 +1455,7 @@ class VersionedTable:
         with it; streaming transaction watermarks (``extra['txn']``) are
         deliberately NOT rolled back — rewinding them would make an
         exactly-once sink re-append batches it already committed.
-        Fails if the target's files were already vacuumed."""
+        Fails if any of the target's files is missing."""
         cur = self.current_version()
         target = self.snapshot(version)
         missing = [
@@ -1455,7 +1468,7 @@ class VersionedTable:
         if missing:
             raise FileNotFoundError(
                 f"cannot restore {self.root} to v{version}: "
-                f"{len(missing)} data file(s) were vacuumed "
+                f"{len(missing)} data file(s) are missing "
                 f"(first: {missing[0]!r})"
             )
         if version == cur:
@@ -1475,59 +1488,10 @@ class VersionedTable:
         )
         return {"restored": True, "version": new_v, "restored_to": version}
 
-    def clone(
-        self,
-        dest_root: str,
-        version: int | None = None,
-        committed_at: str = "1970-01-01T00:00:00Z",
-    ) -> "VersionedTable":
-        """Shallow ``CLONE`` analog: create a new table at ``dest_root``
-        whose v1 manifest references THIS table's data files by absolute
-        path — a metadata-only copy (KBs), independent history from then
-        on. Writes to the clone stage new files under its own root; the
-        borrowed files are never rewritten. Bloom indexes and min/max
-        stats ride along (they live inline in the manifest).
-
-        Caveats (same as Delta shallow clones): ``vacuum`` on the SOURCE
-        can delete files the clone still references — vacuum the source
-        only after clones are dropped or deep-copied; the clone's own
-        ``vacuum`` never deletes borrowed (absolute-path) files. The
-        source's streaming watermarks are not copied — the clone is a new
-        table identity, so a stream targeting it starts from scratch."""
-        snap = self.snapshot(version)
-        dest = VersionedTable(dest_root)
-        if dest.current_version() is not None:
-            raise ValueError(
-                f"clone destination {dest_root} is already a table"
-            )
-        files = []
-        for f in snap.files:
-            e = dict(f)
-            p = Path(f["path"])
-            e["path"] = str(p if p.is_absolute() else (self.root / p))
-            files.append(e)
-        dest._commit(
-            files,
-            "clone",
-            committed_at,
-            schema_json=snap.schema_json,
-            constraints=list(snap.constraints),
-            extra={
-                "partition_spec": snap.extra.get("partition_spec"),
-                "clone_source": {
-                    "root": str(self.root),
-                    "version": snap.version,
-                },
-            },
-            parent_version=None,
-        )
-        return dest
-
     def rewrite_where(
         self,
         spark: SparkSession,
         predicate: str,
-        transform=None,
         committed_at: str = "1970-01-01T00:00:00Z",
     ) -> dict:
         """Copy-on-write row-level mutation — the Delta DELETE/UPDATE
@@ -1537,9 +1501,7 @@ class VersionedTable:
         pre- or post-mutation snapshot atomically; prior versions keep
         time-traveling to the unmodified data.
 
-        ``transform(matched_df) -> DataFrame | None``: None (default)
-        deletes matching rows; otherwise the returned frame REPLACES them
-        (must keep the table schema). Returns
+        Matching rows are deleted. Returns
         ``{version, files_rewritten, files_kept, rows_matched}``.
 
         File pruning is one aggregation over ``input_file_name()`` —
@@ -1607,10 +1569,6 @@ class VersionedTable:
             mapping=snap.extra.get("column_mapping"),
         )
         survivors = affected.filter(f"NOT ({predicate})")
-        if transform is not None:
-            replaced = transform(affected.filter(predicate))
-            if replaced is not None:
-                survivors = survivors.unionByName(replaced)
         # the skipping index survives row-level mutation exactly as it
         # survives compaction: re-record whatever columns the snapshot
         # already carries stats for
@@ -1620,11 +1578,9 @@ class VersionedTable:
             stats_cols=stats_cols,
             partition_by=tuple(spec["cols"]) if spec else (),
         )
-        # UPDATEd rows honor the table's CHECK constraints like every
-        # other path (write, merge) — otherwise update_where could
-        # silently break the "published constraint is TRUE of the whole
-        # table" invariant; violation unlinks the staged files, so the
-        # table is untouched
+        # rewritten rows honor the table's CHECK constraints like every
+        # other path (write, merge); violation unlinks the staged files,
+        # so the table is untouched
         if snap.constraints and new_files:
             self._validate_staged(
                 spark, new_files, snap.constraints, spec=spec
@@ -1672,9 +1628,7 @@ class VersionedTable:
           delete-heavy write paths, CoW wins on read-heavy tables.
         """
         if mode == "cow":
-            return self.rewrite_where(
-                spark, predicate, transform=None, committed_at=committed_at
-            )
+            return self.rewrite_where(spark, predicate, committed_at=committed_at)
         if mode != "mor":
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         return self._mor_delete(spark, predicate, committed_at)
@@ -1734,10 +1688,7 @@ class VersionedTable:
             else 0
         )
         if rows == 0:
-            for e in entries:  # unlink the staged empty tombstone
-                p = self.root / e["path"]
-                if p.exists():
-                    p.unlink()
+            self._drop_staged(entries)  # the staged empty tombstone
             return {
                 "version": snap.version,
                 "rows_deleted": 0,
@@ -1758,27 +1709,6 @@ class VersionedTable:
             "delete_files": len(entries),
             "files_rewritten": 0,
         }
-
-    def update_where(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        set_exprs: dict[str, str],
-        committed_at: str = "1970-01-01T00:00:00Z",
-    ) -> dict:
-        """Row-level UPDATE: matching rows get ``set_exprs`` (column ->
-        SQL expression) applied; copy-on-write like ``rewrite_where``."""
-        from pyspark.sql import functions as F
-
-        def apply(matched):
-            out = matched
-            for col, expr in set_exprs.items():
-                out = out.withColumn(col, F.expr(expr))
-            return out
-
-        return self.rewrite_where(
-            spark, predicate, transform=apply, committed_at=committed_at
-        )
 
     def _physical_names(self, snap: Snapshot, col: str) -> list[str]:
         """All physical (in-file) names a logical column may appear under
@@ -1853,12 +1783,7 @@ class VersionedTable:
         mapping = dict(snap.extra.get("column_mapping") or {})
         if not mapping:
             mapping = {n: [n] for n in names}
-        all_phys = {p for ps in mapping.values() for p in ps}
-        if new in all_phys:
-            raise ValueError(
-                f"{new!r} collides with a physical column name still "
-                "present in data files; compact() first"
-            )
+        _check_name_free(mapping, new)
         physicals = mapping.pop(old)
         out = {}
         for n in names:  # preserve schema order in the mapping
@@ -1882,39 +1807,6 @@ class VersionedTable:
             committed_at,
             schema_json=new_schema.json(),
             extra={"column_mapping": out},
-            parent_version=snap.version,
-        )
-
-    def add_constraint(
-        self,
-        spark: SparkSession,
-        expr: str,
-        validate_existing: bool = True,
-        committed_at: str = "1970-01-01T00:00:00Z",
-    ) -> int:
-        """ALTER TABLE ADD CONSTRAINT: append a CHECK to the persisted
-        set as a metadata-only snapshot (same file list). With
-        ``validate_existing`` (default, unlike Delta's optional behavior)
-        the current rows are scanned first and a violation rejects the
-        constraint — so a published constraint is always TRUE of the
-        whole table, past and future."""
-        snap = self.snapshot()
-        if expr in snap.constraints:
-            return snap.version
-        if validate_existing and snap.files:
-            self._validate_staged(
-                spark,
-                snap.files,
-                [expr],
-                cleanup=False,
-                spec=snap.extra.get("partition_spec"),
-            )
-        return self._commit(
-            snap.files,
-            "add_constraint",
-            committed_at,
-            schema_json=snap.schema_json,
-            constraints=snap.constraints + [expr],
             parent_version=snap.version,
         )
 
@@ -1943,8 +1835,7 @@ class VersionedTable:
         Cost tracks the matched keys' file footprint, not table size —
         and clustering (``sources.zorder`` / ``repartitionByRange``)
         shrinks that footprint exactly as it does for ``rewrite_where``.
-        Unlike ``operators.merge`` (which materializes the full merged
-        frame), rows in untouched files are never read or rewritten.
+        Rows in untouched files are never read or rewritten.
 
         ``replace`` upserts whole rows (the ``source`` row becomes the
         row for its key); multiset caveat: ALL existing rows with a
@@ -1963,7 +1854,7 @@ class VersionedTable:
         part_cols = tuple(spec["cols"]) if spec else ()
         keys = source.select(*key_cols)
         if _extra_match_keys is not None:
-            # apply_changes: delete-only keys must also be cleared
+            # apply_cdc: delete-only keys must also be cleared
             keys = keys.union(_extra_match_keys.select(*key_cols))
         keys = keys.distinct()
         if not snap.files:
@@ -2053,10 +1944,7 @@ class VersionedTable:
                     spark, new_files, snap.constraints, spec=spec
                 )
             except ConstraintViolation:
-                for f in rewritten:  # roll back the whole staged merge
-                    p = self.root / f["path"]
-                    if p.exists():
-                        p.unlink()
+                self._drop_staged(rewritten)  # roll back the staged merge
                 raise
         from pyspark.sql.types import StructType as _St
 
@@ -2079,108 +1967,6 @@ class VersionedTable:
             "files_rewritten": len(hit),
             "files_kept": len(kept),
             "files_added": len(new_files),
-        }
-
-    def apply_changes(
-        self,
-        spark: SparkSession,
-        cdf: DataFrame,
-        key_cols: list[str],
-        committed_at: str = "1970-01-01T00:00:00Z",
-        commit_extra: dict | None = None,
-    ) -> dict:
-        """Replay a change feed (``changes()`` output of ANOTHER table:
-        data columns + ``change_type``) into this table — downstream
-        mirror maintenance without rereading the source table.
-
-        An update travels as delete+insert of the same key, so applying
-        "remove every key with any delete, then add the insert rows"
-        reproduces the source's end state for the touched keys. Both
-        phases land in ONE ``merge_rows`` call: the delete-only keys ride
-        the key match; insert rows are the staged source."""
-        from pyspark.sql import functions as F
-
-        inserts = cdf.filter(F.col("change_type") == "insert").drop(
-            "change_type"
-        )
-        deletes = cdf.filter(F.col("change_type") == "delete").drop(
-            "change_type"
-        )
-        # keys to clear = every touched key (delete keys, plus insert keys
-        # so stale rows never survive a replayed upsert); merge_rows with
-        # "replace" clears matched keys and stages `inserts` as new files
-        over = (
-            cdf.groupBy("change_type", *key_cols)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(3)
-            .collect()
-        )
-        if over:
-            raise ValueError(
-                f"apply_changes: key {key_cols} is not unique in the "
-                f"change feed (e.g. {[tuple(r)[1:-1] for r in over]} appear "
-                "more than once per change_type) — it cannot be a unique "
-                "key of the source table, and replaying on a non-unique "
-                "key silently diverges"
-            )
-        touched = deletes.select(*key_cols).union(
-            inserts.select(*key_cols)
-        )
-        stats = self.merge_rows(
-            spark,
-            inserts,
-            key_cols,
-            when_matched="replace",
-            committed_at=committed_at,
-            _extra_match_keys=touched,
-            commit_extra=commit_extra,
-        )
-        return stats
-
-    def tag(self, name: str, version: int | None = None) -> int:
-        """Name a snapshot (Iceberg tag / Delta named-version parity):
-        a retention anchor and human-readable time-travel handle.
-        Tags live as one tiny JSON file per name under ``refs/``,
-        published with the same exclusive-link protocol as manifests —
-        re-tagging an existing name raises (delete first); ``vacuum``
-        refuses to drop tagged snapshots."""
-        import re as _re
-
-        if not _re.match(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,63}$", name):
-            raise ValueError(f"invalid tag name {name!r}")
-        v = self.current_version() if version is None else int(version)
-        if v is None or v not in self.versions():
-            raise ValueError(f"version {v} does not exist in {self.root}")
-        refs = self.root / "refs"
-        refs.mkdir(parents=True, exist_ok=True)
-        tmp = refs / f".tmp-{uuid.uuid4().hex}.json"
-        tmp.write_text(json.dumps({"version": v}))
-        target = refs / f"{name}.json"
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            raise ValueError(
-                f"tag {name!r} already exists (drop_tag first)"
-            )
-        finally:
-            tmp.unlink(missing_ok=True)
-        return v
-
-    def drop_tag(self, name: str) -> None:
-        p = self.root / "refs" / f"{name}.json"
-        if not p.exists():
-            raise ValueError(f"no tag {name!r} on {self.root}")
-        p.unlink()
-
-    def tags(self) -> dict[str, int]:
-        refs = self.root / "refs"
-        if not refs.exists():
-            return {}
-        return {
-            p.stem: json.loads(p.read_text())["version"]
-            for p in sorted(refs.glob("*.json"))
-            if not p.name.startswith(".")
         }
 
     def apply_cdc(
@@ -2260,53 +2046,3 @@ class VersionedTable:
             _extra_match_keys=touched,
             commit_extra=commit_extra,
         )
-
-    def vacuum(self, keep_last: int = 1) -> int:
-        """Delete data files referenced ONLY by dropped snapshots, then
-        drop those manifests. Keeps the newest ``keep_last`` snapshots.
-        Returns the number of data files deleted."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        vs = self.versions()
-        keep, drop = vs[-keep_last:], vs[:-keep_last]
-        # tags are retention anchors: a tagged snapshot (and its files)
-        # survives vacuum regardless of keep_last
-        tagged = set(self.tags().values())
-        if tagged & set(drop):
-            keep = sorted(set(keep) | (tagged & set(drop)))
-            drop = [v for v in drop if v not in tagged]
-        if not drop:
-            return 0
-        def _owned(snap: Snapshot) -> list[dict]:
-            return snap.files + (snap.extra.get("deletes") or [])
-
-        live = {
-            f["path"] for v in keep for f in _owned(self.snapshot(v))
-        }
-        removed = 0
-        for v in drop:
-            for f in _owned(self.snapshot(v)):
-                # absolute paths are files BORROWED from a shallow-clone
-                # source — this table never owns them, so vacuum must
-                # never delete them (mirror of Delta's clone contract)
-                if Path(f["path"]).is_absolute():
-                    continue
-                if f["path"] not in live:
-                    p = self.root / f["path"]
-                    if p.exists():
-                        p.unlink()
-                        removed += 1
-            (self.manifest_dir / f"v{v:08d}.json").unlink()
-        # prune staging dirs that hold no live parquet anymore —
-        # partitioned stages nest col=value subdirs, and Spark leaves
-        # _SUCCESS markers, so "directly empty" is the wrong test; a
-        # stage with no referenced data file left is dead wholesale
-        import shutil as _shutil
-
-        for sub in ("data", "deletes"):
-            subdir = self.root / sub
-            if subdir.exists():
-                for d in subdir.iterdir():
-                    if d.is_dir() and not any(d.rglob("*.parquet")):
-                        _shutil.rmtree(d)
-        return removed

@@ -15,16 +15,17 @@ oracle-checkable. Columns with arbitrary ranges should be rank-bucketed
 to ``[0, 2^bits)`` first (``bucketize`` below does equi-width over an
 observed min/max; production layouts use quantile buckets, same shape).
 
-``write_zordered`` = compute z → ``repartitionByRange(_z)`` (range
-exchange: samples boundaries, no driver data) → ``sortWithinPartitions``
-→ write. Each output file then covers a tight z-range = a small axis-
-aligned region of (x, y) space. Verified by ``tests/test_zorder.py``
-measuring per-file min-max spans against an unclustered write.
+``VersionedTable.optimize_zorder`` lays a table out on the curve:
+compute z → ``repartitionByRange(_z)`` (range exchange: samples
+boundaries, no driver data) → sort within partitions → write. Each
+output file then covers a tight z-range = a small axis-aligned region of
+(x, y) space. Verified by ``tests/test_zorder.py`` measuring per-file
+min-max spans against an unclustered write.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -69,24 +70,4 @@ def bucketize(col: Column, lo: Column, hi: Column, bits: int = 16) -> Column:
             F.lit(n).cast("long"),
         ),
         F.lit(0).cast("long"),
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zx: str,
-    zy: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Morton curve of
-    (``zx``, ``zy``) — both assumed already in ``[0, 2^bits)``."""
-    (
-        df.withColumn("_z", z_value(F.col(zx), F.col(zy), bits))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )

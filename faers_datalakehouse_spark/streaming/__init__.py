@@ -1,13 +1,6 @@
-from .events import (
-    stream_events_from_dir,
-    streaming_session_windows,
-    streaming_type_counts,
-    windowed_event_aggregate,
-)
+from .events import stream_events_from_dir, windowed_event_aggregate
 
 __all__ = [
     "stream_events_from_dir",
-    "streaming_session_windows",
-    "streaming_type_counts",
     "windowed_event_aggregate",
 ]

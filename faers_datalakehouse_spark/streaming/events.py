@@ -8,10 +8,6 @@ streaming twins here:
 - ``windowed_event_aggregate``   — tumbling/sliding window + watermark: the
   streaming version of the per-day/type rollups. Late rows beyond the
   watermark are dropped; state is bounded.
-- ``streaming_session_windows``  — ``session_window(ts, gap)``: the streaming
-  twin of plans.analytics.sessionize (same gap semantics, incremental state).
-- ``streaming_type_counts``      — running counts in update mode (the
-  simplest stateful shape, used by tests).
 
 Local tests drive these with a file source over a directory of parquet
 (one batch == whole directory) and a memory sink +
@@ -109,27 +105,6 @@ def windowed_event_aggregate(
     )
 
 
-def streaming_session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Gap-based session windows per user (streaming sessionize twin)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(cents("value")).alias("value_c"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            (F.col("value_c").cast("double") / 100.0).alias("session_value"),
-        )
-    )
-
-
 def streaming_sessionize(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:
@@ -177,14 +152,6 @@ def finish_sessionize(sessions: DataFrame) -> DataFrame:
             (F.col("value_c").cast("double") / 100.0).alias("session_value"),
         )
         .orderBy("user_id", "session_seq")
-    )
-
-
-def streaming_type_counts(events: DataFrame) -> DataFrame:
-    """Running per-type counts (update-mode stateful aggregate)."""
-    return events.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.approx_count_distinct("user_id").alias("approx_users"),
     )
 
 

@@ -28,29 +28,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.scd2 import one_per_key, scd2_table_apply
-
-
-def latest_per_key(
-    batch: DataFrame,
-    business_keys: Sequence[str],
-    order_col: str,
-) -> DataFrame:
-    """Deterministically reduce a micro-batch to the LATEST row per business
-    key, ordered by ``order_col`` (event time / source offset).
-
-    A change stream routinely carries several updates for one key in a
-    single micro-batch; ``dropDuplicates`` would keep an arbitrary one.
-    SCD2 at micro-batch granularity keeps one version per (key, batch), so
-    "latest wins within the batch" is the correct reduction — intermediate
-    same-batch versions are below the sink's time resolution by design.
-
-    Ties on ``order_col`` (same-second CDC events, repeated null offsets)
-    are broken by a content hash of the whole row, so the winner is a
-    deterministic function of the DATA, never of partitioning or replay
-    order. Rows identical in every column are genuinely interchangeable.
-    """
-    return one_per_key(batch, business_keys, _latest_first(order_col))
+from ..operators.scd2 import scd2_table_apply
 
 
 def _latest_first(order_col: str) -> list[Column]:
@@ -74,8 +52,8 @@ def apply_scd2_batch(
     mid-overwrite unrecoverable).
 
     ``order_col``: event-time/offset column used to deterministically keep
-    the latest row per key within the batch (``latest_per_key``'s order,
-    handed to the merge's own dedupe so the batch is windowed once).
+    the latest row per key within the batch (handed to the merge's own
+    dedupe, ``operators.scd2.one_per_key``, so the batch is windowed once).
     Without it, the one-row-per-key-per-batch precondition is ASSERTED
     (one extra aggregation job per batch) — never silently resolved by an
     arbitrary ``dropDuplicates`` winner.

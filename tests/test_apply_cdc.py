@@ -87,54 +87,3 @@ def test_apply_cdc_reserved_column(spark, table):
             ["k"],
             "_seq",
         )
-
-
-# -- snapshot tags (Iceberg refs parity) ------------------------------------
-
-
-def test_tags_name_time_travel_and_anchor_vacuum(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "tagged"))
-    t.write(
-        spark.createDataFrame([Row(k=1, v="a")]), committed_at="t1"
-    )
-    t.tag("v1.0")
-    t.write(
-        spark.createDataFrame([Row(k=2, v="b")]),
-        mode="overwrite",
-        committed_at="t2",
-    )
-    t.write(
-        spark.createDataFrame([Row(k=3, v="c")]),
-        mode="overwrite",
-        committed_at="t3",
-    )
-    assert t.tags() == {"v1.0": 1}
-    assert [
-        tuple(r) for r in t.read(spark, version=t.tags()["v1.0"]).collect()
-    ] == [(1, "a")]
-    # vacuum keeps the tagged snapshot alive (and its files readable)
-    t.vacuum(keep_last=1)
-    assert 1 in t.versions()
-    assert [
-        tuple(r) for r in t.read(spark, version=t.tags()["v1.0"]).collect()
-    ] == [(1, "a")]
-    # untagged middle snapshot was dropped
-    assert 2 not in t.versions()
-    # after dropping the tag, vacuum reclaims it
-    t.drop_tag("v1.0")
-    t.vacuum(keep_last=1)
-    assert t.versions() == [3]
-
-
-def test_tag_validation(spark, tmp_path):
-    import pytest as _pytest
-
-    t = VersionedTable(str(tmp_path / "tagged2"))
-    with _pytest.raises(ValueError, match="does not exist"):
-        t.tag("x")
-    t.write(spark.createDataFrame([Row(k=1, v="a")]), committed_at="t1")
-    t.tag("x")
-    with _pytest.raises(ValueError, match="already exists"):
-        t.tag("x")
-    with _pytest.raises(ValueError, match="invalid tag name"):
-        t.tag("../escape")

@@ -3,8 +3,6 @@ categorization) — closes the reference's untested silver/gold domain logic."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from faers_datalakehouse_spark.functions.faers import (
     age_in_years,
     country_region,

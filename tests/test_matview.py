@@ -98,61 +98,6 @@ def test_empty_batch_is_noop(spark, tmp_path):
     assert _as_dict(mv.read(spark)) == before
 
 
-def test_refresh_changes_maintains_under_deletes(spark, tmp_path):
-    """Folding a VersionedTable change feed keeps the view equal to a
-    recompute over the table's CURRENT content — deletes retract."""
-    from faers_datalakehouse_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(str(tmp_path / "vt"))
-    mv = IncrementalMatView(
-        path=str(tmp_path / "mv"),
-        group_keys=["k"],
-        measures={"n": ("count", ""), "total": ("sum", "v")},
-        n_buckets=8,
-    )
-    base = _src(spark, 0, 200)
-    t.write(base, committed_at="t1")
-    mv.refresh(t.read(spark))  # seed from v1
-
-    t.delete_where(spark, "v % 7 = 0", committed_at="t2")      # v2
-    t.write(_src(spark, 200, 260), mode="append", committed_at="t3")  # v3
-    mv.refresh_changes(t.changes(spark, 1, 3))
-
-    current = t.read(spark)
-    expect = {
-        r["k"]: (r["n"], r["total"])
-        for r in current.groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("total"))
-        .collect()
-    }
-    got = {r["k"]: (r["n"], r["total"]) for r in mv.read(spark).collect()}
-    assert got == expect
-
-
-def test_refresh_changes_drops_fully_retracted_groups(spark, tmp_path):
-    mv = IncrementalMatView(
-        path=str(tmp_path / "mv"),
-        group_keys=["k"],
-        measures={"n": ("count", ""), "total": ("sum", "v")},
-        n_buckets=4,
-    )
-    df = spark.createDataFrame([(1, 10), (1, 20), (2, 5)], "k int, v long")
-    mv.refresh(df)
-    # retract every k=1 row via a synthetic delete feed
-    feed = spark.createDataFrame(
-        [(1, 10, "delete"), (1, 20, "delete")], "k int, v long, change_type string"
-    )
-    mv.refresh_changes(feed)
-    assert {r["k"] for r in mv.read(spark).collect()} == {2}
-
-
-def test_refresh_changes_rejects_min_max(spark, tmp_path):
-    mv = _mv(tmp_path)  # has lo/hi min/max measures
-    feed = spark.createDataFrame([(1, 1, "insert")], "k int, v long, change_type string")
-    with pytest.raises(ValueError, match="cannot be maintained"):
-        mv.refresh_changes(feed)
-
-
 def test_optimize_compacts_bucket_files(spark, tmp_path):
     mv = _mv(tmp_path, n_buckets=4)
     for lo, hi in [(0, 60), (60, 120), (120, 180), (180, 240)]:
@@ -172,20 +117,3 @@ def test_reserved_state_names_rejected(tmp_path):
             group_keys=["_bucket"],
             measures={"n": ("count", "")},
         )
-
-
-def test_refresh_changes_rejects_unknown_change_type(spark, tmp_path):
-    """Unexpected change_type values (Delta CDF's update_preimage, typos)
-    must fail loudly, not be silently counted as inserts."""
-    mv = IncrementalMatView(
-        path=str(tmp_path / "mv"),
-        group_keys=["k"],
-        measures={"n": ("count", ""), "total": ("sum", "v")},
-        n_buckets=4,
-    )
-    mv.refresh(spark.createDataFrame([(1, 10)], "k int, v long"))
-    feed = spark.createDataFrame(
-        [(1, 10, "update_preimage")], "k int, v long, change_type string"
-    )
-    with pytest.raises(Exception, match="unsupported change_type"):
-        mv.refresh_changes(feed)

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: binary payload + metadata schema, decode
-stub, frame sampling, feature extraction — Spark-side mechanics are real,
+stub, frame sampling — Spark-side mechanics are real,
 codecs are deterministic fakes (no media libs in this container)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import pytest
 
 from faers_datalakehouse_spark.operators.multimodal import (
     decode_media,
-    extract_features,
     make_fake_payload,
     sample_frames,
 )
@@ -49,11 +48,3 @@ def test_sample_frames(media):
     assert by_media[2] == [(0, True), (25, True)]
     # undecodable payload emits ONE quarantine row (never silently absent)
     assert by_media[3] == [(None, False)]
-
-
-def test_extract_features_shape(media):
-    feats = extract_features(media, dim=16).collect()
-    assert len(feats) == 3
-    for r in feats:
-        assert len(r["features"]) == 16
-        assert abs(sum(r["features"]) - 1.0) < 1e-5  # normalized histogram

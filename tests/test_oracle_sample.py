@@ -19,7 +19,6 @@ import sys
 from pathlib import Path
 
 import duckdb
-import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 

@@ -340,7 +340,9 @@ def test_top_p_filter_equals_naive_prefix(spark, rows, p):
 @settings(max_examples=8, deadline=None)
 @given(_WEIGHTED_ROWS, st.sampled_from([(1, 2), (1, 4), (9, 10), (1, 1)]))
 def test_weighted_quantile_equals_naive(spark, rows, q):
-    from faers_datalakehouse_spark.operators.top_p import weighted_quantile
+    from faers_datalakehouse_spark.operators.top_p import (
+        weighted_quantile_multi,
+    )
 
     q_num, q_den = q
     data = [(g, str(i), v, w) for i, (g, v, w) in enumerate(rows)]
@@ -349,8 +351,8 @@ def test_weighted_quantile_equals_naive(spark, rows, q):
     )
     got = {
         r["g"]: r["value"]
-        for r in weighted_quantile(
-            df, "g", "id", "v", "w", q_num, q_den
+        for r in weighted_quantile_multi(
+            df, "g", "id", "v", "w", [(q_num, q_den, "value")]
         ).collect()
     }
     import collections

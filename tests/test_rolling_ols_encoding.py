@@ -171,7 +171,9 @@ def test_weighted_quantile_matches_naive(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from faers_datalakehouse_spark.operators.top_p import weighted_quantile
+    from faers_datalakehouse_spark.operators.top_p import (
+        weighted_quantile_multi,
+    )
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_returnflag",
@@ -179,12 +181,16 @@ def test_weighted_quantile_matches_naive(spark, sf_dir):
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
         F.round("l_quantity").cast("long").alias("qty"),
     )
-    for qn, qd in ((1, 2), (9, 10), (1, 4)):
-        got = (
-            weighted_quantile(li, "l_returnflag", "rid", "pc", "qty", qn, qd)
-            .orderBy("g")
-            .toPandas()
+    quantiles = ((1, 2), (9, 10), (1, 4))
+    got = (
+        weighted_quantile_multi(
+            li, "l_returnflag", "rid", "pc", "qty",
+            [(qn, qd, f"q{qn}_{qd}") for qn, qd in quantiles],
         )
+        .orderBy("g")
+        .toPandas()
+    )
+    for qn, qd in quantiles:
         w = (
             Window.partitionBy("l_returnflag")
             .orderBy("pc", "rid")
@@ -206,38 +212,7 @@ def test_weighted_quantile_matches_naive(spark, sf_dir):
             .orderBy("l_returnflag")
             .toPandas()
         )
-        assert list(got["value"]) == list(naive["value"]), (qn, qd)
-
-
-def test_weighted_quantile_multi_matches_single_calls(spark, sf_dir):
-    """The r12 one-pass multi-quantile (shared bucket classification)
-    must be row-identical to independent single-quantile calls."""
-    from pyspark.sql import functions as F
-
-    from faers_datalakehouse_spark.operators.top_p import (
-        weighted_quantile,
-        weighted_quantile_multi,
-    )
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_returnflag",
-        F.concat_ws(":", "l_orderkey", "l_linenumber").alias("rid"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
-        F.round("l_quantity").cast("long").alias("qty"),
-    )
-    multi = {
-        r["g"]: (r["total_w"], r["q14"], r["p50"], r["p90"])
-        for r in weighted_quantile_multi(
-            li, "l_returnflag", "rid", "pc", "qty",
-            [(1, 4, "q14"), (1, 2, "p50"), (9, 10, "p90")],
-        ).collect()
-    }
-    for i, (qn, qd) in enumerate(((1, 4), (1, 2), (9, 10))):
-        for r in weighted_quantile(
-            li, "l_returnflag", "rid", "pc", "qty", qn, qd
-        ).collect():
-            assert multi[r["g"]][0] == r["total_w"]
-            assert multi[r["g"]][1 + i] == r["value"], (qn, qd)
+        assert list(got[f"q{qn}_{qd}"]) == list(naive["value"]), (qn, qd)
 
 
 def test_incremental_sessionize_bridges_old_sessions(spark):

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 
 def _df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)

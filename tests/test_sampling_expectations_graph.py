@@ -8,10 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.operators.expectations import (
-    ExpectationError,
     audit,
     audit_oracle_sql,
-    enforce,
     quarantine,
 )
 from faers_datalakehouse_spark.operators.graph import (
@@ -159,22 +157,6 @@ def test_rule_names_must_be_identifiers(spark):
     for bad in ("has space", "quo'te", "semi;colon", "", "1leading_digit"):
         with pytest.raises(ValueError, match="must match"):
             audit(df, {bad: "v > 0"})
-        with pytest.raises(ValueError, match="must match"):
-            enforce(df, {bad: "v > 0"}, "drop")
-
-
-def test_enforce_policies(spark):
-    df = spark.createDataFrame([(1,), (2,), (None,), (-5,)], "v int")
-    rules = {"pos": "v > 0"}
-    assert enforce(df, rules, "warn").count() == 4
-    kept = enforce(df, rules, "drop").collect()
-    assert sorted(r["v"] for r in kept) == [1, 2]
-    with pytest.raises(ExpectationError, match="pos"):
-        enforce(df, rules, "fail")
-    clean = spark.createDataFrame([(3,)], "v int")
-    assert enforce(clean, rules, "fail").count() == 1
-    with pytest.raises(ValueError, match="policy"):
-        enforce(df, rules, "retry")
 
 
 def test_quarantine_split(spark):

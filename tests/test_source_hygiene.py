@@ -171,12 +171,14 @@ def test_arrow_kernel_calls_only_through_kernels_module():
 
 
 # Reachability. A definition (top-level function or class, or method) is
-# reached when its name occurs in a root or in the body of a reached
-# definition. The walk matches names as words, comments and docstrings
-# included, so it can only over-count what is reached. Roots: the driver
-# contract, bench.py, the benchmark and the tools, the package's
-# __init__/__main__ modules, and each module's code outside its
-# definitions. Dunder methods and the callbacks pyspark invokes on
+# reached when code in a root or in a reached definition references it.
+# Only code counts: a Name, an Attribute or an imported name. Comments,
+# docstrings and strings do not, and a method is reached only as an
+# attribute (``x.m``), never by a local variable of the same name. Roots:
+# the driver contract, bench.py, the benchmark and the tools, the
+# package's __main__ module, and each module's code outside its
+# definitions. An __init__ re-export is not a use, so __init__ modules
+# are not roots. Dunder methods and the callbacks pyspark invokes on
 # DataSource/reader/writer/UDTF classes are reached by construction.
 _ROOT_SCRIPTS = ("__spark_entry__.py", "bench.py", "perfbench/*.py", "tools/*.py")
 _PYSPARK_CALLBACKS = {
@@ -198,65 +200,69 @@ _UNREACHED_ALLOWED = {
     # drives the streaming operators in tests/test_streaming.py
     "streaming/events.py::run_to_completion",
 }
-_WORD = re.compile(r"\w+")
 _FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
 _DEF = (*_FUNC, ast.ClassDef)
 
 
-def _span(node) -> tuple[int, int]:
-    first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-    return first - 1, node.end_lineno
+def _refs(nodes) -> tuple[set[str], set[str]]:
+    """The (names, attributes) that the code in ``nodes`` references."""
+    names, attrs = set(), set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                names.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                attrs.add(n.attr)
+            elif isinstance(n, ast.alias):
+                names.update(n.name.split("."))
+    return names, attrs
 
 
 def _unreached_definitions() -> set[str]:
     roots = [
-        path.read_text()
+        ast.parse(path.read_text())
         for pattern in _ROOT_SCRIPTS
         for path in sorted(REPO.glob(pattern))
     ]
-    defs = []  # (id, name, body text)
+    defs = []  # (id, name, is_method, nodes whose code it owns)
     for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        text = path.read_text()
-        if path.name in ("__init__.py", "__main__.py"):
-            roots.append(text)
+        if path.name == "__init__.py":
             continue
-        lines = text.splitlines()
-        free = [True] * len(lines)  # module code outside definitions
-        for node in ast.parse(text).body:
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        if path.name == "__main__.py":
+            roots.append(tree)
+            continue
+        for node in tree.body:
             if not isinstance(node, _DEF):
-                continue
-            a, b = _span(node)
-            free[a:b] = [False] * (b - a)
-            if not isinstance(node, ast.ClassDef):
-                body = "\n".join(lines[a:b])
-                defs.append((f"{rel}::{node.name}", node.name, body))
-                continue
-            own = [a <= i < b for i in range(len(lines))]
-            for m in node.body:
-                if not isinstance(m, _FUNC):
-                    continue
-                ma, mb = _span(m)
-                own[ma:mb] = [False] * (mb - ma)
-                body = "\n".join(lines[ma:mb])
-                dunder = m.name.startswith("__") and m.name.endswith("__")
-                if dunder or m.name in _PYSPARK_CALLBACKS.get(rel, ()):
-                    roots.append(body)
-                else:
-                    defs.append((f"{rel}::{node.name}.{m.name}", m.name, body))
-            own_text = "\n".join(ln for ln, k in zip(lines, own) if k)
-            defs.append((f"{rel}::{node.name}", node.name, own_text))
-        roots.append("\n".join(ln for ln, k in zip(lines, free) if k))
+                roots.append(node)
+            elif not isinstance(node, ast.ClassDef):
+                defs.append((f"{rel}::{node.name}", node.name, False, [node]))
+            else:
+                own = [*node.decorator_list, *node.bases, *node.keywords]
+                for m in node.body:
+                    if not isinstance(m, _FUNC):
+                        own.append(m)
+                    elif m.name.startswith("__") and m.name.endswith("__") or (
+                        m.name in _PYSPARK_CALLBACKS.get(rel, ())
+                    ):
+                        roots.append(m)
+                    else:
+                        defs.append(
+                            (f"{rel}::{node.name}.{m.name}", m.name, True, [m])
+                        )
+                defs.append((f"{rel}::{node.name}", node.name, False, own))
 
-    reached = set(_WORD.findall("\n".join(roots)))
+    names, attrs = _refs(roots)
     unreached = defs
     while True:
-        hit = [d for d in unreached if d[1] in reached]
+        hit = [d for d in unreached if d[1] in attrs or not d[2] and d[1] in names]
         if not hit:
             return {d[0] for d in unreached}
-        unreached = [d for d in unreached if d[1] not in reached]
-        for _, _, body in hit:
-            reached.update(_WORD.findall(body))
+        unreached = [d for d in unreached if d not in hit]
+        more_names, more_attrs = _refs(n for d in hit for n in d[3])
+        names |= more_names
+        attrs |= more_attrs
 
 
 def test_every_definition_is_reached_from_a_root():

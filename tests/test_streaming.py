@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from faers_datalakehouse_spark.streaming.events import (
     run_to_completion,
     stream_events_from_dir,
-    streaming_session_windows,
-    streaming_type_counts,
     windowed_event_aggregate,
 )
 
@@ -55,15 +53,6 @@ def test_windowed_aggregate_matches_batch(spark, events_dir, sf_dir):
         assert expected[k] == v
 
 
-def test_streaming_session_windows(spark, events_dir):
-    stream = stream_events_from_dir(spark, events_dir)
-    sess = streaming_session_windows(stream, gap="30 minutes", watermark="2 hours")
-    out = run_to_completion(sess, "sess_win", "append").collect()
-    assert out
-    assert all(r["session_start"] <= r["session_end"] for r in out)
-    assert all(r["n_events"] >= 1 for r in out)
-
-
 def test_stream_starts_on_empty_landing_dir(spark, tmp_path):
     """The normal deployment order is stream-first, files-later: an empty
     landing directory must not fail stream construction (falls back to
@@ -76,17 +65,9 @@ def test_stream_starts_on_empty_landing_dir(spark, tmp_path):
     assert dict(stream.dtypes)["ts"] == "timestamp"
     _sh.copy("/root/testdata/sf0.001/events.parquet", d / "late.parquet")
     out = run_to_completion(
-        streaming_type_counts(stream), "late_counts", "complete"
+        windowed_event_aggregate(stream), "late_counts", "complete"
     )
     assert sum(r["n_events"] for r in out.collect()) == 1000
-
-
-def test_streaming_type_counts_complete(spark, events_dir):
-    stream = stream_events_from_dir(spark, events_dir)
-    counts = streaming_type_counts(stream)
-    out = run_to_completion(counts, "type_counts", "complete").collect()
-    total = sum(r["n_events"] for r in out)
-    assert total == 1000  # sf0.001 events row count
 
 
 def test_stateful_user_totals(spark, events_dir):

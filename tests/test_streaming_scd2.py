@@ -3,7 +3,6 @@ applied sequentially, and replays are no-ops."""
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import functions as F
@@ -147,7 +146,7 @@ def test_same_day_changes_across_batches_get_distinct_dim_keys(spark):
 def test_latest_per_key_ties_are_deterministic(spark):
     """Same key, same order value: the winner is a function of row
     content (md5 tiebreak), identical across shuffles and replays."""
-    from faers_datalakehouse_spark.streaming.scd2 import latest_per_key
+    from faers_datalakehouse_spark.operators.scd2 import one_per_key
 
     rows = [(1, "2024-01-01T00:00:00", f"v{i}") for i in range(6)]
     winners = set()
@@ -155,6 +154,6 @@ def test_latest_per_key_ties_are_deterministic(spark):
         df = spark.createDataFrame(
             rows, "k long, ts string, payload string"
         ).orderBy(F.rand(seed=seed)).repartition(seed + 1)
-        [w] = latest_per_key(df, ["k"], "ts").collect()
+        [w] = one_per_key(df, ["k"], [F.col("ts").desc_nulls_last()]).collect()
         winners.add(w["payload"])
     assert len(winners) == 1

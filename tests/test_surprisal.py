@@ -3,8 +3,6 @@ band-pass filter relies on, and the broadcast-model plan shape."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from faers_datalakehouse_spark.operators.surprisal import (
     surprisal_scores,
     unigram_model,

@@ -6,8 +6,6 @@ cases the oracle data can't reach.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from faers_datalakehouse_spark.plans import training_prep as T
 
 

@@ -1,5 +1,5 @@
 """Snapshot-versioned parquet tables: append/overwrite snapshots, time
-travel, transactional compaction, vacuum."""
+travel, transactional compaction."""
 
 from __future__ import annotations
 
@@ -25,9 +25,11 @@ def test_append_overwrite_and_time_travel(spark, tmp_path):
     assert _ids(t.read(spark)) == [100, 101, 102]          # current
     assert _ids(t.read(spark, version=1)) == list(range(10))
     assert _ids(t.read(spark, version=2)) == list(range(15))
-    ops = [s.operation for s in t.history()]
+    ops = [t.snapshot(v).operation for v in t.versions()]
     assert ops == ["append", "append", "overwrite"]
-    assert [s.committed_at for s in t.history()] == ["t1", "t2", "t3"]
+    assert [t.snapshot(v).committed_at for v in t.versions()] == [
+        "t1", "t2", "t3"
+    ]
 
 
 def test_compact_is_transactional_and_preserves_history(spark, tmp_path):
@@ -48,23 +50,6 @@ def test_compact_is_transactional_and_preserves_history(spark, tmp_path):
     assert t.current_version() == stats["version"]
 
 
-def test_vacuum_drops_only_unreferenced_files(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(spark.range(0, 100).coalesce(1), committed_at="t1")
-    t.write(spark.range(100, 200).coalesce(1), mode="append", committed_at="t2")
-    t.compact(spark, target_file_bytes=1 << 30, committed_at="t3")
-    n_current = len(t.snapshot().files)
-
-    removed = t.vacuum(keep_last=1)
-    assert t.versions() == [3]
-    # v1/v2's two original files are gone; current files survive
-    assert removed == 2
-    assert _ids(t.read(spark)) == list(range(200))
-    assert len(t.snapshot().files) == n_current
-    with pytest.raises(FileNotFoundError):
-        t.snapshot(1)
-
-
 def test_reader_snapshot_isolation(spark, tmp_path):
     """A resolved DataFrame keeps reading its snapshot's files even after
     later commits change the current version (no torn reads)."""
@@ -75,33 +60,6 @@ def test_reader_snapshot_isolation(spark, tmp_path):
     t.write(spark.range(999, 1000), mode="overwrite", committed_at="t3")
     assert _ids(reader) == list(range(50))  # still v1
     assert _ids(t.read(spark)) == [999]
-
-
-def test_scd2_over_versioned_table(spark, tmp_path):
-    """SCD2 merges as snapshot commits: row-level history inside the
-    dimension, merge-level history via time travel, no staging dance."""
-    from faers_datalakehouse_spark.operators.scd2 import scd2_versioned_apply
-
-    t = VersionedTable(str(tmp_path / "dim"))
-    keys, tracked = ["nk"], ["attr"]
-    b0 = spark.createDataFrame([("k1", "v1"), ("k2", "v2")], ["nk", "attr"])
-    b1 = spark.createDataFrame([("k1", "v1b"), ("k3", "v3")], ["nk", "attr"])
-
-    v1 = scd2_versioned_apply(t, b0, keys, tracked, "2024-01-01", "c1")
-    v2 = scd2_versioned_apply(t, b1, keys, tracked, "2024-02-01", "c2")
-    assert (v1, v2) == (1, 2)
-
-    cur = {
-        r["nk"]: r["attr"]
-        for r in t.read(spark).filter("is_current").collect()
-    }
-    assert cur == {"k1": "v1b", "k2": "v2", "k3": "v3"}
-    closed = t.read(spark).filter("NOT is_current").collect()
-    assert [(r["nk"], r["attr"]) for r in closed] == [("k1", "v1")]
-    # merge-level time travel: the dimension as of merge 1
-    as_of_1 = t.read(spark, version=1)
-    assert {r["nk"] for r in as_of_1.collect()} == {"k1", "k2"}
-    assert all(r["is_current"] for r in as_of_1.collect())
 
 
 def test_write_rejects_unknown_mode(spark, tmp_path):
@@ -151,17 +109,6 @@ def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
     assert ids == list(range(10)) + [100, 101, 102, 103, 104, 106, 107, 108, 109]
     # time travel: pre-delete snapshot still has the row
     assert vt.read(spark, version=2).filter("id = 105").count() == 1
-
-
-def test_update_where_replaces_matching_rows(spark, tmp_path):
-    vt = _vt_two_files(spark, tmp_path, "vt_upd")
-    info = vt.update_where(spark, "id < 3", {"tag": "'patched'"})
-    assert info["rows_matched"] == 3
-    assert info["files_rewritten"] == 1 and info["files_kept"] == 1
-    got = {r["id"]: r["tag"] for r in vt.read(spark).collect()}
-    assert got[0] == got[1] == got[2] == "patched"
-    assert got[3] == "lo" and got[105] == "hi"
-    assert len(got) == 20  # no rows lost
 
 
 def test_delete_where_no_match_is_noop_commit_free(spark, tmp_path):
@@ -295,7 +242,8 @@ def test_changes_update_is_delete_plus_insert(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "vt"))
     df = spark.range(0, 6).withColumn("flag", F.lit("a"))
     t.write(df, committed_at="t1")
-    t.update_where(spark, "id = 4", {"flag": "'b'"}, committed_at="t2")
+    upd = spark.createDataFrame([(4, "b")], "id long, flag string")
+    t.merge_rows(spark, upd, ["id"], committed_at="t2")
 
     rows = {
         (r["id"], r["flag"], r["change_type"])
@@ -376,32 +324,6 @@ def test_merge_rows_rejects_bad_mode(spark, tmp_path):
         t.merge_rows(spark, spark.range(1), ["id"], when_matched="drop")
 
 
-def test_apply_changes_mirrors_source_table(spark, tmp_path):
-    """Downstream mirror via change feed: after replaying changes(v1, v3)
-    the mirror equals the source's current content — without the mirror
-    ever reading the source table itself."""
-    src = VersionedTable(str(tmp_path / "src"))
-    dst = VersionedTable(str(tmp_path / "dst"))
-
-    base = spark.range(0, 300).withColumn("flag", F.lit("a"))
-    src.write(base, committed_at="t1")                     # v1
-    dst.write(src.read(spark), committed_at="m1")          # initial copy
-
-    src.update_where(spark, "id % 50 = 0", {"flag": "'b'"}, committed_at="t2")
-    src.delete_where(spark, "id % 7 = 0", committed_at="t3")
-    src.write(
-        spark.range(300, 330).withColumn("flag", F.lit("c")),
-        mode="append",
-        committed_at="t4",
-    )                                                      # v4
-
-    dst.apply_changes(spark, src.changes(spark, 1, 4), ["id"], "m2")
-
-    s = {(r["id"], r["flag"]) for r in src.read(spark).collect()}
-    d = {(r["id"], r["flag"]) for r in dst.read(spark).collect()}
-    assert d == s
-
-
 def test_constraints_reject_and_stay_invisible(spark, tmp_path):
     from faers_datalakehouse_spark.sources.versioned import (
         ConstraintViolation,
@@ -464,36 +386,6 @@ def test_merge_rows_honors_constraints(spark, tmp_path):
     # whole merge rolled back: no new version, id=5 untouched
     assert t.current_version() == before
     assert {r["v"] for r in t.read(spark).filter("id = 5").collect()} == {5}
-
-
-def test_update_where_honors_constraints(spark, tmp_path):
-    """Regression: UPDATE used to bypass CHECK validation."""
-    from faers_datalakehouse_spark.sources.versioned import (
-        ConstraintViolation,
-    )
-
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(
-        spark.range(1, 20).withColumn("v", F.col("id")),
-        committed_at="t1",
-        constraints=("v > 0",),
-    )
-    with pytest.raises(ConstraintViolation):
-        t.update_where(spark, "id = 3", {"v": "-9"}, committed_at="t2")
-    assert t.current_version() == 1
-    assert {r["v"] for r in t.read(spark).filter("id = 3").collect()} == {3}
-
-
-def test_apply_changes_rejects_non_unique_key(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(spark.createDataFrame([(1, "a")], "k long, flag string"),
-            committed_at="t1")
-    feed = spark.createDataFrame(
-        [(1, "a", "delete"), (1, "b", "delete"), (2, "c", "insert")],
-        "k long, flag string, change_type string",
-    )
-    with pytest.raises(ValueError, match="not unique"):
-        t.apply_changes(spark, feed, ["k"])
 
 
 def test_changes_rejects_reserved_column_names(spark, tmp_path):
@@ -597,26 +489,6 @@ def test_merge_rows_matches_null_keys(spark, tmp_path):
 
     rows = {(r["id"], r["v"]) for r in t.read(spark).collect()}
     assert rows == {(1, "a"), (None, "new"), (3, "c")}
-
-
-def test_apply_changes_replays_null_key_delete(spark, tmp_path):
-    """Replaying a change feed that deletes a NULL-keyed row must remove
-    it from the mirror (round-6 ADVICE: null-unsafe joins silently kept
-    the stale row and appended the new one)."""
-    src = VersionedTable(str(tmp_path / "src"))
-    dst = VersionedTable(str(tmp_path / "dst"))
-    base = spark.createDataFrame(
-        [(1, "a"), (None, "x")], "id long, v string"
-    )
-    src.write(base, committed_at="t1")
-    dst.write(src.read(spark), committed_at="m1")
-
-    src.delete_where(spark, "id IS NULL", committed_at="t2")
-    dst.apply_changes(spark, src.changes(spark, 1, 2), ["id"], "m2")
-
-    s = {(r["id"], r["v"]) for r in src.read(spark).collect()}
-    d = {(r["id"], r["v"]) for r in dst.read(spark).collect()}
-    assert s == d == {(1, "a")}
 
 
 def test_bloom_index_skips_files_on_unclustered_column(spark, tmp_path):

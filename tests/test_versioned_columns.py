@@ -24,12 +24,12 @@ def root():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _table(spark, root, n=20):
+def _table(spark, root, n=20, constraints=()):
     t = VersionedTable(f"{root}/t")
     df = spark.range(0, n).select(
         "id", (F.col("id") % 5).alias("grp"), F.lit("x").alias("tag")
     )
-    t.write(df, mode="overwrite", committed_at=T0)
+    t.write(df, mode="overwrite", committed_at=T0, constraints=constraints)
     return t
 
 
@@ -58,6 +58,26 @@ def test_append_after_rename_mixes_generations(spark, root):
     # both generations resolve under the logical name, no nulls
     assert out.filter(F.col("bucket").isNull()).count() == 0
     assert out.filter("tag = 'y'").count() == 10
+
+
+def test_append_cannot_take_a_renamed_away_name(spark, root):
+    """The pre-rename files still carry ``grp`` physically: an append that
+    adds a new ``grp`` column would make the read resolve their stale
+    values under it. The write is refused and leaves nothing behind."""
+    t = _table(spark, root)
+    t.rename_column("grp", "bucket", committed_at=T1)
+    v = t.current_version()
+    files = set(t.root.rglob("*.parquet"))
+    extra = spark.range(100, 104).select(
+        "id",
+        (F.col("id") % 5).alias("bucket"),
+        F.lit("y").alias("tag"),
+        F.lit(99).cast("long").alias("grp"),
+    )
+    with pytest.raises(ValueError, match="collides"):
+        t.write(extra, mode="append", committed_at=T2)
+    assert t.current_version() == v
+    assert set(t.root.rglob("*.parquet")) == files
 
 
 def test_compact_materializes_logical_names(spark, root):
@@ -98,12 +118,11 @@ def test_rename_translates_stats_and_bloom_probes(spark, root):
 
 
 def test_rename_validations(spark, root):
-    t = _table(spark, root)
+    t = _table(spark, root, constraints=("grp >= 0",))
     with pytest.raises(ValueError, match="no column"):
         t.rename_column("nope", "x")
     with pytest.raises(ValueError, match="already exists"):
         t.rename_column("grp", "tag")
-    t.add_constraint(spark, "grp >= 0", committed_at=T1)
     with pytest.raises(ValueError, match="CHECK"):
         t.rename_column("grp", "bucket")
 

@@ -1,10 +1,9 @@
 """Optimistic concurrency on VersionedTable: exclusive manifest publish,
 append rebase-and-retry, constraint drift re-validation, and the
-metadata frames / partition-aware vacuum that ride along."""
+snapshot metadata that rides along."""
 
 from __future__ import annotations
 
-import json
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -82,8 +81,8 @@ def test_conflict_revalidates_drifted_constraints(
     def racing(self, files, operation, committed_at, **kw):
         if not state["raced"] and operation == "append":
             state["raced"] = True
-            VersionedTable(root).add_constraint(
-                spark, "id < 8", committed_at="rival"
+            VersionedTable(root).write(
+                spark.range(0, 0), constraints=("id < 8",), committed_at="rival"
             )
         return orig(self, files, operation, committed_at, **kw)
 
@@ -130,23 +129,9 @@ def test_history_and_files_metadata_frames(spark, tmp_path):
         mode="overwrite_partitions",
         committed_at="t2",
     )
-    h = t.history()
+    h = [t.snapshot(v) for v in t.versions()]
     assert [(s.version, s.operation, s.committed_at) for s in h] == [
         (1, "append", "t1"),
         (2, "overwrite_partitions", "t2"),
     ]
     assert all(s.files and sum(f["bytes"] for f in s.files) > 0 for s in h)
-
-
-def test_vacuum_prunes_empty_partition_dirs(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    df = spark.range(0, 10).withColumn("b", (F.col("id") % 2).cast("int"))
-    t.write(df, partition_by=("b",), committed_at="t1")
-    t.write(df, mode="overwrite", committed_at="t2")
-    removed = t.vacuum(keep_last=1)
-    assert removed >= 1
-    # v1's staged tree (data/<uuid>/b=X/) is gone entirely, including
-    # the emptied partition subdirectories
-    data = t.root / "data"
-    assert all(any(d.rglob("*.parquet")) for d in data.iterdir())
-    assert t.read(spark).count() == 10

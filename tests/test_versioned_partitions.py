@@ -11,7 +11,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.sources.versioned import (
     ConstraintViolation,

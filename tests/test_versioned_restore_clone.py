@@ -1,11 +1,11 @@
-"""RESTORE / shallow CLONE / OPTIMIZE ZORDER on versioned tables.
+"""RESTORE / OPTIMIZE ZORDER on versioned tables.
 
 Delta-parity surface the reference's platform provides natively
-(RESTORE TABLE, CLONE, OPTIMIZE ZORDER BY — the reference invokes
-OPTIMIZE at src/silver/silver_demographics.py:93); here re-expressed
-over the manifest log: restore re-publishes an old file list by
-reference, clone copies only metadata, z-order rewrites the layout so
-min/max skipping works on two columns at once.
+(RESTORE TABLE, OPTIMIZE ZORDER BY — the reference invokes OPTIMIZE at
+src/silver/silver_demographics.py:93); here re-expressed over the
+manifest log: restore re-publishes an old file list by reference,
+z-order rewrites the layout so min/max skipping works on two columns at
+once.
 """
 
 from __future__ import annotations
@@ -72,76 +72,15 @@ def test_restore_brings_back_constraints_and_spec(spark, tmp_path):
 
 
 def test_restore_after_vacuum_fails_loudly(spark, tmp_path):
+    """The manifest survives but a data file it lists does not: restore
+    must refuse rather than publish a snapshot that cannot be read."""
     t = VersionedTable(str(tmp_path / "vt"))
     t.write(spark.range(10).coalesce(1), committed_at="t1")
     t.write(spark.range(10, 20).coalesce(1), mode="overwrite", committed_at="t2")
-    t.vacuum(keep_last=1)
-    with pytest.raises(FileNotFoundError):
-        t.snapshot(1)  # manifest itself is gone
-    # rebuild the scenario where the manifest survives but data does not:
-    t2 = VersionedTable(str(tmp_path / "vt2"))
-    t2.write(spark.range(10).coalesce(1), committed_at="t1")
-    t2.write(spark.range(10, 20).coalesce(1), mode="overwrite", committed_at="t2")
-    victim = t2.root / t2.snapshot(1).files[0]["path"]
+    victim = t.root / t.snapshot(1).files[0]["path"]
     victim.unlink()
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        t2.restore(1)
-
-
-# -- shallow clone ---------------------------------------------------------
-
-
-def test_clone_is_metadata_only_and_diverges(spark, tmp_path):
-    src = VersionedTable(str(tmp_path / "src"))
-    src.write(spark.range(0, 10), committed_at="t1")
-    src.write(spark.range(10, 20), mode="append", committed_at="t2")
-
-    dst = src.clone(str(tmp_path / "dst"), committed_at="c1")
-    assert _ids(dst.read(spark)) == list(range(20))
-    # metadata-only: the clone root holds no parquet of its own
-    assert not list((dst.root / "data").rglob("*.parquet")) if (
-        dst.root / "data"
-    ).exists() else True
-    assert dst.snapshot().operation == "clone"
-    assert dst.snapshot().extra["clone_source"]["version"] == 2
-
-    # writes diverge: append to the clone, source unchanged
-    dst.write(spark.range(100, 105), mode="append", committed_at="c2")
-    assert _ids(dst.read(spark)) == list(range(20)) + list(range(100, 105))
-    assert _ids(src.read(spark)) == list(range(20))
-    # and vice versa
-    src.delete_where(spark, "id >= 10", committed_at="t3")
-    assert _ids(src.read(spark)) == list(range(10))
-    assert _ids(dst.read(spark)) == list(range(20)) + list(range(100, 105))
-
-
-def test_clone_vacuum_never_deletes_borrowed_files(spark, tmp_path):
-    src = VersionedTable(str(tmp_path / "src"))
-    src.write(spark.range(0, 10).coalesce(1), committed_at="t1")
-    dst = src.clone(str(tmp_path / "dst"), committed_at="c1")
-    dst.write(spark.range(10, 20).coalesce(1), mode="overwrite", committed_at="c2")
-    removed = dst.vacuum(keep_last=1)
-    # v1 (the clone) referenced only borrowed files — none may be deleted
-    assert removed == 0
-    assert _ids(src.read(spark)) == list(range(10))
-
-
-def test_clone_of_partitioned_table_prunes(spark, tmp_path):
-    src = VersionedTable(str(tmp_path / "src"))
-    df = spark.range(20).withColumn("part", (F.col("id") % 2).cast("int"))
-    src.write(df, partition_by=("part",), committed_at="t1")
-    dst = src.clone(str(tmp_path / "dst"))
-    out, report = dst.read_partitions(spark, {"part": 1})
-    assert sorted(r["id"] for r in out.collect()) == list(range(1, 20, 2))
-    assert report["files_read"] < report["files_total"]
-
-
-def test_clone_onto_existing_table_refuses(spark, tmp_path):
-    src = VersionedTable(str(tmp_path / "src"))
-    src.write(spark.range(3), committed_at="t1")
-    src.clone(str(tmp_path / "dst"))
-    with pytest.raises(ValueError, match="already a table"):
-        src.clone(str(tmp_path / "dst"))
+    with pytest.raises(FileNotFoundError, match="missing"):
+        t.restore(1)
 
 
 # -- optimize zorder -------------------------------------------------------

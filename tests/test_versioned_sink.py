@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from faers_datalakehouse_spark.sources.versioned import VersionedTable
@@ -29,7 +28,7 @@ def test_idempotent_append_skips_replays(spark, tmp_path):
     assert t.current_version() == 2
     assert sorted(r["id"] for r in t.read(spark).collect()) == list(range(8))
     # commit stamps are deterministic and sortable
-    assert [s.committed_at for s in t.history()] == [
+    assert [t.snapshot(v).committed_at for v in t.versions()] == [
         "batch-000000000000",
         "batch-000000000001",
     ]
@@ -94,4 +93,4 @@ def test_stream_to_versioned_end_to_end(spark, tmp_path):
     assert got.count() == want.count()
     assert sorted(got.columns) == sorted(want.columns)
     # every commit carries the txn watermark
-    assert all("txn" in s.extra for s in t.history())
+    assert all("txn" in t.snapshot(v).extra for v in t.versions())

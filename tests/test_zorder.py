@@ -2,14 +2,10 @@
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import functions as F
 
-from faers_datalakehouse_spark.sources.zorder import (
-    write_zordered,
-    z_value,
-)
+from faers_datalakehouse_spark.sources.versioned import VersionedTable
+from faers_datalakehouse_spark.sources.zorder import z_value
 
 
 def test_z_value_interleaves_bits(spark):
@@ -30,10 +26,10 @@ def test_z_value_interleaves_bits(spark):
     assert got[(3, 3)] == 15
 
 
-def _file_spans(spark, path: str, col: str) -> list[int]:
+def _file_spans(spark, t: VersionedTable, col: str) -> list[int]:
     spans = []
-    for f in sorted(str(p) for p in Path(path).glob("part-*.parquet")):
-        row = spark.read.parquet(f).agg(
+    for f in t.snapshot().files:
+        row = spark.read.parquet(str(t.root / f["path"])).agg(
             F.min(col).alias("lo"), F.max(col).alias("hi")
         ).collect()[0]
         spans.append(int(row["hi"]) - int(row["lo"]))
@@ -50,16 +46,17 @@ def test_zorder_layout_narrows_minmax_on_both_columns(spark, tmp_path):
         ((F.col("id") * 37) % 256).alias("x"),
         ((F.col("id") * 101) % 256).alias("y"),
     )
-    plain_dir = str(tmp_path / "plain")
-    z_dir = str(tmp_path / "zordered")
-    df.repartition(8).write.parquet(plain_dir)
-    write_zordered(df, z_dir, "x", "y", n_files=8, bits=8)
+    t = VersionedTable(str(tmp_path / "vt"))
+    t.write(df.repartition(8), committed_at="t1")
+    plain = {col: _file_spans(spark, t, col) for col in ("x", "y")}
+    t.optimize_zorder(spark, "x", "y", n_files=8, bits=8, committed_at="t2")
 
-    assert spark.read.parquet(z_dir).count() == n  # lossless rewrite
+    assert t.read(spark).count() == n  # lossless rewrite
 
     for col in ("x", "y"):
-        plain_avg = sum(_file_spans(spark, plain_dir, col)) / 8
-        z_avg = sum(_file_spans(spark, z_dir, col)) / 8
+        plain_avg = sum(plain[col]) / len(plain[col])
+        z_spans = _file_spans(spark, t, col)
+        z_avg = sum(z_spans) / len(z_spans)
         # round-robin files span ~the full domain; z-ordered files must
         # cover a fraction of it on BOTH axes simultaneously
         assert z_avg < plain_avg * 0.6, (col, z_avg, plain_avg)
