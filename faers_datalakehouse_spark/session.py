@@ -15,6 +15,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Driver heap default: half the host's physical memory, capped at 48g (a
+# fixed 48g let one local-mode JVM outgrow a 16 GB host's RAM and be
+# OOM-killed). SPARK_GRAFT_DRIVER_MEM overrides it per deployment.
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+DEFAULT_DRIVER_MEM = f"{min(48 * 1024, _RAM_MB // 2)}m"
 
 
 def get_spark(
@@ -42,7 +47,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -29,11 +29,16 @@ through the library's ``read()`` helpers:
   version-by-version — the Delta streaming-source model, including
   ``ignore_changes`` semantics for compacted/rewritten files.
 
+Manifests are read only through :class:`~.versioned.VersionedTable`
+(``versions()``/``snapshot()``), and pushed-filter skipping is the
+library's own min/max test (``versioned._stats_overlap``), so this
+source resolves snapshots and compares stats exactly as
+``VersionedTable.read_pruned`` does.
+
 Scope: plain and partitioned snapshots. Tables carrying merge-on-read
-tombstones or column-mapping renames refuse loudly (read those through
-``VersionedTable.read``, which applies the deletion vectors/mapping);
-wiring those through this reader is mechanical but not yet needed by
-any driver surface.
+tombstones or column-mapping renames refuse loudly, in the batch and
+the streaming reader alike (read those through ``VersionedTable.read``,
+which applies the deletion vectors/mapping).
 """
 
 from __future__ import annotations
@@ -58,6 +63,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .versioned import Snapshot, VersionedTable, _json_safe, _stats_overlap
+
 _ARROW_TYPES = {
     "long": "int64",
     "integer": "int32",
@@ -70,6 +77,33 @@ _ARROW_TYPES = {
     "date": "date32",
     "timestamp_ntz": "timestamp[us]",
 }
+
+
+def _snapshot(root: str, version) -> Snapshot:
+    """The snapshot ``.option("version")`` selects (default: latest)."""
+    vt = VersionedTable(root)
+    versions = vt.versions()
+    if not versions:
+        raise ValueError(f"{root}: not a versioned table (no manifests)")
+    v = int(version) if version is not None else versions[-1]
+    if v not in versions:
+        raise ValueError(f"{root}: no snapshot v{v}")
+    return vt.snapshot(v)
+
+
+def _refuse_unreadable(snap: Snapshot) -> None:
+    """This source reads data files as they lie; snapshots whose rows
+    need tombstones or a column mapping applied refuse loudly."""
+    if snap.extra.get("deletes"):
+        raise ValueError(
+            "versioned_py cannot read tables with merge-on-read "
+            "tombstones; use VersionedTable.read (or compact first)"
+        )
+    if snap.extra.get("column_mapping"):
+        raise ValueError(
+            "versioned_py cannot read column-mapped tables; use "
+            "VersionedTable.read (or compact first)"
+        )
 
 
 class _FilePart(InputPartition):
@@ -113,80 +147,38 @@ class VersionedReader(DataSourceReader):
         self.schema_fields = [
             (f.name, f.dataType.typeName()) for f in schema.fields
         ]
-        manifest_dir = Path(root) / "_manifests"
-        versions = sorted(
-            int(p.stem[1:]) for p in manifest_dir.glob("v*.json")
-        )
-        if not versions:
-            raise ValueError(f"{root}: not a versioned table (no manifests)")
-        want = options.get("version")
-        version = int(want) if want is not None else versions[-1]
-        if version not in versions:
-            raise ValueError(f"{root}: no snapshot v{version}")
-        snap = json.loads(
-            (manifest_dir / f"v{version:08d}.json").read_text()
-        )
-        extra = snap.get("extra") or {}
-        if extra.get("deletes"):
-            raise ValueError(
-                "versioned_py cannot read tables with merge-on-read "
-                "tombstones; use VersionedTable.read"
-            )
-        if extra.get("column_mapping"):
-            raise ValueError(
-                "versioned_py cannot read column-mapped tables; use "
-                "VersionedTable.read"
-            )
-        self.entries = snap["files"]
-        spec = extra.get("partition_spec") or {}
-        self.part_cols = list(spec.get("cols", []))
-        self.bounds: list[tuple[str, str, object]] = []
+        snap = _snapshot(root, options.get("version"))
+        _refuse_unreadable(snap)
+        self.entries = snap.files
+        # (column, lo, hi) bounds from pushed filters; None is open
+        self.bounds: list[tuple[str, object, object]] = []
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         stat_cols = {
             c for e in self.entries for c in e.get("stats", {})
         }
         for f in filters:
-            if (
-                isinstance(
-                    f,
-                    (
-                        EqualTo,
-                        GreaterThan,
-                        GreaterThanOrEqual,
-                        LessThan,
-                        LessThanOrEqual,
-                    ),
-                )
-                and len(f.attribute) == 1
-                and f.attribute[0] in stat_cols
-            ):
-                self.bounds.append(
-                    (f.attribute[0], type(f).__name__, f.value)
-                )
+            if len(getattr(f, "attribute", ())) != 1:
+                continue
+            col, v = f.attribute[0], getattr(f, "value", None)
+            if col not in stat_cols:
+                continue
+            if isinstance(f, EqualTo):
+                self.bounds.append((col, v, v))
+            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                self.bounds.append((col, v, None))
+            elif isinstance(f, (LessThan, LessThanOrEqual)):
+                self.bounds.append((col, None, v))
         # every filter is re-evaluated by Spark post-scan: pruning may
         # only SKIP files, never stand in for the predicate
         return filters
 
     def _keep(self, entry: dict) -> bool:
         stats = entry.get("stats", {})
-        for col, op, v in self.bounds:
-            if col not in stats:
-                continue
-            lo, hi = stats[col]
-            if lo is None or hi is None:
-                continue
-            if op == "EqualTo" and not (lo <= v <= hi):
-                return False
-            if op == "GreaterThan" and not (hi > v):
-                return False
-            if op == "GreaterThanOrEqual" and not (hi >= v):
-                return False
-            if op == "LessThan" and not (lo < v):
-                return False
-            if op == "LessThanOrEqual" and not (lo <= v):
-                return False
-        return True
+        return all(
+            _stats_overlap(stats.get(col), lo, hi)
+            for col, lo, hi in self.bounds
+        )
 
     def partitions(self):
         return [
@@ -231,8 +223,6 @@ class VersionedWriter(DataSourceArrowWriter):
 
     def __init__(self, root: str, schema: StructType, overwrite: bool,
                  options: dict):
-        from .versioned import VersionedTable
-
         self.root = root
         self.schema_json = schema.json()
         self.overwrite = overwrite
@@ -251,7 +241,7 @@ class VersionedWriter(DataSourceArrowWriter):
                     "versioned_py writer cannot validate CHECK "
                     "constraints; use VersionedTable.write"
                 )
-            if (snap.extra or {}).get("partition_spec"):
+            if snap.extra.get("partition_spec"):
                 raise ValueError(
                     "versioned_py writer does not partition; use "
                     "VersionedTable.write(partition_by=...)"
@@ -289,13 +279,14 @@ class VersionedWriter(DataSourceArrowWriter):
                         break
                     los.append(st.min)
                     his.append(st.max)
-                if los:
-                    stats[c] = [min(los), max(his)]
+                if los:  # stored in the library's stats domain
+                    stats[c] = [
+                        _json_safe(min(los), "lo"),
+                        _json_safe(max(his), "hi"),
+                    ]
         return _WroteFile(rel, out.stat().st_size, stats or None)
 
     def commit(self, messages):
-        from .versioned import VersionedTable
-
         vt = VersionedTable(self.root)
         entries = []
         for m in messages:
@@ -359,32 +350,21 @@ class VersionedStreamReader(DataSourceStreamReader):
             str(options.get("ignore_changes", "false")).lower() == "true"
         )
 
-    def _snap(self, version: int) -> dict:
-        p = Path(self.root) / "_manifests" / f"v{version:08d}.json"
-        return json.loads(p.read_text())
-
-    def _latest(self) -> int:
-        vs = [
-            int(p.stem[1:])
-            for p in (Path(self.root) / "_manifests").glob("v*.json")
-        ]
-        return max(vs) if vs else 0
-
     def initialOffset(self) -> dict:  # noqa: N802
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        return {"version": self._latest()}
+        latest = VersionedTable(self.root).current_version()
+        return {"version": latest or 0}
 
     def partitions(self, start: dict, end: dict):
         sv, ev = start["version"], end["version"]
         if ev <= sv:
             return []
-        old = (
-            {e["path"] for e in self._snap(sv)["files"]} if sv > 0 else set()
-        )
-        snap = self._snap(ev)
-        new_files = {e["path"] for e in snap["files"]}
+        vt = VersionedTable(self.root)
+        old = {e["path"] for e in vt.snapshot(sv).files} if sv > 0 else set()
+        snap = vt.snapshot(ev)
+        new_files = {e["path"] for e in snap.files}
         gone = old - new_files
         if gone and not self.ignore_changes:
             raise ValueError(
@@ -393,14 +373,10 @@ class VersionedStreamReader(DataSourceStreamReader):
                 "; set .option('ignore_changes', 'true') to stream only "
                 "added files, or use changes() for a true change feed"
             )
-        if (snap.get("extra") or {}).get("deletes"):
-            raise ValueError(
-                "versioned_py stream cannot read merge-on-read "
-                "tombstoned snapshots; compact first"
-            )
+        _refuse_unreadable(snap)
         return [
             _FilePart(str(Path(self.root) / e["path"]), e.get("partition"))
-            for e in snap["files"]
+            for e in snap.files
             if e["path"] not in old
         ]
 
@@ -424,20 +400,10 @@ class VersionedDataSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("versioned_py requires .option/load path")
-        manifest_dir = Path(root) / "_manifests"
-        versions = sorted(
-            int(p.stem[1:]) for p in manifest_dir.glob("v*.json")
-        )
-        if not versions:
-            raise ValueError(f"{root}: not a versioned table")
-        want = self.options.get("version")
-        version = int(want) if want is not None else versions[-1]
-        snap = json.loads(
-            (manifest_dir / f"v{version:08d}.json").read_text()
-        )
-        if not snap.get("schema"):
-            raise ValueError(f"{root}: snapshot v{version} has no schema")
-        return StructType.fromJson(json.loads(snap["schema"]))
+        snap = _snapshot(root, self.options.get("version"))
+        if not snap.schema_json:
+            raise ValueError(f"{root}: snapshot v{snap.version} has no schema")
+        return StructType.fromJson(json.loads(snap.schema_json))
 
     def reader(self, schema: StructType) -> VersionedReader:
         return VersionedReader(

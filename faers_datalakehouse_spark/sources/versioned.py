@@ -30,11 +30,18 @@ Data skipping: per-file min/max stats (``read_pruned`` — clustered
 columns) and per-file bloom filter indexes (``read_bloom_pruned`` —
 point lookups on unclustered columns; Delta bloom-filter-index analog).
 
+One rule per concern: ``VersionedTable._scan`` is the only reader of a
+snapshot (partition layout, merge-on-read tombstones, column mapping
+and schema order all come from the ``Snapshot``, callers pass only the
+files they chose); ``_stats_overlap`` is the one min/max skipping test
+(also used by the ``versioned_py`` source); ``_copy_on_write`` is the
+one row-level rewrite (``rewrite_where``/``delete_where`` and
+``merge_rows``).
+
 Deliberate non-goals (use real Delta/Iceberg on a cluster): a
 distributed commit service (the exclusive-link protocol assumes a
-filesystem with atomic link semantics — POSIX local/NFS, not S3), MERGE
-inside the log (the engine's DataFrame-native SCD2/MERGE compose on
-top), and catalog integration.
+filesystem with atomic link semantics — POSIX local/NFS, not S3) and
+catalog integration.
 
 Scale notes: manifests hold file paths + sizes only — KBs per snapshot at
 thousands of files; resolution is one small JSON read on the driver, and
@@ -55,10 +62,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-# sentinel: "_commit should resolve the parent snapshot itself" —
-# distinct from None, which means "this commit creates the table"
-_RESOLVE_PARENT: int | None = object()  # type: ignore[assignment]
 
 
 def _parse_partition_values(
@@ -109,17 +112,44 @@ def _json_safe(v, side: str = "lo"):
     return v
 
 
-def _probe_safe(v):
-    """Normalize a ``read_pruned`` probe bound into the stats' stored
-    domain (ISO string for dates, float for Decimal)."""
-    import datetime as _dt
-    import decimal as _dec
+def _stats_overlap(stats: list | None, lo, hi) -> bool:
+    """Whether a file whose recorded ``[min, max]`` is ``stats`` may hold
+    a value in ``[lo, hi]`` (a None bound is open). The bounds are
+    compared in the stats' stored domain (``_json_safe``, widened outward
+    like the stats themselves, so the test only errs toward reading). A
+    file without stats may hold anything; NULL stats (no non-NULL value,
+    or no rows) satisfy no range predicate."""
+    if stats is None:
+        return True
+    if stats[0] is None:
+        return False
+    if lo is not None and stats[1] < _json_safe(lo, "lo"):
+        return False
+    return hi is None or stats[0] <= _json_safe(hi, "hi")
 
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    if isinstance(v, _dec.Decimal):
-        return float(v)
-    return v
+
+def _index_of(f: dict, kind: str, names: list[str]):
+    """A file's ``kind`` index (``"stats"`` or ``"bloom"``) for the first
+    of a column's physical ``names`` that has one, else None."""
+    idx = f.get(kind, {})
+    return next((idx[p] for p in names if p in idx), None)
+
+
+def _bloom_may_contain(idx: dict | None, value) -> bool:
+    """The probe side of ``_stage_blooms``: False only if some hash bit
+    of ``value`` is unset, so a file holding it is never skipped. A file
+    without a bloom index may hold anything."""
+    if idx is None:
+        return True
+    m, words = idx["m"], idx["words"]
+    for i in range(idx["k"]):
+        digest = hashlib.md5(f"{value}|{i}".encode()).hexdigest()
+        h = int(digest[24:32], 16) % m
+        # bit_or stored a signed int64; % 2**64 reads it as unsigned
+        bits = words.get(str(h // 64), 0) % (1 << 64)
+        if not bits >> (h % 64) & 1:
+            return False
+    return True
 
 
 def _check_name_free(mapping: dict[str, list[str]], name: str) -> None:
@@ -220,7 +250,7 @@ class VersionedTable:
         that changes the partition columns for FUTURE writes. Existing
         files keep their old directory layout and are never rewritten —
         reads reconstruct each file generation under its own spec
-        (``_read_entries`` groups by per-entry partition tuples), and
+        (``_read_files`` groups by per-entry partition tuples), and
         ``compact()`` naturally migrates old files to the live spec
         because compaction re-stages through the normal write path.
 
@@ -301,17 +331,13 @@ class VersionedTable:
             return None
         return self.snapshot(version).extra.get("partition_spec")
 
-    def _read_entries(
-        self,
-        spark: SparkSession,
-        entries: list[dict],
-        spec: dict | None,
-        schema_json: str | None = None,
-        deletes: list[dict] | None = None,
-        keep_lineage: bool = False,
-        mapping: dict | None = None,
+    def _read_files(
+        self, spark: SparkSession, entries: list[dict], lineage: bool = False
     ) -> DataFrame:
-        """Scan the given manifest entries as one DataFrame.
+        """Scan manifest entries as one DataFrame of their in-file
+        columns. No snapshot state is applied here (``_scan`` does that);
+        the one direct caller is ``_validate_staged``, whose freshly
+        staged files have none.
 
         ``partitionBy`` strips partition columns from the data files
         (they live in the directory name), so a partitioned read groups
@@ -322,32 +348,18 @@ class VersionedTable:
         pruning still works (only kept files are passed). Partition
         columns are read with an explicit ``string`` type: values
         surface in the directory-name string encoding the manifest
-        itself records, and are cast to the generation's recorded
-        types — the identical cast the previous literal-per-tuple form
-        applied, without its one-union-branch-per-distinct-tuple plan
-        (34 relations in the versioned_evolve bench entry; at
-        day/region-grained partitioning that shape is a driver-side
-        planning blowup).
-        Column order is restored from the snapshot schema when
-        recorded.
+        itself records, and are cast to the types each entry records
+        for its generation — one relation per generation, not one union
+        branch per distinct partition tuple (34 relations in the
+        versioned_evolve bench entry; at day/region-grained partitioning
+        that shape is a driver-side planning blowup).
 
-        ``deletes``: merge-on-read tombstone entries (position deletes
-        ``(file_path, row_index)``); live rows are the anti-join against
-        them. ``keep_lineage`` keeps the ``_dv_file``/``_dv_pos``
-        row-lineage columns in the output (mutation paths use them to
-        locate rows; plain reads drop them).
-
-        ``mapping``: column-mapping projection (``{logical: [physical
-        names, newest first]}``) — renamed columns resolve each logical
-        name by COALESCING its physical aliases across the mixed-name
-        file generations (mergeSchema surfaces every physical name, null
-        where a file lacks it)."""
+        ``lineage`` adds the ``_dv_file``/``_dv_pos`` row-lineage columns
+        (tombstone anti-joins and mutation paths locate rows by them)."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        lineage = bool(deletes) or keep_lineage
-
-        def _scan(
+        def _one(
             paths: list[str],
             base_path: str | None = None,
             pcols: tuple[str, ...] = (),
@@ -357,10 +369,10 @@ class VersionedTable:
                 # partition columns typed string: values surface as the
                 # raw directory-name strings (the manifest's own
                 # encoding) so the recorded-type cast below reproduces
-                # the literal form exactly ("01" must not become 1),
-                # whatever the session's type-inference conf holds. The
-                # data columns come from the read above, which names
-                # files, not a basePath, so discovers no partitions.
+                # them exactly ("01" must not become 1), whatever the
+                # session's type-inference conf holds. The data columns
+                # come from the read above, which names files, not a
+                # basePath, so discovers no partitions.
                 schema = T.StructType(
                     df.schema.fields
                     + [T.StructField(c, T.StringType()) for c in pcols]
@@ -381,57 +393,85 @@ class VersionedTable:
             return df
 
         if not any("partition" in e for e in entries):
-            out = _scan([str(self.root / e["path"]) for e in entries])
-        else:
-            # group by each entry's file GENERATION — staging dir plus
-            # its OWN partition keyset/types (not the live spec's
-            # columns): after partition-spec evolution a snapshot
-            # legitimately mixes file generations laid out under
-            # different specs — each group's basePath read reconstructs
-            # exactly the columns its directory layout stripped, and
-            # unionByName null-fills across generations
-            fallback = spec["types"] if spec else {}
+            return _one([str(self.root / e["path"]) for e in entries])
 
-            def _gen(e: dict) -> tuple:
-                segs = e["path"].split("/")
-                pre = len(segs) - 1
-                for i, s in enumerate(segs[:-1]):
-                    if "=" in s:
-                        pre = i
-                        break
-                return (
-                    "/".join(segs[:pre]),
-                    tuple(sorted(e.get("partition", {}))),
-                    tuple(sorted((e.get("partition_types") or {}).items())),
-                )
+        # group by each entry's file GENERATION — staging dir plus its
+        # OWN partition keyset/types (not the live spec's columns): after
+        # partition-spec evolution a snapshot legitimately mixes file
+        # generations laid out under different specs — each group's
+        # basePath read reconstructs exactly the columns its directory
+        # layout stripped, and unionByName null-fills across generations
+        def _gen(e: dict) -> tuple:
+            segs = e["path"].split("/")
+            pre = len(segs) - 1
+            for i, s in enumerate(segs[:-1]):
+                if "=" in s:
+                    pre = i
+                    break
+            return (
+                "/".join(segs[:pre]),
+                tuple(sorted(e.get("partition", {}))),
+                tuple(sorted((e.get("partition_types") or {}).items())),
+            )
 
-            groups: dict[tuple, list[dict]] = {}
-            for e in entries:
-                groups.setdefault(_gen(e), []).append(e)
-            parts = []
-            for key in sorted(groups):
-                prefix, pcols, ptypes = key
-                paths = [str(self.root / e["path"]) for e in groups[key]]
-                if not pcols:
-                    parts.append(_scan(paths))
-                    continue
-                types = {**fallback, **dict(ptypes)}
-                part = _scan(paths, str(self.root / prefix), pcols)
-                for c in pcols:
-                    if c in types:
-                        part = part.withColumn(
-                            c, F.col(c).cast(types[c])
-                        )
-                # data columns first, then partition columns in name
-                # order — the layout the literal form produced
-                part = part.select(
-                    *[c for c in part.columns if c not in pcols],
-                    *pcols,
+        groups: dict[tuple, list[dict]] = {}
+        for e in entries:
+            groups.setdefault(_gen(e), []).append(e)
+        out = None
+        for key in sorted(groups):
+            prefix, pcols, ptypes = key
+            paths = [str(self.root / e["path"]) for e in groups[key]]
+            part = (
+                _one(paths, str(self.root / prefix), pcols)
+                if pcols
+                else _one(paths)
+            )
+            for c, t in ptypes:
+                part = part.withColumn(c, F.col(c).cast(t))
+            out = part if out is None else out.unionByName(
+                part, allowMissingColumns=True
+            )
+        return out
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        files: list[dict] | None = None,
+        lineage: bool = False,
+    ) -> DataFrame:
+        """The one reader of a snapshot: ``files`` (default: all of
+        ``snap``'s) read under ``snap``'s rules, so every reader returns
+        the same rows in the same column order.
+
+        - No files: a typed empty frame from the recorded schema (an
+          overwrite-truncate or zero-row merge is a table state, not an
+          error).
+        - ``deletes``: merge-on-read tombstones (position deletes
+          ``(file_path, row_index)``); live rows are the anti-join
+          against them.
+        - ``column_mapping`` (``{logical: [physical names, newest
+          first]}``): each logical name COALESCES its physical aliases
+          across the mixed-name file generations (mergeSchema surfaces
+          every physical name, null where a file lacks it).
+        - Column order is the recorded schema's; columns it does not
+          list (a narrower later append) follow.
+
+        ``lineage`` keeps the ``_dv_file``/``_dv_pos`` columns (mutation
+        paths locate rows by them)."""
+        entries = snap.files if files is None else files
+        if not entries:
+            if snap.schema_json is None:
+                raise FileNotFoundError(
+                    f"version {snap.version} of {self.root} lists no files "
+                    "and records no schema (pre-schema manifest)"
                 )
-                parts.append(part)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
+            return spark.createDataFrame([], self._schema_fields(snap))
+        from pyspark.sql import functions as F
+
+        deletes = snap.extra.get("deletes")
+        mapping = snap.extra.get("column_mapping")
+        out = self._read_files(spark, entries, bool(deletes) or lineage)
         if deletes:
             tomb = spark.read.parquet(
                 *[str(self.root / d["path"]) for d in deletes]
@@ -442,28 +482,26 @@ class VersionedTable:
                 & (out["_dv_pos"] == tomb["row_index"]),
                 "left_anti",
             )
+            if not lineage:
+                out = out.drop("_dv_file", "_dv_pos")
         if mapping:
-            keep_extra = ["_dv_file", "_dv_pos"] if lineage else []
             projected = []
             for logical, physicals in mapping.items():
                 present = [p for p in physicals if p in out.columns]
                 if not present:
                     continue  # column exists in no scanned file
                 col = (
-                    F.coalesce(*[F.col(p) for p in present])
+                    F.coalesce(*present)
                     if len(present) > 1
                     else F.col(present[0])
                 )
                 projected.append(col.alias(logical))
             out = out.select(
-                *projected, *[c for c in keep_extra if c in out.columns]
+                *projected,
+                *[c for c in ("_dv_file", "_dv_pos") if c in out.columns],
             )
-        if lineage and not keep_lineage:
-            out = out.drop("_dv_file", "_dv_pos")
-        if schema_json is not None:
-            order = [
-                f["name"] for f in json.loads(schema_json)["fields"]
-            ]
+        if snap.schema_json is not None:
+            order = [f.name for f in self._schema_fields(snap).fields]
             ordered = [c for c in order if c in out.columns]
             out = out.select(
                 *ordered, *[c for c in out.columns if c not in ordered]
@@ -477,7 +515,6 @@ class VersionedTable:
         df: DataFrame,
         stats_cols: tuple[str, ...] = (),
         bloom_cols: tuple[str, ...] = (),
-        bloom_fp: float = 0.01,
         partition_by: tuple[str, ...] = (),
     ) -> list[dict]:
         stage = self.root / "data" / uuid.uuid4().hex
@@ -510,7 +547,7 @@ class VersionedTable:
                 # specs, so each entry carries its own generation's types
                 e["partition_types"] = ptypes
         if bloom_cols and entries:
-            self._stage_blooms(df, stage, entries, bloom_cols, bloom_fp)
+            self._stage_blooms(df, stage, entries, bloom_cols)
         if stats_cols and entries:
             # per-file min/max for the skipping index: ONE distributed
             # aggregation over the staged files keyed by input_file_name —
@@ -539,10 +576,12 @@ class VersionedTable:
                 }
                 by_suffix[r["_file"]] = stats
             for e in entries:
-                for f, stats in by_suffix.items():
-                    if f.endswith(e["path"]):
-                        e["stats"] = stats
-                        break
+                # a zero-row file has no census row: it gets NULL stats,
+                # as an all-NULL column does
+                e["stats"] = next(
+                    (v for f, v in by_suffix.items() if f.endswith(e["path"])),
+                    {c: [None, None] for c in stats_cols},
+                )
         return entries
 
     def _stage_blooms(
@@ -551,7 +590,6 @@ class VersionedTable:
         stage: Path,
         entries: list[dict],
         bloom_cols: tuple[str, ...],
-        fp_rate: float,
     ) -> None:
         """Per-file bloom filter index (Delta bloom-filter-index analog):
         point-lookup file skipping for columns whose values are NOT
@@ -562,9 +600,10 @@ class VersionedTable:
         hex digits), not JVM xxhash64 — both sides of the index must
         compute the same hash and only md5 is shared vocabulary.
 
-        Sizing: one (m, k) per column from the largest file's row count
-        (k capped at 4 — the probe here is driver-side, but the build is
-        codegen and the same huge-method cliff applies). Words are stored
+        Sizing: one (m, k) per column for a 1% false-positive rate at
+        the largest file's row count (k capped at 4 — the probe here is
+        driver-side, but the build is codegen and the same huge-method
+        cliff applies). Words are stored
         sparse ({word_index: bits}) in the manifest; at 10.5 bits/key
         this is ~KBs per file per column — production would move them to
         a sidecar, the manifest shape is the point here.
@@ -584,7 +623,7 @@ class VersionedTable:
             .collect()
         }
         max_n = max(counts.values()) if counts else 1
-        m, k = sizing(max(max_n, 64), fp_rate)
+        m, k = sizing(max(max_n, 64), 0.01)
         for col in bloom_cols:
             pos = F.explode(
                 F.array(
@@ -642,41 +681,38 @@ class VersionedTable:
         files: list[dict],
         operation: str,
         committed_at: str,
+        *,
+        parent_version: int | None,
         schema_json: str | None = None,
         constraints: list[str] | None = None,
         extra: dict | None = None,
-        parent_version: int | None = _RESOLVE_PARENT,
     ) -> int:
         """Publish a snapshot with an atomic EXCLUSIVE link.
         ``parent_version`` is the snapshot the caller derived ``files``
-        from (None = a new table; unset = resolve current now): the new
-        version is allocated as parent+1, so if ANY commit landed after
-        the parent, the publish targets a taken version and raises
-        ``ConcurrentWriteError`` instead of silently building on — or
-        dropping — a snapshot the caller never saw. ``constraints``:
-        persisted table CHECKs (None = carry the parent's forward
-        unchanged)."""
+        from (None = a new table): the new version is allocated as
+        parent+1, so if ANY commit landed after the parent, the publish
+        targets a taken version and raises ``ConcurrentWriteError``
+        instead of silently building on — or dropping — a snapshot the
+        caller never saw. ``constraints``: persisted table CHECKs (None =
+        carry the parent's forward unchanged)."""
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
-        cur = (
-            self.current_version()
-            if parent_version is _RESOLVE_PARENT
-            else parent_version
+        parent = (
+            self.snapshot(parent_version)
+            if parent_version is not None
+            else None
         )
         if constraints is None:
-            constraints = (
-                self.snapshot(cur).constraints if cur is not None else []
-            )
+            constraints = parent.constraints if parent else []
         # table-level properties ride the commit chain: every commit
         # carries them forward (like constraints), so maintenance commits
         # (compact, rewrite, merge) can never silently drop the partition
         # spec or the streaming transaction watermarks
         extra = dict(extra or {})
-        if cur is not None:
-            prev_extra = self.snapshot(cur).extra
+        if parent is not None:
             for key in ("partition_spec", "partition_spec_history", "txn",
                         "deletes", "column_mapping"):
-                if key not in extra and prev_extra.get(key) is not None:
-                    extra[key] = prev_extra[key]
+                if key not in extra and parent.extra.get(key) is not None:
+                    extra[key] = parent.extra[key]
         # an explicit empty delete list exists only to BLOCK the carry
         # (overwrite/compact/zorder); the published manifest omits it so
         # delete-free snapshots stay byte-identical to pre-MOR ones
@@ -687,7 +723,7 @@ class VersionedTable:
         # a concurrent commit lands after it, the exclusive link below
         # fails and the caller rebases — never a commit whose carried
         # state (constraints/spec/txn) predates its parent version
-        version = (cur or 0) + 1
+        version = (parent_version or 0) + 1
         doc = {
             "operation": operation,
             "committed_at": committed_at,
@@ -801,9 +837,7 @@ class VersionedTable:
             partition_by=part_cols,
         )
         if effective and new_files:
-            self._validate_staged(
-                df.sparkSession, new_files, effective, spec=spec
-            )
+            self._validate_staged(df.sparkSession, new_files, effective)
         # OPTIMISTIC CONCURRENCY (Delta's model, append-shaped subset):
         # the staged files are final; only the manifest contents depend
         # on the current snapshot. If a concurrent writer takes our
@@ -830,9 +864,7 @@ class VersionedTable:
             # constraints added concurrently must hold for OUR rows too
             drift = [c for c in live_cons if c not in effective]
             if drift and new_files:
-                self._validate_staged(
-                    df.sparkSession, new_files, drift, spec=spec
-                )
+                self._validate_staged(df.sparkSession, new_files, drift)
             effective = list(dict.fromkeys(live_cons + effective + requested))
             if mode == "append" and latest is not None:
                 prior = latest.files
@@ -896,17 +928,15 @@ class VersionedTable:
         spark: SparkSession,
         new_files: list[dict],
         checks: list[str],
-        spec: dict | None = None,
     ) -> None:
         """One pass over the given files counting violations per
         constraint; on any hit, raise with counts + up to 3 sample rows
         per failing check, after deleting the (staged, uncommitted)
-        files. ``spec``: partition spec,
-        so CHECKs may reference partition columns (stripped from the
-        data files by the Hive layout)."""
+        files. The read restores partition columns, so CHECKs may
+        reference them."""
         from pyspark.sql import functions as F
 
-        staged = self._read_entries(spark, new_files, spec)
+        staged = self._read_files(spark, new_files)
         counts = staged.agg(
             *[
                 F.sum(
@@ -949,34 +979,11 @@ class VersionedTable:
     def read(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        snap = self.snapshot(version)
-        if not snap.files:
-            # An empty commit (overwrite-truncate, zero-row merge) is a
-            # legitimate table state, not an error: reproduce it as a typed
-            # empty frame from the manifest's persisted schema.
-            if snap.schema_json is None:
-                raise FileNotFoundError(
-                    f"version {snap.version} of {self.root} lists no files "
-                    "and records no schema (pre-schema manifest)"
-                )
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            return spark.createDataFrame([], schema)
-        # mergeSchema: appends may widen the schema (new columns); the
-        # union of all file footers in the snapshot is the table schema,
-        # with missing columns null-filled per file — Delta-style
-        # schema evolution on the read path. Partitioned snapshots
-        # additionally reconstruct the partition columns from the
-        # manifest (see _read_entries).
-        return self._read_entries(
-            spark,
-            snap.files,
-            snap.extra.get("partition_spec"),
-            schema_json=snap.schema_json,
-            deletes=snap.extra.get("deletes"),
-            mapping=snap.extra.get("column_mapping"),
-        )
+        """The snapshot's rows. mergeSchema: appends may widen the schema
+        (new columns); the union of all file footers in the snapshot is
+        the table schema, with missing columns null-filled per file —
+        Delta-style schema evolution on the read path (see ``_scan``)."""
+        return self._scan(spark, self.snapshot(version))
 
     def changes(
         self,
@@ -1025,16 +1032,7 @@ class VersionedTable:
 
         def _read(snap: Snapshot, other: set) -> DataFrame | None:
             only = [f for f in snap.files if f["path"] not in other]
-            if not only:
-                return None
-            return self._read_entries(
-                spark,
-                only,
-                snap.extra.get("partition_spec"),
-                schema_json=snap.schema_json,
-                deletes=snap.extra.get("deletes"),
-                mapping=snap.extra.get("column_mapping"),
-            )
+            return self._scan(spark, snap, only) if only else None
 
         added = _read(new, old_paths)
         removed = _read(old, new_paths)
@@ -1047,7 +1045,7 @@ class VersionedTable:
                     "rename the table columns"
                 )
         if added is None and removed is None:
-            base = self.read(spark, v_to).limit(0)
+            base = self._scan(spark, new).limit(0)
             return base.withColumn("change_type", F.lit(""))
         parts = []
         if added is not None:
@@ -1090,58 +1088,16 @@ class VersionedTable:
         """
         if value is None:
             raise ValueError("bloom lookup value must not be NULL")
-        snap = self.snapshot(version)
-        physicals = self._physical_names(snap, col)
-        keep = []
-        for f in snap.files:
-            idx = None
-            if isinstance(f, dict):
-                for pname in physicals:
-                    idx = f.get("bloom", {}).get(pname)
-                    if idx is not None:
-                        break
-            if idx is None:
-                keep.append(f)
-                continue
-            m, k, words = idx["m"], idx["k"], idx["words"]
-            hit = True
-            for i in range(k):
-                h = int(
-                    hashlib.md5(
-                        f"{value}|{i}".encode()
-                    ).hexdigest()[24:32],
-                    16,
-                ) % m
-                bits = words.get(str(h // 64), 0)
-                mask = 1 << (h % 64)
-                # bits is the sign-preserving int64 from bit_or; Python
-                # ints are unbounded, so normalize negative to unsigned
-                if bits < 0:
-                    bits += 1 << 64
-                if not bits & mask:
-                    hit = False
-                    break
-            if hit:
-                keep.append(f)
-        report = {
-            "files_total": len(snap.files),
-            "files_read": len(keep),
-            "files_skipped": len(snap.files) - len(keep),
-        }
         from pyspark.sql import functions as F
 
-        if not keep:
-            return self.read(spark, version).limit(0).filter(
-                F.col(col) == F.lit(value)
-            ), report
-        df = self._read_entries(
-            spark,
-            keep,
-            snap.extra.get("partition_spec"),
-            deletes=snap.extra.get("deletes"),
-            mapping=snap.extra.get("column_mapping"),
-        )
-        return df.filter(F.col(col) == F.lit(value)), report
+        snap = self.snapshot(version)
+        names = self._physical_names(snap, col)
+        keep = [
+            f
+            for f in snap.files
+            if _bloom_may_contain(_index_of(f, "bloom", names), value)
+        ]
+        return self._read_kept(spark, snap, keep, F.col(col) == F.lit(value))
 
     def read_pruned(
         self,
@@ -1160,44 +1116,21 @@ class VersionedTable:
         100 TB this is the difference between a full scan and touching a
         handful of files, decided from KBs of manifest on the driver.
         """
-        hi = lo if hi is None else hi
-        # compare in the stats' stored domain (ISO strings for dates,
-        # floats for Decimal) — see _json_safe/_probe_safe
-        lo_cmp, hi_cmp = _probe_safe(lo), _probe_safe(hi)
-        snap = self.snapshot(version)
-        physicals = self._physical_names(snap, col)
-        keep = []
-        for f in snap.files:
-            stats = None
-            if isinstance(f, dict):
-                for pname in physicals:
-                    stats = f.get("stats", {}).get(pname)
-                    if stats is not None:
-                        break
-            if stats is None or stats[0] is None:
-                keep.append(f)  # no stats -> cannot skip safely
-            elif not (stats[1] < lo_cmp or stats[0] > hi_cmp):
-                keep.append(f)
-        report = {
-            "files_total": len(snap.files),
-            "files_read": len(keep),
-            "files_skipped": len(snap.files) - len(keep),
-        }
-        if not keep:
-            df = self.read(spark, version).limit(0)
-        else:
-            df = self._read_entries(
-                spark,
-                keep,
-                snap.extra.get("partition_spec"),
-                deletes=snap.extra.get("deletes"),
-                mapping=snap.extra.get("column_mapping"),
-            )
         from pyspark.sql import functions as F
 
-        return (
-            df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))),
-            report,
+        hi = lo if hi is None else hi
+        snap = self.snapshot(version)
+        names = self._physical_names(snap, col)
+        keep = [
+            f
+            for f in snap.files
+            if _stats_overlap(_index_of(f, "stats", names), lo, hi)
+        ]
+        return self._read_kept(
+            spark,
+            snap,
+            keep,
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
         )
 
     def read_partitions(
@@ -1249,34 +1182,39 @@ class VersionedTable:
             )
 
         keep = [f for f in snap.files if _match(f)]
-        mixed = any(
-            c not in f.get("partition", {}) for f in keep for c in wanted
-        )
+        cond = None
+        if any(c not in f.get("partition", {}) for f in keep for c in wanted):
+            from pyspark.sql import functions as F
+
+            for c, vs in wanted.items():
+                non_null = [v for v in vs if v is not None]
+                c_cond = F.col(c).cast("string").isin(non_null)
+                if None in vs:
+                    c_cond = c_cond | F.col(c).isNull()
+                cond = c_cond if cond is None else cond & c_cond
+        return self._read_kept(spark, snap, keep, cond)
+
+    def _read_kept(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        keep: list[dict],
+        cond=None,
+    ) -> tuple[DataFrame, dict]:
+        """The shared tail of the pruned readers, which only choose the
+        files to ``keep``: scan them (a typed empty frame when none is
+        kept), apply the exact row predicate ``cond`` and report
+        ``{"files_total", "files_read", "files_skipped"}``."""
         report = {
             "files_total": len(snap.files),
             "files_read": len(keep),
             "files_skipped": len(snap.files) - len(keep),
         }
-        if not keep:
-            return self.read(spark, version).limit(0), report
-        out = self._read_entries(
-            spark,
-            keep,
-            spec,
-            schema_json=snap.schema_json,
-            deletes=snap.extra.get("deletes"),
-            mapping=snap.extra.get("column_mapping"),
-        )
-        if mixed:
-            from pyspark.sql import functions as F
-
-            for c, vs in wanted.items():
-                non_null = [v for v in vs if v is not None]
-                cond = F.col(c).cast("string").isin(non_null)
-                if None in vs:
-                    cond = cond | F.col(c).isNull()
-                out = out.where(cond)
-        return out, report
+        if keep:
+            df = self._scan(spark, snap, keep)
+        else:
+            df = self._scan(spark, snap).limit(0)
+        return (df if cond is None else df.where(cond)), report
 
     # -- maintenance ------------------------------------------------------
 
@@ -1501,109 +1439,123 @@ class VersionedTable:
         pre- or post-mutation snapshot atomically; prior versions keep
         time-traveling to the unmodified data.
 
-        Matching rows are deleted. Returns
-        ``{version, files_rewritten, files_kept, rows_matched}``.
-
-        File pruning is one aggregation over ``input_file_name()`` —
-        distributed, no per-file driver loop; at cluster scale this is
-        exactly why copy-on-write deletes are cheap when predicates align
-        with the layout (partition/Z-order pruning shrinks the matched
-        file set — see ``sources.zorder``).
+        Matching rows are deleted; a row whose predicate is NULL is
+        kept, as ``mode="mor"`` keeps it. Returns
+        ``{version, files_rewritten, files_kept, rows_matched}``; see
+        ``_copy_on_write``.
         """
-        from pyspark.sql import functions as F
-
-        snap = self.snapshot()
-        if not snap.files:
-            return {
-                "version": snap.version,
-                "files_rewritten": 0,
-                "files_kept": 0,
-                "rows_matched": 0,
-            }
-        # lineage-based file identity: input_file_name() returns '' once
-        # a join sits between scan and projection, which is exactly what
-        # a MOR-tombstoned read contains — _dv_file is scan-anchored
-        df = self._read_entries(
+        return self._copy_on_write(
             spark,
-            snap.files,
-            snap.extra.get("partition_spec"),
-            schema_json=snap.schema_json,
-            deletes=snap.extra.get("deletes"),
-            keep_lineage=True,
-            mapping=snap.extra.get("column_mapping"),
-        ).withColumnRenamed("_dv_file", "_file").drop("_dv_pos")
-        # ONE predicate scan yields both the matched file set (bounded:
-        # file count, not row count) and rows_matched — the previous
-        # distinct-collect + count pair paid two full scans per mutation
-        per_file = (
-            df.filter(predicate).groupBy("_file").count().collect()
+            self.snapshot(),
+            touched=lambda df: df.filter(predicate),
+            survivors=lambda df: df.filter(
+                f"NOT coalesce(({predicate}), false)"
+            ),
+            operation="rewrite",
+            committed_at=committed_at,
         )
-        matched_files = {r["_file"] for r in per_file}
-        rows_matched = sum(r["count"] for r in per_file)
-        # input_file_name() yields a URI (file://...); manifests hold
-        # root-relative paths whose data/<uuid>/part-*.parquet tail is
-        # unique per file — suffix match avoids scheme/normalization drift
+
+    def _copy_on_write(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        touched,
+        survivors,
+        operation: str,
+        committed_at: str,
+        added: DataFrame | None = None,
+        extra: dict | None = None,
+    ) -> dict:
+        """The one copy-on-write rewrite of ``snap``. ``touched(frame)``
+        keeps the rows whose files must be rewritten and
+        ``survivors(frame)`` the rows a rewritten file keeps. Files
+        holding no touched row are carried into the new manifest by
+        reference; the others are re-staged with their survivors only.
+        ``added`` rows (a merge's source) are staged into the same
+        commit. Everything staged re-records the snapshot's stats columns
+        (the skipping index survives row-level mutation exactly as it
+        survives compaction) and is validated against its CHECK
+        constraints (a violation unlinks the staged files, so the table
+        is untouched). With no touched file and nothing ``added``,
+        nothing is committed.
+
+        File identity is the scan-anchored ``_dv_file`` lineage column
+        (``input_file_name()`` returns '' once a tombstone join sits
+        between scan and projection), and ONE grouped scan yields both
+        the touched file set (bounded: file count, not row count) and
+        ``rows_matched``. Returns ``{version, files_rewritten,
+        files_kept, rows_matched}``, plus ``files_added`` with
+        ``added``."""
+        from pyspark.sql.types import StructType
+
+        table = self._scan(spark, snap, lineage=True)
+        per_file = (
+            touched(table).groupBy("_dv_file").count().collect()
+            if snap.files
+            else []
+        )
+        # _dv_file is a URI (file://...); manifests hold root-relative
+        # paths whose data/<uuid>/part-*.parquet tail is unique per file —
+        # suffix match avoids scheme/normalization drift
+        matched = [r["_dv_file"] for r in per_file]
         kept, hit = [], []
         for f in snap.files:
-            is_hit = any(m.endswith(f["path"]) for m in matched_files)
+            is_hit = any(m.endswith(f["path"]) for m in matched)
             (hit if is_hit else kept).append(f)
-        if not hit:
+        if not hit and added is None:
             return {
                 "version": snap.version,
                 "files_rewritten": 0,
                 "files_kept": len(kept),
                 "rows_matched": 0,
             }
+        fields = [
+            f
+            for f in table.schema.fields
+            if f.name not in ("_dv_file", "_dv_pos")
+        ]
         spec = snap.extra.get("partition_spec")
-        # mergeSchema inside _read_entries, like read(): on a
-        # schema-evolved table a plain multi-path read resolves to ONE
-        # file's footer (path-sort order, not argument order) and can
-        # silently drop evolved columns from the rewritten rows;
-        # partitioned tables also need their partition columns back so
-        # the predicate/transform may reference them
-        affected = self._read_entries(
-            spark,
-            hit,
-            spec,
-            deletes=snap.extra.get("deletes"),
-            mapping=snap.extra.get("column_mapping"),
-        )
-        survivors = affected.filter(f"NOT ({predicate})")
-        # the skipping index survives row-level mutation exactly as it
-        # survives compaction: re-record whatever columns the snapshot
-        # already carries stats for
-        stats_cols = self._logical_stats_cols(snap)
-        new_files = self._stage_files(
-            survivors,
-            stats_cols=stats_cols,
-            partition_by=tuple(spec["cols"]) if spec else (),
-        )
-        # rewritten rows honor the table's CHECK constraints like every
-        # other path (write, merge); violation unlinks the staged files,
-        # so the table is untouched
-        if snap.constraints and new_files:
-            self._validate_staged(
-                spark, new_files, snap.constraints, spec=spec
-            )
-        from pyspark.sql.types import StructType as _St
+        part_cols = tuple(spec["cols"]) if spec else ()
+        stats_cols = set(self._logical_stats_cols(snap)) - set(part_cols)
 
-        table_schema = _St(
-            [f for f in df.schema.fields if f.name != "_file"]
+        def _stage(df: DataFrame) -> list[dict]:
+            return self._stage_files(
+                df,
+                stats_cols=tuple(c for c in df.columns if c in stats_cols),
+                partition_by=part_cols,
+            )
+
+        # mergeSchema inside _scan, like read(): a plain multi-path read
+        # resolves to ONE file's footer and can silently drop evolved
+        # columns from the rewritten rows
+        rewritten = (
+            _stage(survivors(self._scan(spark, snap, hit))) if hit else []
         )
+        new_files = _stage(added) if added is not None else []
+        if snap.constraints and rewritten + new_files:
+            self._validate_staged(
+                spark, rewritten + new_files, snap.constraints
+            )
+        names = {f.name for f in fields}
+        if added is not None:
+            fields += [f for f in added.schema.fields if f.name not in names]
         version = self._commit(
-            kept + new_files,
-            "rewrite",
+            kept + rewritten + new_files,
+            operation,
             committed_at,
-            schema_json=table_schema.json(),
-            extra={"deletes": snap.extra.get("deletes") or []},
             parent_version=snap.version,
+            schema_json=StructType(fields).json(),
+            extra=extra,
         )
-        return {
+        out = {
             "version": version,
             "files_rewritten": len(hit),
             "files_kept": len(kept),
-            "rows_matched": rows_matched,
+            "rows_matched": sum(r["count"] for r in per_file),
         }
+        if added is not None:
+            out["files_added"] = len(new_files)
+        return out
 
     def delete_where(
         self,
@@ -1667,14 +1619,7 @@ class VersionedTable:
         # existing tombstones are applied BEFORE matching, so deleting an
         # already-deleted row never duplicates its tombstone (idempotent
         # re-delete = empty match = no commit)
-        df = self._read_entries(
-            spark,
-            snap.files,
-            snap.extra.get("partition_spec"),
-            schema_json=snap.schema_json,
-            deletes=prior,
-            keep_lineage=True,
-        )
+        df = self._scan(spark, snap, lineage=True)
         matched = df.filter(predicate).select(
             F.col("_dv_file").alias("file_path"),
             F.col("_dv_pos").alias("row_index"),
@@ -1815,21 +1760,20 @@ class VersionedTable:
         spark: SparkSession,
         source: DataFrame,
         key_cols: list[str],
-        when_matched: str = "replace",
         committed_at: str = "1970-01-01T00:00:00Z",
         _extra_match_keys: DataFrame | None = None,
         commit_extra: dict | None = None,
     ) -> dict:
-        """Keyed MERGE into the table — the Delta ``MERGE INTO`` execution
-        model for tables too big to rewrite per sync:
+        """Keyed MERGE (upsert) into the table — the Delta ``MERGE INTO``
+        execution model for tables too big to rewrite per sync, run
+        through ``_copy_on_write``:
 
         1. find the data files CONTAINING rows whose key appears in
-           ``source`` (one distributed semi-join over
-           ``input_file_name()``; driver state is file names only);
+           ``source`` (one distributed semi-join over the scan's file
+           lineage; driver state is file names only);
         2. rewrite ONLY those files with the matched keys' old rows
            removed (LEFT ANTI on the keys);
-        3. ``when_matched="replace"`` (upsert) stages all ``source`` rows
-           as new files; ``"delete"`` stages nothing;
+        3. stage all ``source`` rows as new files;
         4. publish untouched + rewritten + new files as ONE snapshot.
 
         Cost tracks the matched keys' file footprint, not table size —
@@ -1837,137 +1781,45 @@ class VersionedTable:
         shrinks that footprint exactly as it does for ``rewrite_where``.
         Rows in untouched files are never read or rewritten.
 
-        ``replace`` upserts whole rows (the ``source`` row becomes the
-        row for its key); multiset caveat: ALL existing rows with a
-        matched key are removed, then ``source``'s rows (as given,
-        duplicates included) are inserted.
+        The ``source`` row becomes the row for its key; multiset caveat:
+        ALL existing rows with a matched key are removed, then
+        ``source``'s rows (as given, duplicates included) are inserted.
+        Keys match NULL-safely: a plain equi-join never matches NULL
+        keys, so replaying a delete/update of a NULL-keyed row would
+        silently leave the stale row in place (operators.scd2 treats
+        NULL business keys as first-class the same way). Returns
+        ``{version, files_rewritten, files_kept, rows_matched,
+        files_added}``.
         """
-        if when_matched not in ("replace", "delete"):
-            raise ValueError(
-                f"when_matched must be 'replace' or 'delete', got "
-                f"{when_matched!r}"
-            )
+        from functools import reduce
+
         from pyspark.sql import functions as F
 
-        snap = self.snapshot()
-        spec = snap.extra.get("partition_spec")
-        part_cols = tuple(spec["cols"]) if spec else ()
         keys = source.select(*key_cols)
         if _extra_match_keys is not None:
             # apply_cdc: delete-only keys must also be cleared
             keys = keys.union(_extra_match_keys.select(*key_cols))
-        keys = keys.distinct()
-        if not snap.files:
-            new_files = (
-                self._stage_files(source, partition_by=part_cols)
-                if when_matched == "replace"
-                else []
-            )
-            if snap.constraints and new_files:
-                self._validate_staged(
-                    spark, new_files, snap.constraints, spec=spec
-                )
-            version = self._commit(
-                new_files, "merge", committed_at,
-                schema_json=source.schema.json(),
-                extra=commit_extra,
-                parent_version=snap.version,
-            )
-            return {
-                "version": version,
-                "files_rewritten": 0,
-                "files_kept": 0,
-                "files_added": len(new_files),
-            }
-        # NULL-safe key matching: a plain equi-join never matches NULL
-        # keys, so replaying a delete/update of a NULL-keyed row would
-        # silently leave the stale row in place (operators.scd2 treats
-        # NULL business keys as first-class the same way)
-        from functools import reduce as _reduce
-
-        kalias = keys.select(
+        kalias = keys.distinct().select(
             *[F.col(c).alias(f"_mk_{c}") for c in key_cols]
         )
 
-        def _key_cond(left: DataFrame) -> F.Column:
-            return _reduce(
+        def _join(df: DataFrame, how: str) -> DataFrame:
+            cond = reduce(
                 lambda a, b: a & b,
-                [
-                    left[c].eqNullSafe(kalias[f"_mk_{c}"])
-                    for c in key_cols
-                ],
+                [df[c].eqNullSafe(kalias[f"_mk_{c}"]) for c in key_cols],
             )
+            return df.join(kalias, on=cond, how=how)
 
-        tagged = self._read_entries(
+        return self._copy_on_write(
             spark,
-            snap.files,
-            spec,
-            schema_json=snap.schema_json,
-            deletes=snap.extra.get("deletes"),
-            keep_lineage=True,
-            mapping=snap.extra.get("column_mapping"),
-        ).withColumnRenamed("_dv_file", "_file").drop("_dv_pos")
-        matched_files = {
-            r["_file"]
-            for r in tagged.join(kalias, on=_key_cond(tagged), how="left_semi")
-            .select("_file")
-            .distinct()
-            .collect()  # bounded: file count, not row count
-        }
-        kept, hit = [], []
-        for f in snap.files:
-            is_hit = any(m.endswith(f["path"]) for m in matched_files)
-            (hit if is_hit else kept).append(f)
-        rewritten: list[dict] = []
-        if hit:
-            affected = self._read_entries(
-                spark,
-                hit,
-                spec,
-                deletes=snap.extra.get("deletes"),
-                mapping=snap.extra.get("column_mapping"),
-            )
-            survivors = affected.join(
-                kalias, on=_key_cond(affected), how="left_anti"
-            )
-            rewritten = self._stage_files(survivors, partition_by=part_cols)
-        new_files = (
-            self._stage_files(source, partition_by=part_cols)
-            if when_matched == "replace"
-            else []
-        )
-        # merge-inserted rows honor the table's CHECK constraints too
-        # (survivor rows were already in the table; not re-validated)
-        if snap.constraints and new_files:
-            try:
-                self._validate_staged(
-                    spark, new_files, snap.constraints, spec=spec
-                )
-            except ConstraintViolation:
-                self._drop_staged(rewritten)  # roll back the staged merge
-                raise
-        from pyspark.sql.types import StructType as _St
-
-        pre_fields = [f for f in tagged.schema.fields if f.name != "_file"]
-        names = {f.name for f in pre_fields}
-        merged_schema = _St(
-            pre_fields
-            + [f for f in source.schema.fields if f.name not in names]
-        )
-        version = self._commit(
-            kept + rewritten + new_files,
-            "merge",
-            committed_at,
-            schema_json=merged_schema.json(),
+            self.snapshot(),
+            touched=lambda df: _join(df, "left_semi"),
+            survivors=lambda df: _join(df, "left_anti"),
+            operation="merge",
+            committed_at=committed_at,
+            added=source,
             extra=commit_extra,
-            parent_version=snap.version,
         )
-        return {
-            "version": version,
-            "files_rewritten": len(hit),
-            "files_kept": len(kept),
-            "files_added": len(new_files),
-        }
 
     def apply_cdc(
         self,
@@ -2041,7 +1893,6 @@ class VersionedTable:
             spark,
             ups,
             key_cols,
-            when_matched="replace",
             committed_at=committed_at,
             _extra_match_keys=touched,
             commit_extra=commit_extra,

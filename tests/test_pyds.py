@@ -188,6 +188,24 @@ def test_writer_append_and_overwrite_roundtrip(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_writer_date_stats_prune_like_the_library(spark, tmp_path):
+    import datetime as dt
+
+    register(spark)
+    root = str(tmp_path / "t")
+    spark.sql(
+        "SELECT id, date_add(DATE'2024-01-01', CAST(id AS INT)) AS d "
+        "FROM range(0, 20, 1, 2)"
+    ).write.format("versioned_py").option("stats_cols", "d").mode(
+        "append"
+    ).save(root)
+    got, report = VersionedTable(root).read_pruned(
+        spark, "d", dt.date(2024, 1, 5)
+    )
+    assert [r["id"] for r in got.collect()] == [4]
+    assert report == {"files_total": 2, "files_read": 1, "files_skipped": 1}
+
+
 def test_writer_refuses_constrained_table(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="pyds_wc_")
     try:

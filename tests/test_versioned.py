@@ -295,33 +295,11 @@ def test_merge_rows_upsert_rewrites_only_matching_files(spark, tmp_path):
     assert rows[6] == 60 and len(rows) == 401
 
 
-def test_merge_rows_delete_mode(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(spark.range(0, 50), committed_at="t1")
-    stats = t.merge_rows(
-        spark,
-        spark.createDataFrame([(10,), (20,)], "id long"),
-        ["id"],
-        when_matched="delete",
-        committed_at="t2",
-    )
-    assert stats["files_added"] == 0
-    ids = {r["id"] for r in t.read(spark).collect()}
-    assert 10 not in ids and 20 not in ids and len(ids) == 48
-
-
 def test_merge_rows_into_empty_table(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "vt"))
     t.write(spark.range(0, 5).limit(0), committed_at="t1")  # empty commit
     t.merge_rows(spark, spark.range(0, 3), ["id"], committed_at="t2")
     assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2]
-
-
-def test_merge_rows_rejects_bad_mode(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    t.write(spark.range(3), committed_at="t1")
-    with pytest.raises(ValueError, match="when_matched"):
-        t.merge_rows(spark, spark.range(1), ["id"], when_matched="drop")
 
 
 def test_constraints_reject_and_stay_invisible(spark, tmp_path):
