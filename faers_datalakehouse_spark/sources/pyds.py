@@ -79,18 +79,6 @@ _ARROW_TYPES = {
 }
 
 
-def _snapshot(root: str, version) -> Snapshot:
-    """The snapshot ``.option("version")`` selects (default: latest)."""
-    vt = VersionedTable(root)
-    versions = vt.versions()
-    if not versions:
-        raise ValueError(f"{root}: not a versioned table (no manifests)")
-    v = int(version) if version is not None else versions[-1]
-    if v not in versions:
-        raise ValueError(f"{root}: no snapshot v{v}")
-    return vt.snapshot(v)
-
-
 def _refuse_unreadable(snap: Snapshot) -> None:
     """This source reads data files as they lie; snapshots whose rows
     need tombstones or a column mapping applied refuse loudly."""
@@ -147,7 +135,8 @@ class VersionedReader(DataSourceReader):
         self.schema_fields = [
             (f.name, f.dataType.typeName()) for f in schema.fields
         ]
-        snap = _snapshot(root, options.get("version"))
+        v = options.get("version")
+        snap = VersionedTable(root).snapshot(None if v is None else int(v))
         _refuse_unreadable(snap)
         self.entries = snap.files
         # (column, lo, hi) bounds from pushed filters; None is open
@@ -400,7 +389,8 @@ class VersionedDataSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("versioned_py requires .option/load path")
-        snap = _snapshot(root, self.options.get("version"))
+        v = self.options.get("version")
+        snap = VersionedTable(root).snapshot(None if v is None else int(v))
         if not snap.schema_json:
             raise ValueError(f"{root}: snapshot v{snap.version} has no schema")
         return StructType.fromJson(json.loads(snap.schema_json))

@@ -64,6 +64,18 @@ from pyspark.sql import DataFrame, SparkSession
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
+def _is_file(uri: str, path: str) -> bool:
+    """Whether ``uri`` — a data file as ``input_file_name()`` or
+    ``_metadata.file_path`` report it — is the manifest's root-relative
+    ``path``. The URI is percent-encoded (a partition value with a space
+    or a non-ASCII letter, or one Hive already escaped, is spelled
+    differently on disk), so it is decoded before the suffix match; the
+    ``data/<uuid>/.../part-*.parquet`` tail is unique per file."""
+    from urllib.parse import unquote
+
+    return unquote(uri).endswith(path)
+
+
 def _parse_partition_values(
     relpath: str, cols: list[str]
 ) -> dict[str, str | None]:
@@ -576,10 +588,15 @@ class VersionedTable:
                 }
                 by_suffix[r["_file"]] = stats
             for e in entries:
-                # a zero-row file has no census row: it gets NULL stats,
-                # as an all-NULL column does
+                # every row of a file is censused under that file's
+                # decoded path, so a file with no census row holds no
+                # rows: it gets NULL stats, as an all-NULL column does
                 e["stats"] = next(
-                    (v for f, v in by_suffix.items() if f.endswith(e["path"])),
+                    (
+                        v
+                        for f, v in by_suffix.items()
+                        if _is_file(f, e["path"])
+                    ),
                     {c: [None, None] for c in stats_cols},
                 )
         return entries
@@ -668,7 +685,7 @@ class VersionedTable:
                 by_file.setdefault(r["_file"], {})[str(r["word"])] = r["bits"]
             for e in entries:
                 for f, words in by_file.items():
-                    if f.endswith(e["path"]):
+                    if _is_file(f, e["path"]):
                         e.setdefault("bloom", {})[col] = {
                             "m": m,
                             "k": k,
@@ -1494,13 +1511,10 @@ class VersionedTable:
             if snap.files
             else []
         )
-        # _dv_file is a URI (file://...); manifests hold root-relative
-        # paths whose data/<uuid>/part-*.parquet tail is unique per file —
-        # suffix match avoids scheme/normalization drift
         matched = [r["_dv_file"] for r in per_file]
         kept, hit = [], []
         for f in snap.files:
-            is_hit = any(m.endswith(f["path"]) for m in matched)
+            is_hit = any(_is_file(m, f["path"]) for m in matched)
             (hit if is_hit else kept).append(f)
         if not hit and added is None:
             return {

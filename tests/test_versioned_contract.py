@@ -139,3 +139,31 @@ def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path, mode):
     )
     t.delete_where(spark, "v = 2", mode=mode)
     assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 3, 4, 5]
+
+
+def test_files_under_escaped_partition_values_keep_stats(spark, tmp_path):
+    """A file URI spells some partition directories differently from the
+    manifest (a space and a non-ASCII letter are percent-encoded, a
+    Hive-escaped ':' is escaped twice): those files still get their
+    stats, pruned reads still find their rows, and a copy-on-write
+    delete still finds their files."""
+    t = VersionedTable(str(tmp_path / "t"))
+    grps = F.array(*[F.lit(g) for g in ("a b", "a:b", "é")])
+    t.write(
+        spark.range(30, numPartitions=1).select(
+            F.element_at(grps, (F.col("id") / 10).cast("int") + 1).alias(
+                "grp"
+            ),
+            "id",
+        ),
+        stats_cols=("id",),
+        partition_by=("grp",),
+    )
+    assert all(f["stats"]["id"][0] is not None for f in t.snapshot().files)
+    for v in (5, 15, 25):
+        got, report = t.read_pruned(spark, "id", v)
+        assert report["files_read"] == 1
+        assert [r["id"] for r in got.collect()] == [v]
+    t.delete_where(spark, "id IN (5, 15, 25)")
+    left = sorted(r["id"] for r in t.read(spark).collect())
+    assert left == sorted(set(range(30)) - {5, 15, 25})
