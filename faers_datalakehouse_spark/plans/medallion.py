@@ -19,6 +19,12 @@ changing the session's default format.
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +60,7 @@ from ..functions.transforms import (
 from ..operators.scd2 import one_per_key, scd2_table_apply
 from ..sources.catalog import ensure_schemas, read_latest_partition
 from ..sources.ingest import add_ingestion_metadata, all_string_schema, read_csv_enforced
+from ..sources.maintenance import compact_table
 from .date_dim import build_date_dim
 
 BRONZE_COLUMNS: dict[str, list[str]] = {
@@ -88,13 +95,22 @@ def bronze_ingest(
     df.write.mode("append").partitionBy("_ingest_ts").saveAsTable(f"bronze.{name}")
 
 
-def _with_audit(df: DataFrame, processed_ts: str) -> DataFrame:
-    return df.withColumn("_processed_ts", F.lit(processed_ts).cast("timestamp"))
-
-
-def silver_demographics(spark: SparkSession, processed_ts: str) -> None:
-    raw = read_latest_partition(spark, "bronze.demographics")
+def silver_table(spark: SparkSession, name: str, processed_ts: str) -> None:
+    """EP2, the tail every silver build shares: the latest bronze
+    partition of ``name`` → its own transform (``SOURCES``) → the
+    reference's key renames → audit column → overwrite ``silver.<name>``."""
+    transform, _, _ = SOURCES[name]
     out = (
+        transform(read_latest_partition(spark, f"bronze.{name}"))
+        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
+        .drop("_source_file")
+        .withColumn("_processed_ts", F.lit(processed_ts).cast("timestamp"))
+    )
+    out.write.mode("overwrite").saveAsTable(f"silver.{name}")
+
+
+def _silver_demographics(raw: DataFrame) -> DataFrame:
+    return (
         raw.withColumn("event_date", standardize_date("event_dt"))
         .withColumn("report_date", standardize_date("rept_dt"))
         .withColumn("fda_date", standardize_date("fda_dt"))
@@ -103,21 +119,13 @@ def silver_demographics(spark: SparkSession, processed_ts: str) -> None:
         .withColumn("weight_kg", F.round(weight_in_kg("wt", "wt_cod"), 2))
         .withColumn("sex_desc", decode_ladder("sex", SEX_DECODE))
         .withColumn("reporter_region", country_region("reporter_country"))
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop(
-            "event_dt", "rept_dt", "fda_dt", "age", "age_cod", "wt", "wt_cod",
-            "_source_file",
-        )
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.demographics"
+        .drop("event_dt", "rept_dt", "fda_dt", "age", "age_cod", "wt", "wt_cod")
     )
 
 
-def silver_drug_details(spark: SparkSession, processed_ts: str) -> None:
-    raw = read_latest_partition(spark, "bronze.drug_details")
+def _silver_drug_details(raw: DataFrame) -> DataFrame:
     dosage = parse_dosage("dose_vbm")
-    out = (
+    return (
         raw.withColumn("drug_name", standardize_name("drugname"))
         .withColumn("role_desc", decode_ladder("role_cod", ROLE_DECODE))
         .withColumn("route_category", route_category("route"))
@@ -125,63 +133,41 @@ def silver_drug_details(spark: SparkSession, processed_ts: str) -> None:
         .withColumn("dose", dosage["dose"])
         .withColumn("dose_unit", dosage["dose_unit"])
         .withColumn("dose_frequency", dosage["dose_frequency"])
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("drugname", "drug_seq", "_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.drug_details"
+        .drop("drugname", "drug_seq")
     )
 
 
-def silver_reactions(spark: SparkSession, processed_ts: str) -> None:
-    raw = read_latest_partition(spark, "bronze.reactions")
-    out = (
+def _silver_reactions(raw: DataFrame) -> DataFrame:
+    return (
         raw.withColumn("reaction_pt", F.initcap(F.trim("pt")))
         .withColumn("reaction_category", reaction_category("pt"))
         .withColumn("reaction_severity", reaction_severity("pt"))
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("pt", "_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.reactions"
+        .drop("pt")
     )
 
 
-def silver_outcomes(spark: SparkSession, processed_ts: str) -> None:
-    raw = read_latest_partition(spark, "bronze.outcomes")
-    out = (
-        raw.withColumn("outcome_desc", outcome_description("outc_cod"))
-        .withColumn("outcome_severity", outcome_severity("outc_cod"))
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.outcomes"
-    )
+def _silver_outcomes(raw: DataFrame) -> DataFrame:
+    return raw.withColumn(
+        "outcome_desc", outcome_description("outc_cod")
+    ).withColumn("outcome_severity", outcome_severity("outc_cod"))
 
 
-def silver_indications(spark: SparkSession, processed_ts: str) -> None:
+def _silver_indications(raw: DataFrame) -> DataFrame:
     """Therapeutic-area + severity categorization
     (``src/silver/silver_indications.py:36-117``)."""
-    raw = read_latest_partition(spark, "bronze.indications")
-    out = (
+    return (
         raw.withColumn("indication_pt", F.initcap(F.trim("indi_pt")))
         .withColumn("therapeutic_area", therapeutic_area("indi_pt"))
         .withColumn("indication_severity", indication_severity("indi_pt"))
         .withColumn("indi_drug_seq_num", F.col("indi_drug_seq").cast("int"))
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("indi_pt", "indi_drug_seq", "_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.indications"
+        .drop("indi_pt", "indi_drug_seq")
     )
 
 
-def silver_reports(spark: SparkSession, processed_ts: str) -> None:
+def _silver_reports(raw: DataFrame) -> DataFrame:
     """Reporter source decode + reliability scoring
     (``src/silver/silver_reports.py:37-74``)."""
-    raw = read_latest_partition(spark, "bronze.reports")
-    out = (
+    return (
         raw.withColumn(
             "reporter_source_desc", decode_ladder("rpsr_cod", REPORT_SOURCE_DECODE)
         )
@@ -190,22 +176,16 @@ def silver_reports(spark: SparkSession, processed_ts: str) -> None:
             "reporter_reliability_score", reporter_reliability_score("rpsr_cod")
         )
         .withColumn("regulatory_priority", regulatory_priority("rpsr_cod"))
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.reports"
     )
 
 
-def silver_therapy_dates(spark: SparkSession, processed_ts: str) -> None:
+def _silver_therapy_dates(raw: DataFrame) -> DataFrame:
     """Date standardization + duration semantics
     (``src/silver/silver_therapy_dates.py:39-122``; uses the real FAERS
     duration codes — the reference's fact-layer "DAY" branch never fired)."""
-    raw = read_latest_partition(spark, "bronze.therapy_dates")
     start = standardize_date("start_dt")
     end = standardize_date("end_dt")
-    out = (
+    return (
         raw.withColumn("therapy_start_date", start)
         .withColumn("therapy_end_date", end)
         .withColumn("drug_seq_num", F.col("dsg_drug_seq").cast("int"))
@@ -227,11 +207,7 @@ def silver_therapy_dates(spark: SparkSession, processed_ts: str) -> None:
         .withColumn(
             "duration_category", duration_category("therapy_duration_days_observed")
         )
-        .withColumnsRenamed({"primaryid": "primary_id", "caseid": "case_id"})
-        .drop("start_dt", "end_dt", "dsg_drug_seq", "dur", "_source_file")
-    )
-    _with_audit(out, processed_ts).write.mode("overwrite").saveAsTable(
-        "silver.therapy_dates"
+        .drop("start_dt", "end_dt", "dsg_drug_seq", "dur")
     )
 
 
@@ -660,125 +636,131 @@ def gold_fact_adverse_events(spark: SparkSession) -> None:
     ).saveAsTable("gold.fact_adverse_events")
 
 
-SILVER_JOBS = {
-    "demographics": silver_demographics,
-    "drug_details": silver_drug_details,
-    "reactions": silver_reactions,
-    "outcomes": silver_outcomes,
-    "indications": silver_indications,
-    "reports": silver_reports,
-    "therapy_dates": silver_therapy_dates,
-}
-
-SCD2_DIM_JOBS = (
-    gold_dim_drug,
-    gold_dim_patient,
-    gold_dim_reaction,
-    gold_dim_outcome,
-    gold_dim_indication,
-    gold_dim_therapy,
-    gold_dim_report,
-)
-
-
-#: Declarative mirror of the reference's 16-task Jobs DAG
-#: (reference ``resources/jobs/faers_pipeline.yml:24-203``):
-#: 7 bronze ∥ → 7 silver (each on its own bronze) →
-#: 7 SCD2 dims (each on its own silver) ∥ dim_date → fact (on all silver + dim_date).
-_DIM_SILVER_DEP = {
-    "dim_drug": "drug_details",
-    "dim_patient": "demographics",
-    "dim_reaction": "reactions",
-    "dim_outcome": "outcomes",
-    "dim_indication": "indications",
-    "dim_therapy": "therapy_dates",
-    "dim_report": "reports",
+#: extract → (its silver transform, its SCD2 dim task, that dim's builder).
+SOURCES = {
+    "demographics": (_silver_demographics, "dim_patient", gold_dim_patient),
+    "drug_details": (_silver_drug_details, "dim_drug", gold_dim_drug),
+    "reactions": (_silver_reactions, "dim_reaction", gold_dim_reaction),
+    "outcomes": (_silver_outcomes, "dim_outcome", gold_dim_outcome),
+    "indications": (_silver_indications, "dim_indication", gold_dim_indication),
+    "reports": (_silver_reports, "dim_report", gold_dim_report),
+    "therapy_dates": (_silver_therapy_dates, "dim_therapy", gold_dim_therapy),
 }
 
 
-def faers_pipeline_config(
-    sources: dict[str, str], optimize: bool = False
-) -> list[dict]:
-    """Config rows for :func:`faers_datalakehouse_spark.plans.dag.dag_from_config`.
+@dataclass(frozen=True)
+class Task:
+    name: str
+    fn: Callable[[SparkSession], Any]
+    depends_on: tuple[str, ...] = ()
 
-    ``sources`` maps table name → raw CSV path (any subset of
-    ``BRONZE_COLUMNS``); stages downstream of a missing source are simply
-    not generated — including the fact, which reads all seven silver
-    tables and is therefore only scheduled on a full-source run. The
-    constant ``dim_date`` has no other reader, so it is scheduled with the
-    fact: a partial-source refresh never rebuilds it. At run time a failed
-    ingest skips only its own silver/dim branch (per-stage failure
-    isolation, reference parity).
 
-    ``optimize=True`` adds a post-write compaction+ANALYZE leaf task per
-    silver table (the reference runs ``OPTIMIZE`` after every silver/dim
-    write). Leaves, not gates: an optimize failure never blocks the fact.
-    """
-    cfg: list[dict] = []
-    for name, path in sources.items():
-        cfg.append(
-            {
-                "task": f"bronze_{name}",
-                "fn": "bronze_ingest",
-                "args": {"name": name, "src_path": path},
-                "depends_on": [],
-            }
+@dataclass
+class TaskResult:
+    status: str  # "ok" | "failed" | "skipped"
+    seconds: float = 0.0
+    error: str | None = None
+    blocked_by: str | None = None
+    exception: BaseException | None = None  # original, for chaining
+
+
+def pipeline_tasks(
+    sources: dict[str, str],
+    ingest_ts: str,
+    effective_date: str,
+    optimize: bool = False,
+) -> list[Task]:
+    """The reference's Jobs DAG (``resources/jobs/faers_pipeline.yml:24-203``)
+    as a task list in run order: bronze per extract; ``dim_date``; silver
+    per extract; then per extract its optional ``optimize_silver_<x>``
+    (compaction + ANALYZE, the reference's OPTIMIZE-after-write; a leaf,
+    so it never gates the fact) and its SCD2 dim; the fact last.
+
+    ``sources`` maps extract → CSV path, any subset of ``BRONZE_COLUMNS``.
+    The fact reads all seven silver tables and ``dim_date`` has no other
+    reader, so both are scheduled only on a full-source run: a
+    partial-source refresh builds just its own branches."""
+    unknown = sorted(set(sources) - set(BRONZE_COLUMNS))
+    if unknown:
+        raise ValueError(
+            f"unknown sources {unknown}; expected any of {list(BRONZE_COLUMNS)}"
         )
-        cfg.append(
-            {
-                "task": f"silver_{name}",
-                "fn": f"silver_{name}",
-                "depends_on": [f"bronze_{name}"],
-            }
+    full = set(sources) == set(BRONZE_COLUMNS)
+    tasks = [
+        Task(
+            f"bronze_{name}",
+            partial(bronze_ingest, name=name, src_path=path, ingest_ts=ingest_ts),
         )
+        for name, path in sources.items()
+    ]
+    if full:
+        tasks.append(Task("dim_date", gold_dim_date))
+    for name in sources:
+        tasks.append(
+            Task(
+                f"silver_{name}",
+                partial(silver_table, name=name, processed_ts=ingest_ts),
+                (f"bronze_{name}",),
+            )
+        )
+    for name in sources:
+        after_silver = (f"silver_{name}",)
         if optimize:
-            cfg.append(
-                {
-                    "task": f"optimize_silver_{name}",
-                    "fn": "optimize_table",
-                    "args": {"table": f"silver.{name}"},
-                    "depends_on": [f"silver_{name}"],
-                }
+            tasks.append(
+                Task(
+                    f"optimize_silver_{name}",
+                    partial(compact_table, table=f"silver.{name}"),
+                    after_silver,
+                )
             )
-    for dim, silver in _DIM_SILVER_DEP.items():
-        if silver in sources:
-            cfg.append(
-                {
-                    "task": dim,
-                    "fn": f"gold_{dim}",
-                    "depends_on": [f"silver_{silver}"],
-                }
-            )
-    # gold_fact_adverse_events scans all seven silver tables — schedule it
-    # (and dim_date, its only input besides silver) only when every source
-    # is present, so partial-source runs do just their own branches.
-    if set(sources) >= set(BRONZE_COLUMNS):
-        cfg.append({"task": "dim_date", "fn": "gold_dim_date", "depends_on": []})
-        cfg.append(
-            {
-                "task": "fact_adverse_events",
-                "fn": "gold_fact_adverse_events",
-                "depends_on": [f"silver_{n}" for n in sources] + ["dim_date"],
-            }
+        _, dim, build = SOURCES[name]
+        tasks.append(
+            Task(dim, partial(build, effective_date=effective_date), after_silver)
         )
-    return cfg
+    if full:
+        tasks.append(
+            Task(
+                "fact_adverse_events",
+                gold_fact_adverse_events,
+                (*[f"silver_{name}" for name in sources], "dim_date"),
+            )
+        )
+    return tasks
 
 
-def pipeline_registry() -> dict:
-    """Callable registry for the config rows above."""
-    from ..sources.catalog import optimize_table
+def run_tasks(spark: SparkSession, tasks: list[Task]) -> dict[str, TaskResult]:
+    """Run ``tasks`` in list order, isolating failures: a task runs only
+    if every dependency ended ``ok``, else it is ``skipped`` with the
+    first such dependency in ``blocked_by``; independent branches keep
+    running (the reference scheduler's semantics). Each dependency must
+    name an earlier task, checked before anything runs.
 
-    reg = {
-        "bronze_ingest": bronze_ingest,
-        "gold_dim_date": gold_dim_date,
-        "gold_fact_adverse_events": gold_fact_adverse_events,
-        "optimize_table": optimize_table,
-    }
-    for name, fn in SILVER_JOBS.items():
-        reg[f"silver_{name}"] = fn
-    for dim_job in SCD2_DIM_JOBS:
-        reg[dim_job.__name__] = dim_job
-    return reg
+    Tasks run one at a time on the driver: on a shared SparkSession the
+    parallelism lives inside each job, so concurrent tasks would add
+    scheduler contention, not throughput."""
+    seen: set[str] = set()
+    for t in tasks:
+        late = [d for d in t.depends_on if d not in seen]
+        if late:
+            raise ValueError(
+                f"task {t.name!r} depends on {late}, which do not run before it"
+            )
+        seen.add(t.name)
+    results: dict[str, TaskResult] = {}
+    for t in tasks:
+        bad = next((d for d in t.depends_on if results[d].status != "ok"), None)
+        if bad is not None:
+            results[t.name] = TaskResult("skipped", blocked_by=bad)
+            continue
+        t0 = time.time()
+        try:
+            t.fn(spark)
+            results[t.name] = TaskResult("ok", round(time.time() - t0, 3))
+        except Exception as e:  # noqa: BLE001 — isolation is the point
+            results[t.name] = TaskResult(
+                "failed", round(time.time() - t0, 3), error=repr(e), exception=e
+            )
+    return results
 
 
 def run_pipeline(
@@ -787,25 +769,14 @@ def run_pipeline(
     ingest_ts: str,
     effective_date: str,
     optimize: bool = False,
-) -> dict:
-    """One full incremental run: bronze append → silver rebuild → gold merge.
-
-    The task graph is declarative (``faers_pipeline_config``) and executed
-    by the DAG runner with per-stage failure isolation, mirroring the
-    reference's 16-task Jobs DAG instead of hard-coding the order. Raises
-    if any task failed (after every runnable branch has finished) and
-    returns the per-task results otherwise."""
-    from .dag import dag_from_config
-
+) -> dict[str, TaskResult]:
+    """One incremental run: bronze append → silver rebuild → gold merge
+    (``pipeline_tasks``), with per-task failure isolation. Raises if any
+    task failed, after every runnable branch has finished, and returns
+    the per-task results otherwise."""
+    tasks = pipeline_tasks(sources, ingest_ts, effective_date, optimize)
     ensure_schemas(spark)
-    dag = dag_from_config(
-        faers_pipeline_config(sources, optimize=optimize),
-        pipeline_registry(),
-        ingest_ts=ingest_ts,
-        processed_ts=ingest_ts,
-        effective_date=effective_date,
-    )
-    results = dag.run(spark)
+    results = run_tasks(spark, tasks)
     failed = {n: r for n, r in results.items() if r.status == "failed"}
     if failed:
         detail = "; ".join(f"{n}: {r.error}" for n, r in failed.items())

@@ -53,20 +53,3 @@ def read_latest_partition(
         return df
     return df.filter(F.col(partition_col) == F.lit(latest))
 
-
-def optimize_table(
-    spark: SparkSession,
-    table: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    analyze: bool = True,
-) -> dict:
-    """S9 parity: the reference runs ``OPTIMIZE t`` + ``ANALYZE TABLE`` after
-    every silver/dim/fact write (reference ``src/silver/silver_demographics.py:93``,
-    ``src/gold/dims/dim_drug.py:193-196``). On plain parquet this is
-    partition-granularity bin-packing compaction of fragmented partitions
-    (``sources.maintenance.compact_table``) + CBO statistics."""
-    from .maintenance import compact_table
-
-    return compact_table(
-        spark, table, target_file_bytes=target_file_bytes, analyze=analyze
-    )

@@ -61,7 +61,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from .versioned import Snapshot, VersionedTable, _json_safe, _stats_overlap
 
@@ -393,7 +393,14 @@ class VersionedDataSource(DataSource):
         snap = VersionedTable(root).snapshot(None if v is None else int(v))
         if not snap.schema_json:
             raise ValueError(f"{root}: snapshot v{snap.version} has no schema")
-        return StructType.fromJson(json.loads(snap.schema_json))
+        # nullable throughout, as read() is: a file older than an
+        # appended column holds NULLs for it
+        return StructType(
+            [
+                StructField(f.name, f.dataType, True, f.metadata)
+                for f in StructType.fromJson(json.loads(snap.schema_json))
+            ]
+        )
 
     def reader(self, schema: StructType) -> VersionedReader:
         return VersionedReader(

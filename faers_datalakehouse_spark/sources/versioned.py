@@ -466,8 +466,10 @@ class VersionedTable:
           first]}``): each logical name COALESCES its physical aliases
           across the mixed-name file generations (mergeSchema surfaces
           every physical name, null where a file lacks it).
-        - Column order is the recorded schema's; columns it does not
-          list (a narrower later append) follow.
+        - Columns are the recorded schema's, in its order, NULL where
+          no scanned file carries one (a pruned read of files older
+          than an appended column); columns it does not list (a
+          narrower later append) follow.
 
         ``lineage`` keeps the ``_dv_file``/``_dv_pos`` columns (mutation
         paths locate rows by them)."""
@@ -513,10 +515,16 @@ class VersionedTable:
                 *[c for c in ("_dv_file", "_dv_pos") if c in out.columns],
             )
         if snap.schema_json is not None:
-            order = [f.name for f in self._schema_fields(snap).fields]
-            ordered = [c for c in order if c in out.columns]
+            fields = self._schema_fields(snap).fields
+            names = {f.name for f in fields}
             out = out.select(
-                *ordered, *[c for c in out.columns if c not in ordered]
+                *[
+                    F.col(f.name)
+                    if f.name in out.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in fields
+                ],
+                *[c for c in out.columns if c not in names],
             )
         return out
 
@@ -541,10 +549,24 @@ class VersionedTable:
             df.write.partitionBy(*partition_by).parquet(str(stage))
         else:
             df.write.parquet(str(stage))
-        entries = [
-            {"path": str(p.relative_to(self.root)), "bytes": p.stat().st_size}
-            for p in sorted(stage.rglob("*.parquet"))
-        ]
+        import pyarrow.parquet as pq
+
+        # row counts from the footers (driver-side, no Spark job). Spark
+        # writes a file even for an empty first partition; an empty file
+        # is deleted, never committed (a stage of only empty files
+        # commits none, and the recorded schema keeps the columns)
+        rows = {
+            p: pq.read_metadata(str(p)).num_rows
+            for p in stage.rglob("*.parquet")
+        }
+        entries = []
+        for p in sorted(rows):
+            if not rows[p]:
+                p.unlink()
+                continue
+            entries.append(
+                {"path": str(p.relative_to(self.root)), "bytes": p.stat().st_size}
+            )
         if partition_by:
             ptypes = {
                 c: df.schema[c].dataType.simpleString()
@@ -559,7 +581,9 @@ class VersionedTable:
                 # specs, so each entry carries its own generation's types
                 e["partition_types"] = ptypes
         if bloom_cols and entries:
-            self._stage_blooms(df, stage, entries, bloom_cols)
+            self._stage_blooms(
+                df, stage, entries, bloom_cols, max(rows.values())
+            )
         if stats_cols and entries:
             # per-file min/max for the skipping index: ONE distributed
             # aggregation over the staged files keyed by input_file_name —
@@ -588,16 +612,10 @@ class VersionedTable:
                 }
                 by_suffix[r["_file"]] = stats
             for e in entries:
-                # every row of a file is censused under that file's
-                # decoded path, so a file with no census row holds no
-                # rows: it gets NULL stats, as an all-NULL column does
+                # every entry holds rows, so its decoded path matches a
+                # census row (NULL stats there: an all-NULL column)
                 e["stats"] = next(
-                    (
-                        v
-                        for f, v in by_suffix.items()
-                        if _is_file(f, e["path"])
-                    ),
-                    {c: [None, None] for c in stats_cols},
+                    v for f, v in by_suffix.items() if _is_file(f, e["path"])
                 )
         return entries
 
@@ -607,6 +625,7 @@ class VersionedTable:
         stage: Path,
         entries: list[dict],
         bloom_cols: tuple[str, ...],
+        max_rows: int,
     ) -> None:
         """Per-file bloom filter index (Delta bloom-filter-index analog):
         point-lookup file skipping for columns whose values are NOT
@@ -618,9 +637,9 @@ class VersionedTable:
         compute the same hash and only md5 is shared vocabulary.
 
         Sizing: one (m, k) per column for a 1% false-positive rate at
-        the largest file's row count (k capped at 4 — the probe here is
-        driver-side, but the build is codegen and the same huge-method
-        cliff applies). Words are stored
+        the largest file's row count, ``max_rows`` (k capped at 4 — the
+        probe here is driver-side, but the build is codegen and the same
+        huge-method cliff applies). Words are stored
         sparse ({word_index: bits}) in the manifest; at 10.5 bits/key
         this is ~KBs per file per column — production would move them to
         a sidecar, the manifest shape is the point here.
@@ -633,14 +652,7 @@ class VersionedTable:
         scan = spark.read.parquet(str(stage)).withColumn(
             "_file", F.input_file_name()
         )
-        counts = {
-            r["_file"]: r["n"]
-            for r in scan.groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        max_n = max(counts.values()) if counts else 1
-        m, k = sizing(max(max_n, 64), 0.01)
+        m, k = sizing(max(max_rows, 64), 0.01)
         for col in bloom_cols:
             pos = F.explode(
                 F.array(

@@ -81,6 +81,46 @@ Q2 = {
 }
 
 
+# every silver table's columns, in order: the shared silver tail keeps them
+SILVER_COLUMNS = {
+    "demographics": [
+        "primary_id", "case_id", "sex", "occp_cod", "reporter_country",
+        "_ingest_ts", "event_date", "report_date", "fda_date", "age_years",
+        "age_group", "weight_kg", "sex_desc", "reporter_region",
+        "_processed_ts",
+    ],
+    "drug_details": [
+        "primary_id", "case_id", "role_cod", "route", "dose_vbm", "_ingest_ts",
+        "drug_name", "role_desc", "route_category", "drug_seq_num", "dose",
+        "dose_unit", "dose_frequency", "_processed_ts",
+    ],
+    "reactions": [
+        "primary_id", "case_id", "drug_rec_act", "_ingest_ts", "reaction_pt",
+        "reaction_category", "reaction_severity", "_processed_ts",
+    ],
+    "outcomes": [
+        "primary_id", "case_id", "outc_cod", "_ingest_ts", "outcome_desc",
+        "outcome_severity", "_processed_ts",
+    ],
+    "indications": [
+        "primary_id", "case_id", "_ingest_ts", "indication_pt",
+        "therapeutic_area", "indication_severity", "indi_drug_seq_num",
+        "_processed_ts",
+    ],
+    "reports": [
+        "primary_id", "case_id", "rpsr_cod", "_ingest_ts",
+        "reporter_source_desc", "reporter_category",
+        "reporter_reliability_score", "regulatory_priority", "_processed_ts",
+    ],
+    "therapy_dates": [
+        "primary_id", "case_id", "dur_cod", "_ingest_ts", "therapy_start_date",
+        "therapy_end_date", "drug_seq_num", "duration_description",
+        "therapy_duration_days_observed", "reported_duration_days",
+        "therapy_status", "duration_category", "_processed_ts",
+    ],
+}
+
+
 @pytest.fixture(scope="module")
 def warehouse(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("medallion")
@@ -107,6 +147,8 @@ def test_bronze_partitioned_appends(warehouse):
 
 def test_silver_uses_latest_partition_only(warehouse):
     spark = warehouse
+    for name, columns in SILVER_COLUMNS.items():
+        assert spark.table(f"silver.{name}").columns == columns, name
     demo = spark.table("silver.demographics")
     assert demo.count() == 1  # only the q2 batch
     row = demo.collect()[0]
@@ -119,7 +161,7 @@ def test_silver_transform_semantics_on_q1(spark, tmp_path_factory):
     # Re-run silver over a fresh bronze containing only q1 to check decodes.
     from faers_datalakehouse_spark.plans.medallion import (
         bronze_ingest,
-        silver_demographics,
+        silver_table,
     )
 
     from faers_datalakehouse_spark.sources.catalog import ensure_schemas
@@ -130,7 +172,7 @@ def test_silver_transform_semantics_on_q1(spark, tmp_path_factory):
     ensure_schemas(spark)  # independent of the warehouse fixture's ordering
     spark.sql("DROP TABLE IF EXISTS bronze.demographics")
     bronze_ingest(spark, "demographics", str(p), "2024-04-01 00:00:00")
-    silver_demographics(spark, "2024-04-01 00:00:00")
+    silver_table(spark, "demographics", "2024-04-01 00:00:00")
     rows = {r["primary_id"]: r for r in spark.table("silver.demographics").collect()}
     assert rows["101"]["event_date"].isoformat() == "2024-01-15"
     assert rows["102"]["event_date"].isoformat() == "2024-02-01"  # yyyyMM
@@ -313,3 +355,20 @@ def test_cli_main_runs_pipeline(spark, tmp_path):
     assert rc == 0
     assert spark.table("gold.fact_adverse_events").count() == 6
     assert main([str(tmp_path / "nope")]) == 2  # missing sources → error code
+
+
+def test_failed_extract_skips_only_its_branch(spark, tmp_path):
+    """A refresh whose ``reports`` CSV is missing still finishes the
+    ``drug_details`` branch through ``dim_drug``, skips the reports
+    branch, and then raises, chained from the ingest failure."""
+    for t in ("bronze.drug_details", "silver.drug_details", "gold.dim_drug"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drugs = tmp_path / "drug_details.csv"
+    drugs.write_text(Q2["drug_details"])
+    sources = {"drug_details": str(drugs), "reports": str(tmp_path / "nope.csv")}
+    with pytest.raises(RuntimeError, match="bronze_reports") as err:
+        run_pipeline(spark, sources, "2024-10-01 00:00:00", "2024-10-01")
+    assert "skipped downstream: ['silver_reports', 'dim_report']" in str(err.value)
+    assert err.value.__cause__ is not None
+    dim = spark.table("gold.dim_drug").filter(F.col("is_current"))
+    assert sorted(r["drug_name"] for r in dim.collect()) == ["ASPIRIN", "METFORMIN"]

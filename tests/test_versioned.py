@@ -436,8 +436,7 @@ def test_stats_handle_decimal_and_date_columns(spark, tmp_path):
             (Decimal("99.99"), dt.date(2024, 3, 1)),
         ],
         "price decimal(10,2), day date",
-    ).coalesce(1)  # one file: empty part-files carry null stats and are
-    # (correctly) conservatively read, which isn't what this test probes
+    ).coalesce(1)  # one file, so one file's stats are probed
     # used to crash json.dumps on Decimal min/max
     t.write(df, committed_at="t1", stats_cols=("price", "day"))
 

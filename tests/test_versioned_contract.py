@@ -2,10 +2,11 @@
 bloom-pruned and partition-pruned reads, the change feed and the
 ``versioned_py`` source return ``read()``'s columns in ``read()``'s order
 and ``read()``'s rows under the same filter. Checked on a partitioned
-table with stats and a bloom index, and on a variant whose data column
-was renamed and whose rows were deleted merge-on-read; plus the
-mutation paths that must keep that table state (stats on merged files,
-MoR deletes through a renamed column, NULL-predicate rows)."""
+table with stats and a bloom index, on a variant whose data column was
+renamed and whose rows were deleted merge-on-read, and on one whose
+text column arrived with a later append; plus the mutation paths that
+must keep that table state (stats on merged files, none of them empty, MoR
+deletes through a renamed column, NULL-predicate rows)."""
 
 from __future__ import annotations
 
@@ -29,16 +30,20 @@ def _rows(spark, lo: int, hi: int, txt: str = "txt"):
     )
 
 
-@pytest.fixture(scope="module", params=["plain", "renamed"])
+@pytest.fixture(scope="module", params=["plain", "renamed", "evolved"])
 def table(request, spark, tmp_path_factory):
     """``(table, text column, version before the last append)``. Plain:
     v1 write ids 0-19, v2 append ids 20-29. Renamed: v1 write, v2
     rename ``txt`` to ``note``, v3 MoR-delete id 3 through the renamed
-    column, v4 append ids 20-29 under the new name."""
+    column, v4 append ids 20-29 under the new name. Evolved: v1 write
+    ids 0-19 without ``txt``, v2 append ids 20-29 with it."""
     root = tmp_path_factory.mktemp(request.param)
     t = VersionedTable(str(root / "t"))
     layout = dict(stats_cols=("id", "d"), partition_by=("grp",))
-    t.write(_rows(spark, 0, 20), bloom_cols=("txt",), **layout)
+    if request.param == "evolved":
+        t.write(_rows(spark, 0, 20).drop("txt"), **layout)
+    else:
+        t.write(_rows(spark, 0, 20), bloom_cols=("txt",), **layout)
     txt = "txt"
     if request.param == "renamed":
         txt = "note"
@@ -104,17 +109,21 @@ def test_versioned_py_matches_read_or_refuses(spark, table):
 
 
 def test_merge_records_stats_on_every_file_it_writes(spark, tmp_path):
+    import pyarrow.parquet as pq
+
     t = VersionedTable(str(tmp_path / "t"))
     t.write(spark.range(40, numPartitions=4), stats_cols=("id",))
-    t.merge_rows(spark, spark.createDataFrame([(5,)], "id long"), ["id"])
+    res = t.merge_rows(spark, spark.createDataFrame([(5,)], "id long"), ["id"])
+    # the one-row source spans several tasks, and Spark writes a file for
+    # the empty first one: that file is not committed
+    assert res["files_added"] == 1
     files = t.snapshot().files
+    assert all(pq.read_metadata(t.root / f["path"]).num_rows for f in files)
     assert all("id" in f.get("stats", {}) for f in files)
     got, report = t.read_pruned(spark, "id", 5)
-    # only files whose recorded range holds 5 are read (NULL stats: a
-    # file with no rows)
+    # only files whose recorded range holds 5 are read
     assert report["files_read"] == sum(
-        lo is not None and lo <= 5 <= hi
-        for lo, hi in (f["stats"]["id"] for f in files)
+        lo <= 5 <= hi for lo, hi in (f["stats"]["id"] for f in files)
     )
     assert report["files_skipped"] >= 3
     assert [r["id"] for r in got.collect()] == [5]
